@@ -43,13 +43,21 @@ import org.apache.spark.sql.SparkSession
   *    SPARK_GRAFT_BENCH_ISOLATED (comma-separated; empty disables).
   */
 object Bench {
+  /** `SPARK_GRAFT_CPUS` as a positive core count (`default` when unset);
+    * anything else fails fast, before a session starts. */
+  def cpusFromEnv(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default) { s =>
+      s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer core count, got '$s'"))
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = cpusFromEnv(32)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))

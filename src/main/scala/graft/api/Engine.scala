@@ -54,12 +54,8 @@ object ModelSettings {
     case JString(s)  => DateMath.parseDelta(s).toLong
     case _           => default
   }
-  private def num(j: JValue, default: => Double): Double = j match {
-    case JInt(x)    => x.toDouble
-    case JLong(x)   => x.toDouble
-    case JDouble(x) => x
-    case _          => default
-  }
+  private def num(j: JValue, default: => Double): Double =
+    graft.io.Json.num(j).getOrElse(default)
   private def str(j: JValue): Option[String] = j match {
     case JString(s) => Some(s); case _ => None
   }
@@ -328,12 +324,7 @@ class Engine(
       val had = settings.remove(n).isDefined
       scheduled.remove(n)
       modelHooks.remove(n)
-      val dir = java.nio.file.Paths.get(storageRoot, n)
-      if (java.nio.file.Files.exists(dir)) {
-        java.nio.file.Files.walk(dir).sorted(
-          java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      graft.io.Durable.deleteTree(java.nio.file.Paths.get(storageRoot, n))
       had
     }
 
@@ -382,26 +373,17 @@ class Engine(
   //    GET /buckets, POST /buckets, DELETE /buckets/<names>). Settings
   //    persist one JSON file per bucket and reload at construction, like
   //    the reference's config-file buckets.
-  private val bucketDir = java.nio.file.Paths.get(storageRoot, "buckets")
-  locally {
-    if (java.nio.file.Files.isDirectory(bucketDir)) {
-      val listing = java.nio.file.Files.list(bucketDir)
-      try listing.toArray.map(_.toString)
-        .filter(_.endsWith(".json")).foreach { p =>
-          buckets.register(graft.sources.BucketSettings.fromJson(
-            java.nio.file.Files.readString(java.nio.file.Paths.get(p))))
-        }
-      finally listing.close()
-    }
-  }
+  private val bucketDir = new graft.io.Durable.JsonDir(
+    java.nio.file.Paths.get(storageRoot, "buckets"))
+  bucketDir.readAll().foreach(j =>
+    buckets.register(graft.sources.BucketSettings.fromJson(j)))
 
   /** `POST /buckets`: settings-JSON bucket, registered + persisted. */
   def createBucket(json: String): graft.sources.Bucket = {
     val b = graft.sources.BucketSettings.fromJson(json)
     Schemas.requireKey(b.name, "bucket name")
     buckets.register(b)
-    java.nio.file.Files.createDirectories(bucketDir)
-    java.nio.file.Files.writeString(bucketDir.resolve(s"${b.name}.json"), json)
+    bucketDir.put(b.name, json)
     b
   }
 
@@ -411,7 +393,7 @@ class Engine(
   /** `DELETE /buckets/<names>` (semicolon-separated). */
   def deleteBucket(names: String): Int =
     names.split(";").count { n =>
-      java.nio.file.Files.deleteIfExists(bucketDir.resolve(s"$n.json"))
+      bucketDir.remove(n)
       buckets.remove(n)
     }
 }

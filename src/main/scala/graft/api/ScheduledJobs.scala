@@ -69,11 +69,7 @@ object ScheduledJob {
     val unit = s(j \ "every" \ "unit", "every.unit").toLowerCase
     require(intervalUnits.contains(unit) || weekdays.contains(unit),
       s"unknown schedule unit: $unit")
-    val count = (j \ "every" \ "count") match {
-      case JInt(x) => x.toInt
-      case JLong(x) => x.toInt
-      case _ => 1
-    }
+    val count = graft.io.Json.long(j \ "every" \ "count").fold(1)(_.toInt)
     require(count >= 1, "every.count must be >= 1")
     ScheduledJob(
       name = s(j \ "name", "name"),
@@ -157,23 +153,15 @@ object ScheduledJob {
 
 class ScheduledJobs(engine: Engine, storageRoot: String) {
 
-  private val dir = java.nio.file.Paths.get(storageRoot, "scheduled_jobs")
+  private val dir = new graft.io.Durable.JsonDir(
+    java.nio.file.Paths.get(storageRoot, "scheduled_jobs"))
   private val jobs =
     scala.collection.concurrent.TrieMap.empty[String, ScheduledJob]
   private val lastRun = scala.collection.concurrent.TrieMap.empty[String, Long]
   private val registered = scala.collection.concurrent.TrieMap.empty[String, Long]
 
   // boot restore (config.py:35-37 analog)
-  if (java.nio.file.Files.isDirectory(dir)) {
-    val listing = java.nio.file.Files.list(dir)
-    try listing.toArray.map(_.toString)
-      .filter(_.endsWith(".json")).foreach { p =>
-        val j = ScheduledJob.parse(java.nio.file.Files.readString(
-          java.nio.file.Paths.get(p)))
-        jobs.put(j.name, j)
-      }
-    finally listing.close()
-  }
+  dir.readAll().map(ScheduledJob.parse).foreach(j => jobs.put(j.name, j))
 
   /** POST /scheduled_jobs */
   def create(json: String, nowEpoch: Long = System.currentTimeMillis / 1000)
@@ -182,8 +170,7 @@ class ScheduledJobs(engine: Engine, storageRoot: String) {
     Schemas.requireKey(job.name, "scheduled job name")
     jobs.put(job.name, job)
     registered.put(job.name, nowEpoch)
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.writeString(dir.resolve(s"${job.name}.json"), job.toJson)
+    dir.put(job.name, job.toJson)
     job
   }
 
@@ -198,7 +185,7 @@ class ScheduledJobs(engine: Engine, storageRoot: String) {
   def delete(names: String): Int =
     names.split(";").count { n =>
       val had = jobs.remove(n).isDefined
-      java.nio.file.Files.deleteIfExists(dir.resolve(s"$n.json"))
+      dir.remove(n)
       lastRun.remove(n); registered.remove(n)
       had
     }

@@ -283,68 +283,48 @@ object Publish {
   }
 }
 
-/** Versioned model storage — /root/reference/loudml/filestorage.py:57-236:
-  * numbered checkpoints, `state.json`-style active pointer, `_restore`.
-  * Profiles persist as parquet; settings as JSON.
+/** Versioned model storage — loudml/filestorage.py:57-236: numbered
+  * checkpoints `<root>/<model>/ckpt-N` behind an `ACTIVE` pointer, and
+  * `_restore`. Profiles persist as parquet, settings as JSON. The
+  * version protocol is [[Durable.Versioned]]: concurrent saves of one
+  * model get distinct versions, and a load never sees a half-written
+  * checkpoint or pointer. Old versions are kept for [[restore]].
   */
 object ModelStore {
-  import java.nio.file.{Files, Paths, Path}
+  import java.nio.file.{Files, Paths}
 
-  private def modelDir(root: String, model: String): Path =
-    Paths.get(root, model)
+  private def store(root: String, model: String) =
+    new Durable.Versioned(Paths.get(root, model), "ckpt-")
 
   /** Save a new checkpoint; returns its version and makes it active. */
   def save(profile: DataFrame, settingsJson: String, root: String,
-      model: String): Int = {
-    val dir = modelDir(root, model)
-    Files.createDirectories(dir)
-    val version = listVersions(root, model).lastOption.getOrElse(0) + 1
-    val ckpt = dir.resolve(s"ckpt-$version")
-    profile.write.mode("overwrite").parquet(ckpt.resolve("profile.parquet").toString)
-    Files.writeString(ckpt.resolve("settings.json"), settingsJson)
-    Files.writeString(dir.resolve("ACTIVE"), version.toString)
-    version
-  }
-
-  def listVersions(root: String, model: String): Seq[Int] = {
-    val dir = modelDir(root, model)
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asInstanceOf[java.util.Iterator[Path]]
-        .asScala
-        .map(_.getFileName.toString)
-        .collect { case n if n.startsWith("ckpt-") => n.stripPrefix("ckpt-").toInt }
-        .toSeq.sorted
-      finally s.close()
+      model: String): Int =
+    store(root, model).commit { ckpt =>
+      profile.write.mode("overwrite")
+        .parquet(ckpt.resolve("profile.parquet").toString)
+      Durable.write(ckpt.resolve("settings.json"), settingsJson)
     }
-  }
 
-  def activeVersion(root: String, model: String): Option[Int] = {
-    val f = modelDir(root, model).resolve("ACTIVE")
-    if (Files.exists(f)) Some(Files.readString(f).trim.toInt) else None
-  }
+  def listVersions(root: String, model: String): Seq[Int] =
+    store(root, model).versions
+
+  def activeVersion(root: String, model: String): Option[Int] =
+    store(root, model).active
 
   /** `_restore`: point ACTIVE at an existing checkpoint
-    * (/root/reference/loudml/server.py:890-904). */
+    * (loudml/server.py:890-904). */
   def restore(root: String, model: String, version: Int): Unit = {
-    require(listVersions(root, model).contains(version), s"no ckpt-$version")
-    Files.writeString(modelDir(root, model).resolve("ACTIVE"), version.toString)
+    val s = store(root, model)
+    require(s.versions.contains(version), s"no ckpt-$version")
+    s.activate(version)
   }
 
   def load(spark: SparkSession, root: String, model: String,
       version: Option[Int] = None): (DataFrame, String) = {
-    val v = version.orElse(activeVersion(root, model))
-      .getOrElse(throw new IllegalStateException(s"no active checkpoint for $model"))
-    val ckpt = modelDir(root, model).resolve(s"ckpt-$v")
+    val s = store(root, model)
+    val ckpt = s.path(version.orElse(s.active).getOrElse(
+      throw new IllegalStateException(s"no active checkpoint for $model")))
     (spark.read.parquet(ckpt.resolve("profile.parquet").toString),
       Files.readString(ckpt.resolve("settings.json")))
-  }
-
-  private implicit class IterScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
   }
 }

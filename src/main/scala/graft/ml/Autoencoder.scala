@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Stats
+import graft.io.Json
 
 /** Low-rank tied-weights autoencoder — the fast linear-subspace
   * restatement of the reference's Donut VAE
@@ -79,29 +80,21 @@ object AutoencoderReconstructor extends ModelType {
         s""""mcmc_iters":$mcmcIters,"sigma_floor":$sigmaFloor}"""
   }
 
-  private def jNum(j: JValue): Option[Double] = j match {
-    case JInt(x)     => Some(x.toDouble)
-    case JLong(x)    => Some(x.toDouble)
-    case JDouble(x)  => Some(x)
-    case JDecimal(x) => Some(x.toDouble)
-    case _           => None
-  }
-
   def parseParams(json: String): Params = {
     val j = JsonMethods.parse(json)
     Params(
-      bucketInterval = jNum(j \ "bucket_interval").getOrElse(
+      bucketInterval = Json.num(j \ "bucket_interval").getOrElse(
         throw new IllegalArgumentException(
           "autoencoder settings need bucket_interval")).toLong,
-      period = jNum(j \ "period").getOrElse(86400.0).toLong,
-      span = jNum(j \ "span").getOrElse(24.0).toInt,
-      hidden = jNum(j \ "hidden").getOrElse(8.0).toInt,
-      epochs = jNum(j \ "epochs").getOrElse(100.0).toInt,
-      batch = jNum(j \ "batch").getOrElse(64.0).toInt,
-      lr = jNum(j \ "lr").getOrElse(0.01),
-      seed = jNum(j \ "seed").getOrElse(42.0).toLong,
-      mcmcIters = jNum(j \ "mcmc_iters").getOrElse(10.0).toInt,
-      sigmaFloor = jNum(j \ "sigma_floor").getOrElse(1e-9))
+      period = Json.num(j \ "period").getOrElse(86400.0).toLong,
+      span = Json.num(j \ "span").getOrElse(24.0).toInt,
+      hidden = Json.num(j \ "hidden").getOrElse(8.0).toInt,
+      epochs = Json.num(j \ "epochs").getOrElse(100.0).toInt,
+      batch = Json.num(j \ "batch").getOrElse(64.0).toInt,
+      lr = Json.num(j \ "lr").getOrElse(0.01),
+      seed = Json.num(j \ "seed").getOrElse(42.0).toLong,
+      mcmcIters = Json.num(j \ "mcmc_iters").getOrElse(10.0).toInt,
+      sigmaFloor = Json.num(j \ "sigma_floor").getOrElse(1e-9))
   }
 
   /** x̂ = WᵀWx — allocation-light tied forward pass. */
@@ -331,15 +324,15 @@ object AutoencoderReconstructor extends ModelType {
     val p = parseParams(settingsJson)
     val j = JsonMethods.parse(settingsJson)
     val flat = (j \ "weights") match {
-      case JArray(xs) => xs.flatMap(jNum).toArray
+      case JArray(xs) => xs.flatMap(Json.num).toArray
       case _ => throw new IllegalArgumentException("stored model has no weights")
     }
     require(flat.length == p.hidden * p.span, "weight shape mismatch")
     val w = Array.tabulate(p.hidden, p.span)((i, jj) => flat(i * p.span + jj))
-    val sigma = jNum(j \ "sigma").getOrElse(
+    val sigma = Json.num(j \ "sigma").getOrElse(
       throw new IllegalArgumentException("stored model has no sigma"))
-    val mu = jNum(j \ "mu").getOrElse(0.0)
-    val sd = jNum(j \ "sd").getOrElse(1.0)
+    val mu = Json.num(j \ "mu").getOrElse(0.0)
+    val sd = Json.num(j \ "sd").getOrElse(1.0)
     val prof = profile.orderBy("slot").collect()
     val slotMean = prof.map(_.getDouble(1))
     val slotSig = prof.map(_.getDouble(2))

@@ -25,13 +25,8 @@ object DonutOracle {
   private lazy val (flat, muL, sdL, sigma, p) = {
     import org.json4s._
     val j = org.json4s.jackson.JsonMethods.parse(PinnedDonut.settingsJson)
-    def num(v: JValue): Double = v match {
-      case JInt(x) => x.toDouble
-      case JLong(x) => x.toDouble
-      case JDouble(x) => x
-      case JDecimal(x) => x.toDouble
-      case _ => throw new IllegalArgumentException("bad pinned number")
-    }
+    def num(v: JValue): Double = graft.io.Json.num(v).getOrElse(
+      throw new IllegalArgumentException("bad pinned number"))
     val ws = (j \ "weights") match {
       case JArray(a) => a.map(num).toArray
       case _ => throw new IllegalArgumentException("no pinned weights")

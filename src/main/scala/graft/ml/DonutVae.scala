@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Stats
+import graft.io.Json
 
 /** True variational autoencoder — the faithful restatement of the
   * reference's Donut model (/root/reference/loudml/donut.py:102-163,
@@ -85,35 +86,27 @@ object DonutVae extends ModelType {
         s""""l2":$l2,"clip_norm":$clipNorm,"sigma_floor":$sigmaFloor}"""
   }
 
-  private def jNum(j: JValue): Option[Double] = j match {
-    case JInt(x)     => Some(x.toDouble)
-    case JLong(x)    => Some(x.toDouble)
-    case JDouble(x)  => Some(x)
-    case JDecimal(x) => Some(x.toDouble)
-    case _           => None
-  }
-
   def parseParams(json: String): Params = {
     val j = JsonMethods.parse(json)
     Params(
-      bucketInterval = jNum(j \ "bucket_interval").getOrElse(
+      bucketInterval = Json.num(j \ "bucket_interval").getOrElse(
         throw new IllegalArgumentException(
           "donut_vae settings need bucket_interval")).toLong,
-      period = jNum(j \ "period").getOrElse(86400.0).toLong,
-      span = jNum(j \ "span").getOrElse(24.0).toInt,
-      intermediate = jNum(j \ "intermediate").getOrElse(24.0).toInt,
-      latent = jNum(j \ "latent").getOrElse(5.0).toInt,
-      epochs = jNum(j \ "epochs").getOrElse(100.0).toInt,
-      batch = jNum(j \ "batch").getOrElse(64.0).toInt,
-      lr = jNum(j \ "lr").getOrElse(0.001),
-      seed = jNum(j \ "seed").getOrElse(42.0).toLong,
-      trainSize = jNum(j \ "train_size").getOrElse(0.67),
-      patience = jNum(j \ "patience").getOrElse(5.0).toInt,
-      mcmcIters = jNum(j \ "mcmc_iters").getOrElse(10.0).toInt,
-      injectRate = jNum(j \ "inject_rate").getOrElse(0.01),
-      l2 = jNum(j \ "l2").getOrElse(0.001),
-      clipNorm = jNum(j \ "clip_norm").getOrElse(10.0),
-      sigmaFloor = jNum(j \ "sigma_floor").getOrElse(1e-9))
+      period = Json.num(j \ "period").getOrElse(86400.0).toLong,
+      span = Json.num(j \ "span").getOrElse(24.0).toInt,
+      intermediate = Json.num(j \ "intermediate").getOrElse(24.0).toInt,
+      latent = Json.num(j \ "latent").getOrElse(5.0).toInt,
+      epochs = Json.num(j \ "epochs").getOrElse(100.0).toInt,
+      batch = Json.num(j \ "batch").getOrElse(64.0).toInt,
+      lr = Json.num(j \ "lr").getOrElse(0.001),
+      seed = Json.num(j \ "seed").getOrElse(42.0).toLong,
+      trainSize = Json.num(j \ "train_size").getOrElse(0.67),
+      patience = Json.num(j \ "patience").getOrElse(5.0).toInt,
+      mcmcIters = Json.num(j \ "mcmc_iters").getOrElse(10.0).toInt,
+      injectRate = Json.num(j \ "inject_rate").getOrElse(0.01),
+      l2 = Json.num(j \ "l2").getOrElse(0.001),
+      clipNorm = Json.num(j \ "clip_norm").getOrElse(10.0),
+      sigmaFloor = Json.num(j \ "sigma_floor").getOrElse(1e-9))
   }
 
   // ───────────────────────── dense net ─────────────────────────
@@ -610,15 +603,15 @@ object DonutVae extends ModelType {
     val p = parseParams(settingsJson)
     val j = JsonMethods.parse(settingsJson)
     val flat = (j \ "weights") match {
-      case JArray(ws) => ws.flatMap(jNum).toArray
+      case JArray(ws) => ws.flatMap(Json.num).toArray
       case _ => throw new IllegalArgumentException("stored model has no weights")
     }
     val net = new Net(p, new scala.util.Random(p.seed))
     net.loadFlat(flat)
-    val sigma = jNum(j \ "sigma").getOrElse(
+    val sigma = Json.num(j \ "sigma").getOrElse(
       throw new IllegalArgumentException("stored model has no sigma"))
-    val mu = jNum(j \ "mu").getOrElse(0.0)
-    val sd = jNum(j \ "sd").getOrElse(1.0)
+    val mu = Json.num(j \ "mu").getOrElse(0.0)
+    val sd = Json.num(j \ "sd").getOrElse(1.0)
     val prof = profile.orderBy("slot").collect()
     new Trained(profile, p, net, sigma, mu, sd,
       prof.map(_.getDouble(1)), prof.map(_.getDouble(2)))

@@ -155,43 +155,20 @@ object FleetScan {
     (scanned, newState)
   }
 
-  /** Persist the state table atomically: write a new versioned subdir,
-    * then point `ACTIVE` at it (the [[graft.io.ModelStore]] protocol) —
-    * the previous version stays readable until the pointer flips. */
+  /** Persist the state table as `<root>/<name>/vN` behind `ACTIVE`
+    * ([[graft.io.Durable.Versioned]], the [[graft.io.ModelStore]]
+    * protocol) — the previous version stays readable until the pointer
+    * flips. Superseded versions are pruned AFTER the flip: the per-run
+    * save must not accrete v1..vN forever under a long-lived root (the
+    * resume gate re-saves on every run over one corpus dir). A reader
+    * that loaded the OLD pointer just before the flip and is still
+    * mid-read races the prune — single-writer-at-a-time per
+    * (root, name) is the protocol contract; concurrent writers should
+    * key the root by run. */
   def saveState(state: DataFrame, root: String, name: String): Int = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Paths.get(root, name)
-    Files.createDirectories(dir)
-    val listing = Files.list(dir)
-    val prior =
-      try listing.toArray.map(_.toString).flatMap(p => scala.util.Try(
-        p.split('/').last.stripPrefix("v").toInt).toOption)
-      finally listing.close()
-    val v = if (prior.isEmpty) 1 else prior.max + 1
-    state.write.mode("overwrite").parquet(s"$root/$name/v$v")
-    // ACTIVE flips atomically (temp file + ATOMIC_MOVE in the same
-    // dir): a concurrent loadState reads either the old version or
-    // the new one, never a half-written pointer
-    val tmp = dir.resolve(s".ACTIVE.tmp.$v")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, dir.resolve("ACTIVE"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    // prune superseded versions AFTER the flip: the per-run append
-    // must not accrete v1..vN forever under a long-lived root (the
-    // resume gate re-saves on every run over one corpus dir). A
-    // reader that loaded the OLD pointer just before the flip and is
-    // still mid-read races the prune — single-writer-at-a-time per
-    // (root, name) is the protocol contract; concurrent writers
-    // should key the root by run.
-    prior.foreach { old =>
-      val op = dir.resolve(s"v$old")
-      if (Files.exists(op)) {
-        val walk = Files.walk(op)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p): Unit)
-        finally walk.close()
-      }
-    }
+    val store = versions(root, name)
+    val v = store.commit(dir => state.write.mode("overwrite").parquet(dir.toString))
+    store.pruneBelow(v)
     v
   }
 
@@ -204,10 +181,14 @@ object FleetScan {
     * key — so pinning them is one tiny job per load. */
   def loadState(spark: SparkSession, root: String, name: String,
       seriesKeys: Seq[String]): DataFrame = {
-    val active = java.nio.file.Paths.get(root, name, "ACTIVE")
-    if (!java.nio.file.Files.exists(active)) emptyState(spark, seriesKeys)
-    else spark.read.parquet(
-        s"$root/$name/v${java.nio.file.Files.readString(active).trim}")
-      .localCheckpoint(true)
+    val store = versions(root, name)
+    store.active match {
+      case None => emptyState(spark, seriesKeys)
+      case Some(v) =>
+        spark.read.parquet(store.path(v).toString).localCheckpoint(true)
+    }
   }
+
+  private def versions(root: String, name: String) =
+    new graft.io.Durable.Versioned(java.nio.file.Paths.get(root, name), "v")
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Stats
+import graft.io.Json
 
 /** Additive Holt-Winters (triple exponential smoothing) — the classic
   * level/trend/seasonal forecaster, as a third [[ModelType]] behind the
@@ -206,25 +207,17 @@ object HoltWintersType extends ModelType {
 
   val name = "holtwinters"
 
-  private def jNum(j: JValue): Option[Double] = j match {
-    case JInt(x)     => Some(x.toDouble)
-    case JLong(x)    => Some(x.toDouble)
-    case JDouble(x)  => Some(x)
-    case JDecimal(x) => Some(x.toDouble)
-    case _           => None
-  }
-
   private def params(json: String): (HoltWintersParams, Boolean) = {
     val j = JsonMethods.parse(json)
     val base = HoltWintersParams(
-      bucketInterval = jNum(j \ "bucket_interval").getOrElse(
+      bucketInterval = Json.num(j \ "bucket_interval").getOrElse(
         throw new IllegalArgumentException("bucket_interval required")).toLong,
-      period = jNum(j \ "period").map(_.toLong).getOrElse(86400L))
-    val explicit = jNum(j \ "alpha").isDefined
+      period = Json.num(j \ "period").map(_.toLong).getOrElse(86400L))
+    val explicit = Json.num(j \ "alpha").isDefined
     val p = base.copy(
-      alpha = jNum(j \ "alpha").getOrElse(base.alpha),
-      beta = jNum(j \ "beta").getOrElse(base.beta),
-      gamma = jNum(j \ "gamma").getOrElse(base.gamma))
+      alpha = Json.num(j \ "alpha").getOrElse(base.alpha),
+      beta = Json.num(j \ "beta").getOrElse(base.beta),
+      gamma = Json.num(j \ "gamma").getOrElse(base.gamma))
     (p, explicit)
   }
 
@@ -234,7 +227,7 @@ object HoltWintersType extends ModelType {
     val series = HoltWinters.collectSeries(bucketed, valueCol)
     // "max_evals" present → budgeted annealed search (the reference's
     // hyperopt knob, donut.py:800-855); absent → the fixed grid
-    val maxEvals = jNum(JsonMethods.parse(settingsJson) \ "max_evals")
+    val maxEvals = Json.num(JsonMethods.parse(settingsJson) \ "max_evals")
       .map(_.toInt)
     val (p, st) =
       if (explicit) (p0, HoltWinters.fit(series, p0))
@@ -263,11 +256,11 @@ object HoltWintersType extends ModelType {
     val season = profile.orderBy("slot").select("s").collect()
       .map(_.getDouble(0))
     val st = HoltWintersState(
-      level = jNum(j \ "level").getOrElse(0.0),
-      trend = jNum(j \ "trend").getOrElse(0.0),
+      level = Json.num(j \ "level").getOrElse(0.0),
+      trend = Json.num(j \ "trend").getOrElse(0.0),
       season = season,
-      sigma = jNum(j \ "sigma").getOrElse(1.0),
-      lastBucket = jNum(j \ "last_bucket").map(_.toLong).getOrElse(0L))
+      sigma = Json.num(j \ "sigma").getOrElse(1.0),
+      lastBucket = Json.num(j \ "last_bucket").map(_.toLong).getOrElse(0L))
     new Trained(profile, settingsJson, p, st)
   }
 

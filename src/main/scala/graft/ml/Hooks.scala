@@ -180,9 +180,7 @@ class AnnotationHook(
     }
 }
 
-/** Per-hook persistent key/value objects
-  * (/root/reference/loudml/api.py:145-169). File-backed for cross-run
-  * survival; in-memory for tests. */
+/** Per-hook persistent key/value objects (loudml/api.py:145-169). */
 trait ObjectStore {
   def set(key: String, value: String): Unit
   def get(key: String): Option[String]
@@ -195,21 +193,5 @@ object ObjectStore {
     def set(key: String, value: String): Unit = m.put(key, value)
     def get(key: String): Option[String] = m.get(key)
     def delete(key: String): Unit = m.remove(key)
-  }
-
-  /** Files under `<dir>/objects/<key>` (the filestorage model-object
-    * layout analog, /root/reference/loudml/filestorage.py). */
-  def onDisk(dir: String): ObjectStore = new ObjectStore {
-    private val base = java.nio.file.Paths.get(dir, "objects")
-    private def p(key: String) = base.resolve(key)
-    def set(key: String, value: String): Unit = {
-      java.nio.file.Files.createDirectories(base)
-      java.nio.file.Files.writeString(p(key), value)
-    }
-    def get(key: String): Option[String] =
-      if (java.nio.file.Files.exists(p(key)))
-        Some(java.nio.file.Files.readString(p(key)))
-      else None
-    def delete(key: String): Unit = java.nio.file.Files.deleteIfExists(p(key))
   }
 }

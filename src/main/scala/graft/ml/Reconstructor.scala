@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Stats
+import graft.io.Json
 
 /** Windowed-reconstruction model — the Donut-class second model behind the
   * [[ModelType]] seam, targeting the reference's test-enforced quality
@@ -63,24 +64,16 @@ object WindowReconstructor extends ModelType {
         s""""sigma_floor":$sigmaFloor}"""
   }
 
-  private def jNum(j: JValue): Option[Double] = j match {
-    case JInt(x)     => Some(x.toDouble)
-    case JLong(x)    => Some(x.toDouble)
-    case JDouble(x)  => Some(x)
-    case JDecimal(x) => Some(x.toDouble)
-    case _           => None
-  }
-
   def parseParams(json: String): Params = {
     val j = JsonMethods.parse(json)
     Params(
-      bucketInterval = jNum(j \ "bucket_interval")
+      bucketInterval = Json.num(j \ "bucket_interval")
         .getOrElse(throw new IllegalArgumentException(
           "window_reconstructor settings need bucket_interval")).toLong,
-      period = jNum(j \ "period").getOrElse(86400.0).toLong,
-      localLags = jNum(j \ "local_lags").getOrElse(3.0).toInt,
-      ridgeLambda = jNum(j \ "ridge_lambda").getOrElse(0.1),
-      sigmaFloor = jNum(j \ "sigma_floor").getOrElse(1e-9))
+      period = Json.num(j \ "period").getOrElse(86400.0).toLong,
+      localLags = Json.num(j \ "local_lags").getOrElse(3.0).toInt,
+      ridgeLambda = Json.num(j \ "ridge_lambda").getOrElse(0.1),
+      sigmaFloor = Json.num(j \ "sigma_floor").getOrElse(1e-9))
   }
 
   /** Lag features with deterministic imputation AND context sanitization:
@@ -274,13 +267,13 @@ object WindowReconstructor extends ModelType {
   def load(spark: SparkSession, profile: DataFrame, settingsJson: String): TrainedModel = {
     val j = JsonMethods.parse(settingsJson)
     val weights = (j \ "weights") match {
-      case JArray(xs) => xs.flatMap(jNum).toArray
+      case JArray(xs) => xs.flatMap(Json.num).toArray
       case _ => throw new IllegalArgumentException("stored model has no weights")
     }
-    val sigma = jNum(j \ "sigma").getOrElse(
+    val sigma = Json.num(j \ "sigma").getOrElse(
       throw new IllegalArgumentException("stored model has no sigma"))
-    val globalMean = jNum(j \ "global_mean").getOrElse(0.0)
-    val globalSigma = jNum(j \ "global_sigma").getOrElse(0.0)
+    val globalMean = Json.num(j \ "global_mean").getOrElse(0.0)
+    val globalSigma = Json.num(j \ "global_sigma").getOrElse(0.0)
     new TrainedReconstructor(profile, parseParams(settingsJson), weights, sigma,
       globalMean, globalSigma)
   }

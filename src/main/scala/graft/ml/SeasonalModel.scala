@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Stats
+import graft.io.Json
 
 /** Seasonal-baseline time-series model — the interface-compatible first
   * implementation of the reference's model trait (SURVEY §2.11, plan §7.2
@@ -185,21 +186,13 @@ object SeasonalModelType extends ModelType {
 
   val name = "seasonal"
 
-  private def jNum(j: JValue): Option[Double] = j match {
-    case JInt(x)     => Some(x.toDouble)
-    case JLong(x)    => Some(x.toDouble)
-    case JDouble(x)  => Some(x)
-    case JDecimal(x) => Some(x.toDouble)
-    case _           => None
-  }
-
   def parseParams(json: String): SeasonalModelParams = {
     val j = JsonMethods.parse(json)
     SeasonalModelParams(
-      bucketInterval = jNum(j \ "bucket_interval")
+      bucketInterval = Json.num(j \ "bucket_interval")
         .getOrElse(throw new IllegalArgumentException(
           "seasonal settings need bucket_interval")).toLong,
-      period = jNum(j \ "period").getOrElse(86400.0).toLong)
+      period = Json.num(j \ "period").getOrElse(86400.0).toLong)
   }
 
   def train(bucketed: DataFrame, valueCol: String, settingsJson: String): TrainedModel =

@@ -28,10 +28,15 @@ package graft.operators
   * the FIRST failure with later failures attached as suppressed (a
   * concurrent sibling may have completed its write — harmless, the
   * marker is never written on any failure). An interrupt of the
-  * calling thread cancels the remaining tasks and rethrows immediately
-  * with the interrupt status restored — cancellation must not block
-  * behind every in-flight write. */
+  * calling thread interrupts the running tasks and waits up to
+  * [[DrainSeconds]] for them to stop, so the caller's cleanup (unpersist,
+  * marker deletion) does not run beside a task's driver thread; it then
+  * rethrows with the interrupt status restored and any failure already
+  * recorded attached as suppressed. The interrupt does not cancel Spark
+  * jobs a task already submitted. */
 private[graft] object Actions {
+  private val DrainSeconds = 60L
+
   def inParallel(tasks: (() => Unit)*): Unit = {
     if (tasks.size <= 1) { tasks.foreach(_()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
@@ -46,7 +51,11 @@ private[graft] object Actions {
         try f.get()
         catch {
           case e: InterruptedException =>
-            futs.foreach(_.cancel(true))
+            if (firstFailure != null) e.addSuppressed(firstFailure)
+            pool.shutdownNow()
+            try pool.awaitTermination(DrainSeconds,
+              java.util.concurrent.TimeUnit.SECONDS)
+            catch { case _: InterruptedException => () }
             Thread.currentThread().interrupt()
             throw e
           case e: java.util.concurrent.ExecutionException =>

@@ -22,15 +22,6 @@ object CorpusStats {
   def approxDistinct(df: DataFrame, c: Column, rsd: Double = 0.02): Long =
     df.agg(approx_count_distinct(c, rsd)).head().getLong(0)
 
-  /** Approximate per-doc-distinct shingle vocabulary of a text corpus:
-    * one narrow explode, one HLL aggregation — no vocabulary shuffle. */
-  def approxShingleVocab(df: DataFrame, textCol: String, n: Int = 3,
-      rsd: Double = 0.02): Long =
-    approxDistinct(
-      df.select(explode(array_distinct(
-        Dedup.wordShingles(col(textCol), n))).as("sh")),
-      col("sh"), rsd)
-
   /** Per-stratum approximate distinct counts in ONE pass (the profile
     * table a mixture sampler reads): `(strataCol, approx_docs,
     * approx_vocab)`. `explode_outer` keeps docs with zero shingles

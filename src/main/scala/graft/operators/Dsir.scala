@@ -43,35 +43,6 @@ object Dsir {
   def bucketsCol(textCol: String, buckets: Int): Column =
     transform(TextAnalysis.bigramsCol(textCol), p => bucketOf(p, buckets))
 
-  /** Bucket occurrence counts over a corpus: `(bucket, cnt)` — one
-    * explode + one bucket-keyed aggregation, exchange bounded by
-    * `buckets` after map-side combine. */
-  def bucketCounts(df: DataFrame, textCol: String, buckets: Int)
-      : DataFrame =
-    df.select(explode(bucketsCol(textCol, buckets)).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("cnt"))
-
-  /** Dense per-bucket log₂ importance ratios between a target slice and
-    * the raw pool: `(bucket, lr)` for EVERY bucket in [0, buckets) —
-    * add-α smoothing gives unseen buckets a finite ratio. Model-sized
-    * (`buckets` rows); intended for `broadcast()` into scoring. */
-  def logRatios(target: DataFrame, raw: DataFrame, textCol: String,
-      buckets: Int, alpha: Double = 1.0): DataFrame = {
-    val spark = target.sparkSession
-    val tc = bucketCounts(target, textCol, buckets)
-    val rc = bucketCounts(raw, textCol, buckets)
-    val tTot = tc.agg(sum("cnt")).head().getLong(0)
-    val rTot = rc.agg(sum("cnt")).head().getLong(0)
-    spark.range(buckets).toDF("bucket")
-      .join(tc.withColumnRenamed("cnt", "tc"), Seq("bucket"), "left")
-      .join(rc.withColumnRenamed("cnt", "rc"), Seq("bucket"), "left")
-      .select(col("bucket"),
-        (log2((coalesce(col("tc"), lit(0L)) + lit(alpha)) /
-            lit(tTot + alpha * buckets)) -
-          log2((coalesce(col("rc"), lit(0L)) + lit(alpha)) /
-            lit(rTot + alpha * buckets))).as("lr"))
-  }
-
   /** Select `n` documents from the non-target pool by Gumbel-top-n over
     * the DSIR importance weight. Output: `(idCol, n_bigrams,
     * log_ratio, sel_key)` sorted by descending selection key —

@@ -153,13 +153,6 @@ object Similarity {
     Array.fill(planes, dim)(rnd.nextDouble() * 2 - 1)
   }
 
-  /** Sign-random-projection bucket id (one int, `planes` bits). */
-  def srpBucket(vec: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val pl = typedlit(p.toSeq)
-      when(dot(vec, pl) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** IVF (inverted-file) ANN: partition the corpus into `nlist` cells by
     * nearest centroid, probe the `nprobe` cells nearest each query, exact
     * cosine + top-k within probed cells — the classic IVF-Flat shape

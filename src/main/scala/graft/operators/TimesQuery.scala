@@ -308,10 +308,6 @@ object TimesQuery {
     mergeByBucket(parts).orderBy("bucket")
   }
 
-  /** Convenience: bucket label as UTC timestamp instead of epoch seconds. */
-  def withTimestamp(df: DataFrame): DataFrame =
-    df.withColumn("bucket_ts", timestamp_seconds(col("bucket")))
-
   /** Sequential train/validation split — the reference's
     * `train_test_split` (/root/reference/loudml/donut.py:989-997: first
     * `trainSize` fraction of the ordered series trains, the rest

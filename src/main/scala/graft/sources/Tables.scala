@@ -18,10 +18,6 @@ import org.apache.spark.sql.functions.{col, expr}
   * time-range filter in [[graft.operators.TimesQuery]] prunes partitions.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Load one driver-provided table from a scale-factor directory.
     *
     * The `events` table's `ts` column has shipped in two physical forms:
@@ -182,8 +178,4 @@ object Tables {
       .option("sep", delimiter)
       .option("inferSchema", "true")
       .csv(path)
-
-  /** Register every table as a temp view so spark.sql(...) works. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

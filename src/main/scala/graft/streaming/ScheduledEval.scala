@@ -68,11 +68,6 @@ class ScheduledEval(
     } finally scanned.unpersist()
   }
 
-  /** Replay a span of wall-clock time as consecutive trigger firings —
-    * catch-up after downtime, backtesting, tests. */
-  def evalRange(nowFrom: Long, nowTo: Long): Seq[DataFrame] =
-    (nowFrom until nowTo by params.interval).map(evalOnce)
-
   private def alignFloor(ts: Long): Long =
     ts - Math.floorMod(ts, params.bucketInterval)
   private def alignCeil(d: Long): Long = {
@@ -82,42 +77,32 @@ class ScheduledEval(
 }
 
 /** Per-model anomaly run-state persistence — the `save_state` analog
-  * (/root/reference/loudml/worker.py:255-263 via
-  * /root/reference/loudml/filestorage.py). One tiny JSON file per model
-  * under `<root>/<model>/run_state.json`. */
+  * (loudml/worker.py:255-263 via loudml/filestorage.py). One tiny JSON
+  * file per model under `<root>/<model>/run_state.json`, replaced
+  * atomically ([[graft.io.Durable.write]]). */
 object StateStore {
-  import java.nio.file.{Files, Paths}
+  import graft.io.{Durable, Json}
 
   private def path(root: String, model: String) =
-    Paths.get(root, model, "run_state.json")
+    java.nio.file.Paths.get(root, model, "run_state.json")
 
   def save(root: String, model: String, st: RunState): Unit = {
-    val p = path(root, model)
-    Files.createDirectories(p.getParent)
     val lastEnd = st.lastEndTs.map(_.toString).getOrElse("null")
-    Files.writeString(p,
+    Durable.write(path(root, model),
       s"""{"open":${st.open},"last_end_ts":$lastEnd,""" +
         s""""episode_max":${st.episodeMax}}""")
   }
 
-  def load(root: String, model: String): RunState = {
-    val p = path(root, model)
-    if (!Files.exists(p)) RunState.empty
-    else {
+  def load(root: String, model: String): RunState =
+    Durable.read(path(root, model)).fold(RunState.empty) { text =>
       import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val j = JsonMethods.parse(Files.readString(p))
+      val j = org.json4s.jackson.JsonMethods.parse(text)
       RunState(
         open = (j \ "open") match { case JBool(b) => b; case _ => false },
-        lastEndTs = (j \ "last_end_ts") match {
-          case JInt(x) => Some(x.toLong); case JLong(x) => Some(x); case _ => None
-        },
-        episodeMax = (j \ "episode_max") match {
-          case JDouble(x) => x; case JInt(x) => x.toDouble; case _ => 0.0
-        })
+        lastEndTs = Json.long(j \ "last_end_ts"),
+        episodeMax = Json.num(j \ "episode_max").getOrElse(0.0))
     }
-  }
 
   def clear(root: String, model: String): Unit =
-    Files.deleteIfExists(path(root, model))
+    java.nio.file.Files.deleteIfExists(path(root, model))
 }

@@ -340,46 +340,33 @@ object StreamingEval {
   * (O(contextSec/bucketInterval) pairs), survives restarts like the
   * reference's saved run state. */
 object BucketHistory {
-  import java.nio.file.{Files, Paths}
+  import graft.io.{Durable, Json}
 
   private def path(root: String, model: String) =
-    Paths.get(root, model, "stream_history.json")
+    java.nio.file.Paths.get(root, model, "stream_history.json")
 
   def save(root: String, model: String, hwm: Long,
       rows: Seq[(Long, Double)]): Unit = {
-    val p = path(root, model)
-    Files.createDirectories(p.getParent)
     val arr = rows.sortBy(_._1)
       .map { case (b, v) => s"[$b,$v]" }.mkString("[", ",", "]")
-    Files.writeString(p, s"""{"hwm":$hwm,"rows":$arr}""")
+    Durable.write(path(root, model), s"""{"hwm":$hwm,"rows":$arr}""")
   }
 
-  def load(root: String, model: String): (Option[Long], Seq[(Long, Double)]) = {
-    val p = path(root, model)
-    if (!Files.exists(p)) (None, Nil)
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val j = JsonMethods.parse(Files.readString(p))
-      val hwm = (j \ "hwm") match {
-        case JInt(x) => Some(x.toLong); case JLong(x) => Some(x); case _ => None
-      }
-      val rows = (j \ "rows") match {
-        case JArray(xs) => xs.collect {
-          case JArray(List(b, v)) =>
-            val bl = b match { case JInt(x) => x.toLong; case JLong(x) => x; case _ => 0L }
-            val vd = v match {
-              case JDouble(x) => x; case JInt(x) => x.toDouble
-              case JLong(x) => x.toDouble; case _ => 0.0
-            }
-            bl -> vd
+  def load(root: String, model: String): (Option[Long], Seq[(Long, Double)]) =
+    Durable.read(path(root, model)) match {
+      case None => (None, Nil)
+      case Some(text) =>
+        import org.json4s._
+        val j = org.json4s.jackson.JsonMethods.parse(text)
+        val rows = (j \ "rows") match {
+          case JArray(xs) => xs.collect { case JArray(List(b, v)) =>
+            Json.long(b).getOrElse(0L) -> Json.num(v).getOrElse(0.0)
+          }
+          case _ => Nil
         }
-        case _ => Nil
-      }
-      (hwm, rows)
+        (Json.long(j \ "hwm"), rows)
     }
-  }
 
   def clear(root: String, model: String): Unit =
-    Files.deleteIfExists(path(root, model))
+    java.nio.file.Files.deleteIfExists(path(root, model))
 }

@@ -258,12 +258,15 @@ class FleetScanSpec extends SparkSpec {
     // superseded versions prune after the flip (the ledger must not
     // accrete one dir per run), no temp pointer litter survives, and
     // the versioning stays monotone from the survivor
-    val entries = {
+    def entries = {
       val l = java.nio.file.Files.list(java.nio.file.Paths.get(root, "f1"))
       try l.toArray.map(_.toString.split('/').last).toSet finally l.close()
     }
     assert(entries === Set("v2", "ACTIVE"), entries.toString)
     assert(FleetScan.saveState(st, root, "f1") == 3)
     assert(FleetScan.loadState(spark, root, "f1", keys).count() == 2)
+    // no staging directory or temp pointer outlives a save
+    assert(entries === Set("v3", "ACTIVE"), entries.toString)
+    assert(!entries.exists(_.startsWith(".")), entries.toString)
   }
 }
