@@ -58,9 +58,9 @@ object SparkEntry {
   /** Train on days 1-20, score days 21-30 (SURVEY §2.11). */
   private def seasonalScored(s: SparkSession, dir: String): DataFrame = {
     val profile = SeasonalModel.train(
-      hourlyAvg(s, dir, FROM, SPLIT), "observed", seasonalParams)
+      hourlyAvg(s, dir, FROM, SPLIT), "observed", Nil, seasonalParams)
     SeasonalModel.predict(
-      hourlyAvg(s, dir, SPLIT, TO), profile, "observed", seasonalParams)
+      hourlyAvg(s, dir, SPLIT, TO), profile, "observed", Nil, seasonalParams)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
@@ -464,7 +464,7 @@ object SparkEntry {
     // ── §2.11 forecast: future bands from the seasonal profile
     "q_forecast" -> ((s, dir) => {
       val profile = SeasonalModel.train(
-        hourlyAvg(s, dir, FROM, SPLIT), "observed", seasonalParams)
+        hourlyAvg(s, dir, FROM, SPLIT), "observed", Nil, seasonalParams)
       SeasonalModel.forecast(s, profile, TO, TO + 2 * 86400L, seasonalParams)
         .select(
           col("bucket"),
@@ -515,7 +515,7 @@ object SparkEntry {
     //    noise·j·|μ| per forecast step j
     "q_forecast_ci" -> ((s, dir) => {
       val profile = SeasonalModel.train(
-        hourlyAvg(s, dir, FROM, SPLIT), "observed", seasonalParams)
+        hourlyAvg(s, dir, FROM, SPLIT), "observed", Nil, seasonalParams)
       SeasonalModel.forecastCI(s, profile, TO, TO + 2 * 86400L, seasonalParams,
           percentInterval = 0.68, percentNoise = 2.0)
         .select(

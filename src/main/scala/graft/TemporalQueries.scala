@@ -801,9 +801,9 @@ object TemporalQueries {
         .filter(col("bucket") >= FROM && col("bucket") < SPLIT)
         .groupBy("event_type", "bucket")
         .agg(exactAvg(col("value")).as("v"))
-      val states = graft.ml.FleetHoltWinters.train(
+      val states = graft.ml.HoltWinters.train(
         series, "v", Seq("event_type"), p)
-      graft.ml.FleetHoltWinters.forecast(
+      graft.ml.HoltWinters.forecast(
           states, Seq("event_type"), SPLIT, SPLIT + 86400L, p)
         .select(col("event_type"), col("bucket"),
           round(col("predicted"), 4).as("predicted"),

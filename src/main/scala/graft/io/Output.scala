@@ -112,8 +112,14 @@ object Publish {
     * Returns the manifest. */
   def writeShards(df: DataFrame, idCol: String, textCol: String,
       dir: String, shards: Int, salt: String = ""): DataFrame = {
+    // materialize the input ONCE, as appendShards does for its delta:
+    // the data and manifest writes below each evaluate it, concurrently,
+    // and must describe the SAME rows — a nondeterministic input
+    // re-executed per write would publish a manifest that does not
+    // cover the data
+    val input = df.localCheckpoint(true)
     val m = graft.operators.CorpusStats
-      .manifest(df, idCol, textCol, shards, salt)
+      .manifest(input, idCol, textCol, shards, salt)
     // layout metadata rides WITH the artifact: the verifier must use
     // the writer's modulus — inferring it as max(stored shard)+1 breaks
     // when the highest-numbered shards got zero docs (small corpus,
@@ -129,7 +135,7 @@ object Publish {
     // must fail that read loudly rather than accept a silent append
     // onto partial data (review finding, r15).
     graft.operators.Actions.inParallel(
-      () => graft.operators.Sampling.shuffleShards(df, idCol, shards, salt)
+      () => graft.operators.Sampling.shuffleShards(input, idCol, shards, salt)
         .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/data"),
       () => m.coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/manifest"))

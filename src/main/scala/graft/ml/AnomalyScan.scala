@@ -45,23 +45,27 @@ object RunState {
   val empty: RunState = RunState()
 
   /** Recover the post-scan state from scan output (+ the pre-scan state
-    * for fields the window didn't touch). Aggregations are over one eval
-    * window — O(window) rows, any scale. */
-  def fromScan(scanned: org.apache.spark.sql.DataFrame, before: RunState): RunState = {
-    import org.apache.spark.sql.functions._
-    val last = scanned.orderBy(col("bucket").desc)
-      .select("anomaly", "episode_max").limit(1).collect()
-    if (last.isEmpty) before
-    else {
-      val marker = Option(last(0).getString(0)).getOrElse("")
+    * for fields the window didn't touch): one collect of the window's
+    * `(bucket, anomaly, episode_max)` columns, then [[fold]]. */
+  def fromScan(scanned: DataFrame, before: RunState): RunState =
+    fold(scanned.select("bucket", "anomaly", "episode_max").collect(), before)
+
+  /** The post-scan state as a pure fold over a scanned window's rows (any
+    * order; read by the names `bucket`, `anomaly`, `episode_max`): the
+    * latest bucket's marker decides `open` and the running episode max,
+    * the latest `end` moves `lastEndTs`. An empty window keeps
+    * `before`. */
+  def fold(rows: Iterable[Row], before: RunState): RunState =
+    rows.headOption.fold(before) { r0 =>
+      val (bi, ai, ei) = (r0.fieldIndex("bucket"), r0.fieldIndex("anomaly"),
+        r0.fieldIndex("episode_max"))
+      val last = rows.maxBy(_.getLong(bi))
+      val marker = Option(last.getString(ai)).getOrElse("")
       val open = marker == "start" || marker == "ongoing"
-      val endRow = scanned.filter(col("anomaly") === "end")
-        .agg(max(col("bucket"))).collect()(0)
-      val lastEnd = if (endRow.isNullAt(0)) before.lastEndTs else Some(endRow.getLong(0))
-      val epi = if (open && !last(0).isNullAt(1)) last(0).getDouble(1) else 0.0
-      RunState(open, lastEnd, epi)
+      val ends = rows.filter(r => r.getString(ai) == "end").map(_.getLong(bi))
+      val epi = if (open && !last.isNullAt(ei)) last.getDouble(ei) else 0.0
+      RunState(open, ends.maxOption.orElse(before.lastEndTs), epi)
     }
-  }
 }
 
 object AnomalyScan {

@@ -1,9 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.Stats
 import graft.io.Json
@@ -47,13 +44,11 @@ import graft.io.Json
   * model-sized, the same driver budget as every profile/HW fit here; the
   * distributed reduction already happened in the bucketing aggregation)
   * and fits on the driver — epochs·batches of hidden·span flops, no
-  * Spark job per epoch. Solo scoring assembles windows with ONE global
-  * ordered window (`Window.orderBy("bucket")` — a single-partition sort,
-  * acceptable because a solo series is model-sized by reference
-  * semantics: one bucketized series fits one task); each row then
-  * reconstructs narrowly with the weight matrix in the closure. For
-  * many-series scale use [[FleetAutoencoder]], which partitions the
-  * window by series key and trains/scores per key with no global sort.
+  * Spark job per epoch. Scoring is keyed ([[predict]], through
+  * [[Keyed.scoreWindows]]): each series cogroups with its state row and
+  * reconstructs its windows with the weights decoded once; a solo model
+  * is the one-row state with the empty key. For many-series scale the
+  * keyed [[train]] fits every key's series inside one Spark job.
   */
 object AutoencoderReconstructor extends ModelType {
   import org.json4s._
@@ -148,9 +143,49 @@ object AutoencoderReconstructor extends ModelType {
     new Trained(profile, p, f.w, f.sigma, f.mu, f.sd, f.slotMean, f.slotSig)
   }
 
+  /** Train one state per key from a bucketized frame `(keys…, bucket,
+    * valueCol)` (gaps as missing rows or null values — both impute
+    * exactly like the solo fit, which this reuses verbatim per key).
+    * Returns `(keys…, weights, sigma, mu, sd, slot_mean, slot_sigma)` —
+    * one row per series. A degenerate key (empty, all-null, or fewer
+    * buckets than the span) is skipped and counted in the named
+    * accumulator `graft.fleetAe.skippedKeys` ([[Keyed.fit]]). */
+  def train(bucketed: DataFrame, valueCol: String, keys: Seq[String],
+      p: Params): DataFrame =
+    Keyed.fit(bucketed, valueCol, keys, Some(Keyed.Skip(
+        "graft.fleetAe.skippedKeys",
+        s => s.isEmpty || s.size < p.span || s.forall(_._2.isEmpty)))) {
+      (k, series) =>
+        val f = fitSeries(series, p)
+        Keyed.WindowState(k, f.w.flatten.toIndexedSeq, f.sigma, f.mu, f.sd,
+          f.slotMean.toIndexedSeq, f.slotSig.toIndexedSeq)
+    }
+
+  /** Score a bucketized frame against per-key states (as [[train]]
+    * returns them; `keys = Nil` scores one series against a one-row
+    * state): each key replays [[predictWindow]] over its sorted series,
+    * bands ±3σ, Φ-score. Output: every input column plus `predicted`,
+    * `lower`, `upper`, `score`; keys without a state emit nothing. */
+  def predict(bucketed: DataFrame, states: DataFrame, valueCol: String,
+      keys: Seq[String], p: Params,
+      anomalyType: String = "low_high"): DataFrame =
+    Keyed.scoreWindows(bucketed, states, valueCol, keys, p.span,
+        anomalyType) { st =>
+      // same contract as the solo load(): a state trained under a
+      // different hidden/span must fail loudly, not misindex
+      require(st.weights.length == p.hidden * p.span,
+        s"weight shape mismatch for key ${st.k.mkString("[", ",", "]")}: " +
+          s"state has ${st.weights.length} weights, params expect " +
+          s"${p.hidden}×${p.span}")
+      val w = Array.tabulate(p.hidden, p.span)((i, j) =>
+        st.weights(i * p.span + j))
+      val (sm, ss) = (st.slot_mean.toArray, st.slot_sigma.toArray)
+      (b, win) => (predictWindow(w, p, st.mu, st.sd, sm, ss, b, win),
+        3.0 * st.sigma)
+    }
+
   /** Pure fit result — everything a scorer needs, no Spark types, so
-    * the same fit runs on the driver (solo) or inside a keyed
-    * `mapGroups` task ([[FleetAutoencoder]]). */
+    * the same fit runs on the driver (solo) or inside a keyed task. */
   private[ml] final case class Fit(
       w: Array[Array[Double]], sigma: Double, mu: Double, sd: Double,
       slotMean: Array[Double], slotSig: Array[Double])
@@ -284,9 +319,8 @@ object AutoencoderReconstructor extends ModelType {
   /** One-step prediction for the window ending at `endBucket`:
     * right-align the observed context, left-pad gaps with slot means,
     * mask abnormal entries (> 3σ_slot), impute the target entry, and
-    * MCMC-reconstruct — the shared scoring kernel of the solo
-    * [[Trained.predict]] pass and the fleet per-key replay. Returns the
-    * de-standardized prediction. */
+    * MCMC-reconstruct — the scoring kernel [[predict]] replays per
+    * window. Returns the de-standardized prediction. */
   private[ml] def predictWindow(w: Array[Array[Double]], p: Params,
       mu: Double, sd: Double, slotMean: Array[Double],
       slotSig: Array[Double], endBucket: Long,
@@ -357,46 +391,15 @@ object AutoencoderReconstructor extends ModelType {
       s"""$base,"weights":[$flat],"sigma":$sigma,"mu":$mu,"sd":$sd}"""
     }
 
-    /** Window scoring for the solo-series shape: the global
-      * `Window.orderBy` assembles per-bucket windows on ONE partition —
-      * model-sized by reference semantics (a single series' buckets),
-      * not a distributed path; fleet-scale scoring goes through the
-      * keyed fleet variants, which partition the window by series key.
-      * Each row then reconstructs in a narrow map with the weight
-      * matrix in the closure. The series should extend span−1 buckets
-      * back past the scoring range for full context
-      * (donut.py:1210-1217). */
+    /** The one-row state with the empty key: a solo model scores
+      * through the keyed [[AutoencoderReconstructor.predict]]. */
     def predict(bucketed: DataFrame, valueCol: String,
-        anomalyType: String = "low_high"): DataFrame = {
-      val p = params
-      val span = p.span
-      val w = Window.orderBy("bucket").rowsBetween(-(span - 1), 0)
-      val packed = bucketed
-        .withColumn("__win", collect_list(struct(
-          col("bucket").as("b"), col(valueCol).cast("double").as("v"))).over(w))
-      val outSchema = StructType(packed.schema.fields :+
-        StructField("predicted", DoubleType, nullable = true))
-      val wts = weights
-      val (muL, sdL, smL, ssL) = (mu, sd, slotMean, slotSig)
-      val winIdx = packed.schema.fieldIndex("__win")
-      val bIdx = packed.schema.fieldIndex("bucket")
-      val scored = packed.mapPartitions { it =>
-        it.map { r =>
-          val endBucket = r.getLong(bIdx)
-          val win = r.getSeq[Row](winIdx).map(e => (e.getLong(0),
-            if (e.isNullAt(1)) None else Some(e.getDouble(1))))
-          val pred = AutoencoderReconstructor.predictWindow(
-            wts, p, muL, sdL, smL, ssL, endBucket, win)
-          Row.fromSeq(r.toSeq :+ pred)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      scored
-        .withColumn("lower", col("predicted") - lit(3.0 * sigma))
-        .withColumn("upper", col("predicted") + lit(3.0 * sigma))
-        .withColumn("score", Stats.anomalyScore(
-          col(valueCol), col("predicted"), col("upper"), anomalyType))
-        .drop("__win")
-    }
+        anomalyType: String = "low_high"): DataFrame =
+      AutoencoderReconstructor.predict(bucketed,
+        Keyed.soloState(bucketed.sparkSession, Keyed.WindowState(Nil,
+          weights.flatten.toIndexedSeq, sigma, mu, sd,
+          slotMean.toIndexedSeq, slotSig.toIndexedSeq)),
+        valueCol, Nil, params, anomalyType)
 
     def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
       forecastBands(spark, from, to, z = 3.0, noisePerStep = 0.0)

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * future into training.
   *
   * Scale shape: each origin's train is ONE distributed keyed job
-  * ([[FleetHoltWinters.train]] — per-key sequential fit inside
-  * mapGroups) and its forecast a narrow projection; the origins loop on
+  * ([[HoltWinters.train]] — per-key sequential fit inside
+  * one keyed job) and its forecast a narrow projection; the origins loop on
   * the driver because backtests use a HANDFUL of origins by design
   * (3-10) — the per-origin frames union into one plan and the actuals
   * join + metric aggregation run as a single keyed job over all origins
@@ -32,9 +32,9 @@ object Backtest {
     require(origins.nonEmpty, "need at least one origin")
     require(horizon >= p.bucketInterval, "horizon must cover >= 1 bucket")
     val forecasts = origins.map { o =>
-      val states = FleetHoltWinters.train(
+      val states = HoltWinters.train(
         series.filter(col("bucket") < o), valueCol, keys, p)
-      FleetHoltWinters.forecast(states, keys, o, o + horizon, p)
+      HoltWinters.forecast(states, keys, o, o + horizon, p)
         .withColumn("origin", lit(o))
     }.reduce(_ unionByName _)
     val actuals = series.select(

@@ -1,9 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.Stats
 import graft.io.Json
@@ -49,9 +46,11 @@ import graft.io.Json
   * Scale shape: identical to the other model fits here — training
   * collects ONE bucketized series (O(buckets), model-sized; the
   * distributed reduction already happened in the bucketing
-  * aggregation) and fits on the driver; scoring assembles windows
-  * with a window function and reconstructs in a narrow map with the
-  * weights in the closure. Everything is deterministic by `seed`.
+  * aggregation) and fits on the driver; scoring is keyed
+  * ([[Keyed.scoreWindows]]: each series cogroups with its state row,
+  * the weights decode once per key; a solo model is the one-row state
+  * with the empty key), and the keyed [[train]] fits every key of a
+  * fleet inside one Spark job. Everything is deterministic by `seed`.
   */
 object DonutVae extends ModelType {
   import org.json4s._
@@ -288,6 +287,44 @@ object DonutVae extends ModelType {
       .map(s => (s.toLong, f.slotMean(s), f.slotSig(s)))
       .toDF("slot", "mu", "sigma")
     new Trained(profile, p, f.net, f.sigma, f.mu, f.sd, f.slotMean, f.slotSig)
+  }
+
+  /** Train one VAE state per key, reusing [[fitSeries]] verbatim per
+    * key. A degenerate series (empty, all-null, or whose training split
+    * is shorter than the span) is skipped and counted in the named
+    * accumulator `graft.fleetVae.skippedKeys` ([[Keyed.fit]]). Returns
+    * `(keys…, weights, sigma, mu, sd, slot_mean, slot_sigma)`, weights
+    * being the flat 14-tensor blob. */
+  def train(bucketed: DataFrame, valueCol: String, keys: Seq[String],
+      p: Params): DataFrame =
+    Keyed.fit(bucketed, valueCol, keys, Some(Keyed.Skip(
+        "graft.fleetVae.skippedKeys",
+        s => s.isEmpty || math.round(s.size * p.trainSize).toInt < p.span ||
+          s.forall(_._2.isEmpty)))) {
+      (k, series) =>
+        val f = fitSeries(series, p)
+        Keyed.WindowState(k, f.net.flat.toIndexedSeq, f.sigma, f.mu, f.sd,
+          f.slotMean.toIndexedSeq, f.slotSig.toIndexedSeq)
+    }
+
+  /** Score a bucketized frame against per-key states (as [[train]]
+    * returns them; `keys = Nil` scores one series against a one-row
+    * state): one weight-blob decode per key, [[predictWindow]] per row,
+    * bands ±3σ, Φ-score. Output: every input column plus `predicted`,
+    * `lower`, `upper`, `score`; keys without a state emit nothing. */
+  def predict(bucketed: DataFrame, states: DataFrame, valueCol: String,
+      keys: Seq[String], p: Params,
+      anomalyType: String = "low_high"): DataFrame =
+    Keyed.scoreWindows(bucketed, states, valueCol, keys, p.span,
+        anomalyType) { st =>
+      val net = decode(p, st)
+      (b, win) => (predictWindow(net, p, st.mu, st.sd, b, win), 3.0 * st.sigma)
+    }
+
+  private def decode(p: Params, st: Keyed.WindowState): Net = {
+    val net = new Net(p, new scala.util.Random(p.seed))
+    net.loadFlat(st.weights.toArray) // length-checks the blob
+    net
   }
 
   private[ml] final case class Fit(net: Net, sigma: Double, mu: Double,
@@ -580,7 +617,14 @@ object DonutVae extends ModelType {
     * (donut.py:1257-1276). Returns the de-standardized prediction. */
   private[ml] def predictWindow(net: Net, p: Params, mu: Double,
       sd: Double, endBucket: Long,
-      win: Iterable[(Long, Option[Double])]): Double = {
+      win: Iterable[(Long, Option[Double])]): Double =
+    mu + sd * imputeWindow(net, p, mu, sd, endBucket, win)._2(p.span - 1)
+
+  /** The standardized window (missing entries imputed in place) and its
+    * final reconstruction. */
+  private def imputeWindow(net: Net, p: Params, mu: Double, sd: Double,
+      endBucket: Long, win: Iterable[(Long, Option[Double])])
+      : (Array[Double], Array[Double]) = {
     val span = p.span
     val interval = p.bucketInterval
     val x = new Array[Double](span)
@@ -594,8 +638,7 @@ object DonutVae extends ModelType {
     }
     m(span - 1) = true
     x(span - 1) = 0.0
-    val xh = mcmcImpute(net, x, m, p.mcmcIters)
-    mu + sd * xh(span - 1)
+    (x, mcmcImpute(net, x, m, p.mcmcIters))
   }
 
   def load(spark: SparkSession, profile: DataFrame,
@@ -635,43 +678,16 @@ object DonutVae extends ModelType {
       s"""$base,"weights":[$flat],"sigma":$sigma,"mu":$mu,"sd":$sd}"""
     }
 
-    /** Same solo-series scoring shape as the autoencoder: one global
-      * ordered window (model-sized by reference semantics — a single
-      * bucketized series), then a narrow map with the net in the
-      * closure. */
+    /** The one-row state with the empty key. */
+    private def state(spark: SparkSession): DataFrame =
+      Keyed.soloState(spark, Keyed.WindowState(Nil, net.flat.toIndexedSeq,
+        sigma, mu, sd, slotMean.toIndexedSeq, slotSig.toIndexedSeq))
+
+    /** A solo model scores through the keyed [[DonutVae.predict]]. */
     def predict(bucketed: DataFrame, valueCol: String,
-        anomalyType: String = "low_high"): DataFrame = {
-      val p = params
-      val span = p.span
-      val w = Window.orderBy("bucket").rowsBetween(-(span - 1), 0)
-      val packed = bucketed
-        .withColumn("__win", collect_list(struct(
-          col("bucket").as("b"), col(valueCol).cast("double").as("v"))).over(w))
-      val outSchema = StructType(packed.schema.fields :+
-        StructField("predicted", DoubleType, nullable = true))
-      val flatW = net.flat
-      val (muL, sdL) = (mu, sd)
-      val winIdx = packed.schema.fieldIndex("__win")
-      val bIdx = packed.schema.fieldIndex("bucket")
-      val scored = packed.mapPartitions { it =>
-        val localNet = new Net(p, new scala.util.Random(p.seed))
-        localNet.loadFlat(flatW)
-        it.map { r =>
-          val endBucket = r.getLong(bIdx)
-          val win = r.getSeq[Row](winIdx).map(e => (e.getLong(0),
-            if (e.isNullAt(1)) None else Some(e.getDouble(1))))
-          val pred = DonutVae.predictWindow(
-            localNet, p, muL, sdL, endBucket, win)
-          Row.fromSeq(r.toSeq :+ pred)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      scored
-        .withColumn("lower", col("predicted") - lit(3.0 * sigma))
-        .withColumn("upper", col("predicted") + lit(3.0 * sigma))
-        .withColumn("score", Stats.anomalyScore(
-          col(valueCol), col("predicted"), col("upper"), anomalyType))
-        .drop("__win")
-    }
+        anomalyType: String = "low_high"): DataFrame =
+      DonutVae.predict(bucketed, state(bucketed.sparkSession), valueCol,
+        Nil, params, anomalyType)
 
     /** The reference's MC-integration band (donut.py:1281-1292): per
       * window, encode the imputed window, draw `mcCount` z samples,
@@ -681,45 +697,20 @@ object DonutVae extends ModelType {
         mcCount: Int = 100,
         anomalyType: String = "low_high"): DataFrame = {
       val p = params
-      val span = p.span
-      val w = Window.orderBy("bucket").rowsBetween(-(span - 1), 0)
-      val packed = bucketed
-        .withColumn("__win", collect_list(struct(
-          col("bucket").as("b"), col(valueCol).cast("double").as("v"))).over(w))
-      val outSchema = StructType(packed.schema.fields ++ Seq(
-        StructField("predicted", DoubleType, nullable = true),
-        StructField("lower", DoubleType, nullable = true),
-        StructField("upper", DoubleType, nullable = true)))
-      val flatW = net.flat
-      val (muL, sdL, seedL) = (mu, sd, params.seed)
-      val winIdx = packed.schema.fieldIndex("__win")
-      val bIdx = packed.schema.fieldIndex("bucket")
-      val scored = packed.mapPartitions { it =>
-        val localNet = new Net(p, new scala.util.Random(seedL))
-        localNet.loadFlat(flatW)
-        val I = p.intermediate; val L = p.latent
-        it.map { r =>
-          val endBucket = r.getLong(bIdx)
-          val win = r.getSeq[Row](winIdx).map(e => (e.getLong(0),
-            if (e.isNullAt(1)) None else Some(e.getDouble(1))))
+      Keyed.scoreWindows(bucketed, state(bucketed.sparkSession), valueCol,
+          Nil, p.span, anomalyType) { st =>
+        val net = decode(p, st)
+        val span = p.span; val I = p.intermediate; val L = p.latent
+        (endBucket, win) => {
           // impute like the deterministic path, keeping the window
-          val x = new Array[Double](span)
-          val m = Array.fill(span)(true)
-          win.foreach { case (b, vOpt) =>
-            val off = ((b - endBucket) / p.bucketInterval).toInt + span - 1
-            if (off >= 0 && off < span && vOpt.isDefined) {
-              x(off) = (vOpt.get - muL) / sdL; m(off) = false
-            }
-          }
-          m(span - 1) = true; x(span - 1) = 0.0
-          val xh = DonutVae.mcmcImpute(localNet, x, m, p.mcmcIters)
+          val (x, xh) = imputeWindow(net, p, st.mu, st.sd, endBucket, win)
           x(span - 1) = xh(span - 1)
-          val pred = muL + sdL * xh(span - 1)
+          val pred = st.mu + st.sd * xh(span - 1)
           // MC integration over sampled z (donut.py:1283-1292)
-          val rng = new scala.util.Random(seedL ^ endBucket)
+          val rng = new scala.util.Random(p.seed ^ endBucket)
           val h1 = new Array[Double](I); val h2 = new Array[Double](I)
           val zm = new Array[Double](L); val zl = new Array[Double](L)
-          localNet.encode(x, h1, h2, zm, zl)
+          net.encode(x, h1, h2, zm, zl)
           val g1 = new Array[Double](I); val g2 = new Array[Double](I)
           val dec = new Array[Double](span)
           val z = new Array[Double](L)
@@ -731,20 +722,15 @@ object DonutVae extends ModelType {
               z(kk) = zm(kk) + math.exp(0.5 * zl(kk)) * rng.nextGaussian()
               kk += 1
             }
-            localNet.decode(z, g1, g2, dec)
+            net.decode(z, g1, g2, dec)
             sum += dec(span - 1); sumSq += dec(span - 1) * dec(span - 1)
             s += 1
           }
           val meanD = sum / mcCount
           val stdD = math.sqrt(math.max(0.0, sumSq / mcCount - meanD * meanD))
-          val half = 3.0 * sdL * stdD
-          Row.fromSeq(r.toSeq ++ Seq(pred, pred - half, pred + half))
+          (pred, 3.0 * st.sd * stdD)
         }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      scored
-        .withColumn("score", Stats.anomalyScore(
-          col(valueCol), col("predicted"), col("upper"), anomalyType))
-        .drop("__win")
+      }
     }
 
     def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =

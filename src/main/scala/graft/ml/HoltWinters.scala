@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Stats
@@ -27,9 +27,10 @@ import graft.io.Json
   * collects the series to the driver (model-sized, same budget as every
   * profile/1-row-aggregate collect in this repo) and folds once.
   * Prediction and forecasting are pure per-bucket projections from the
-  * frozen end-of-training state (level + h·trend + season[slot] ± z·σ):
-  * a broadcast join of the m-row seasonal table onto the series — fully
-  * distributed, no extra shuffle, fleet-safe.
+  * frozen end-of-training state (level + h·trend + season[slot] ± z·σ),
+  * keyed: a fleet's states (one row per series, [[HoltWinters.train]])
+  * join the bucketed frame by key; a solo model is the one-row state
+  * with the empty key — fully distributed, no extra shuffle.
   */
 /** Smoothing constants. β defaults SMALL deliberately: with long seasonal
   * periods (m = 24, 168 …) the coupled level/trend/season system has
@@ -186,13 +187,67 @@ object HoltWinters {
       .toSeq.toDF("slot", "s")
   }
 
+  /** One key's trained state (mirrors [[HoltWintersState]]). */
+  private[ml] final case class KeyedState(k: Seq[String], level: Double,
+      trend: Double, sigma: Double, last_bucket: Long, season: Seq[Double])
+
+  private[ml] implicit val keyedStateEncoder: Encoder[KeyedState] =
+    Encoders.product[KeyedState]
+
+  private[ml] def keyedState(k: Seq[String], st: HoltWintersState) =
+    KeyedState(k, st.level, st.trend, st.sigma, st.lastBucket, st.season.toSeq)
+
+  /** Train one state per key from a bucketized frame `(keys…, bucket,
+    * valueCol)` (gaps as missing rows or null values — both roll the
+    * state exactly like [[fit]], which this reuses verbatim per key), in
+    * one Spark job ([[Keyed.fit]]). Returns
+    * `(keys…, level, trend, sigma, last_bucket, season)`. */
+  def train(bucketed: DataFrame, valueCol: String, keys: Seq[String],
+      p: HoltWintersParams): DataFrame =
+    Keyed.fit(bucketed, valueCol, keys, skip = None) { (k, series) =>
+      keyedState(k, fit(series, p))
+    }
+
   /** predicted = ℓ + h·b + s_slot with h = steps since the forecast
-    * origin — a pure projection usable on any bucketed frame. */
-  def predictedCol(st: HoltWintersState, p: HoltWintersParams,
-      bucket: Column, sCol: Column): Column = {
-    val h = ((bucket - lit(st.lastBucket)) / lit(p.bucketInterval)).cast("long")
-    lit(st.level) + h * lit(st.trend) + sCol
+    * origin, from the state columns. */
+  private def projection(p: HoltWintersParams): Column = {
+    val slot = (pmod(col("bucket"), lit(p.period)) / lit(p.bucketInterval))
+      .cast("long")
+    val h = ((col("bucket") - col("last_bucket")) / lit(p.bucketInterval))
+      .cast("long")
+    col("level") + h * col("trend") +
+      element_at(col("season"), (slot + 1).cast("int"))
   }
+
+  private def withBands(df: DataFrame, p: HoltWintersParams,
+      z: Double): DataFrame =
+    df.withColumn("predicted", projection(p))
+      .withColumn("lower", col("predicted") - lit(z) * col("sigma"))
+      .withColumn("upper", col("predicted") + lit(z) * col("sigma"))
+      .drop("level", "trend", "sigma", "last_bucket", "season")
+
+  /** Forecast every key over `[from, to)`: the bucket spine crosses the
+    * states (a narrow projection, no shuffle, no per-key driver work);
+    * `predicted = ℓ + h·b + season[slot]`, bands `± z·σ`. Output:
+    * `(keys…, bucket, predicted, lower, upper)`. */
+  def forecast(states: DataFrame, keys: Seq[String], from: Long, to: Long,
+      p: HoltWintersParams, z: Double = 3.0): DataFrame = {
+    val spine = states.sparkSession.range(from, to, p.bucketInterval)
+      .select(col("id").as("bucket"))
+    withBands(states.crossJoin(spine), p, z)
+      .select((keys.map(col) :+ col("bucket")) ++
+        Seq(col("predicted"), col("lower"), col("upper")): _*)
+  }
+
+  /** Score an observed bucketized frame against the states: join by key
+    * (`keys = Nil`: the one-row state crosses a single series), project
+    * predicted and bands, Φ-score. Keys without a state emit nothing. */
+  def predict(bucketed: DataFrame, states: DataFrame, valueCol: String,
+      keys: Seq[String], p: HoltWintersParams,
+      anomalyType: String = "low_high", z: Double = 3.0): DataFrame =
+    withBands(bucketed.join(states, keys), p, z)
+      .withColumn("score", Stats.anomalyScore(
+        col(valueCol), col("predicted"), col("upper"), anomalyType))
 }
 
 /** Registry wrapper: settings `{"type":"holtwinters","bucket_interval":N,
@@ -268,23 +323,14 @@ object HoltWintersType extends ModelType {
       p: HoltWintersParams, st: HoltWintersState) extends TrainedModel {
     val modelType: String = name
 
-    private def withBands(df: DataFrame, half: Column): DataFrame = {
-      val slot = (pmod(col("bucket"), lit(p.period)) / lit(p.bucketInterval))
-        .cast("long").as("slot")
-      df.withColumn("slot", slot)
-        .join(broadcast(profile), "slot")
-        .withColumn("predicted",
-          HoltWinters.predictedCol(st, p, col("bucket"), col("s")))
-        .withColumn("lower", col("predicted") - half)
-        .withColumn("upper", col("predicted") + half)
-        .drop("slot", "s")
-    }
+    /** The one-row state with the empty key. */
+    private def state(spark: SparkSession): DataFrame =
+      Keyed.soloState(spark, HoltWinters.keyedState(Nil, st))
 
     def predict(bucketed: DataFrame, valueCol: String,
         anomalyType: String = "low_high"): DataFrame =
-      withBands(bucketed, lit(3.0 * st.sigma))
-        .withColumn("score", Stats.anomalyScore(
-          col(valueCol), col("predicted"), col("upper"), anomalyType))
+      HoltWinters.predict(bucketed, state(bucketed.sparkSession), valueCol,
+        Nil, p, anomalyType)
 
     def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
       forecastCI(spark, from, to, 0.9973002039367398, 0.0)
@@ -292,21 +338,19 @@ object HoltWintersType extends ModelType {
     def forecastCI(spark: SparkSession, from: Long, to: Long,
         percentInterval: Double, percentNoise: Double): DataFrame = {
       val z = Stats.normPpf(1.0 - (1.0 - percentInterval) / 2.0)
-      val spine = spark.range(from, to, p.bucketInterval)
-        .select(col("id").as("bucket"))
       val noisePerStep = percentNoise * p.bucketInterval.toDouble / 86400.0
-      val half =
-        if (noisePerStep == 0.0) lit(z * st.sigma)
-        else lit(z * st.sigma) + lit(noisePerStep) *
-          ((col("bucket") - lit(from)) / lit(p.bucketInterval)).cast("long") *
-          abs(col("predicted"))
-      val base = withBands(spine, lit(z * st.sigma))
+      val base = HoltWinters.forecast(state(spark), Nil, from, to, p, z)
       val out =
         if (noisePerStep == 0.0) base
-        else base
-          .withColumn("lower", col("predicted") - half)
-          .withColumn("upper", col("predicted") + half)
-      out.select("bucket", "predicted", "lower", "upper").orderBy("bucket")
+        else {
+          val half = lit(z * st.sigma) + lit(noisePerStep) *
+            ((col("bucket") - lit(from)) / lit(p.bucketInterval)).cast("long") *
+            abs(col("predicted"))
+          base
+            .withColumn("lower", col("predicted") - half)
+            .withColumn("upper", col("predicted") + half)
+        }
+      out.orderBy("bucket")
     }
   }
 }

@@ -24,6 +24,14 @@ import graft.io.Json
   * Scale: train is one groupBy over O(period/interval) slots (tiny shuffle,
   * map-side partials); predict is a broadcast join of the profile (≤ a few
   * thousand rows) onto the bucketed series — no extra shuffle at 100 TB.
+  *
+  * Keyed: with `keys`, every series gets its OWN per-slot profile in the
+  * same single aggregation (one shuffle keyed by series+slot — the key the
+  * predict join needs), instead of one training job per series; the
+  * profile table is O(#series · period/interval) rows —
+  * data-scale-independent — and plugs straight into [[FleetScan]] /
+  * [[graft.streaming.StreamingEval.startFleet]] as the `score` function.
+  * A single series is the empty key (`keys = Nil`).
   */
 final case class SeasonalModelParams(
     bucketInterval: Long,
@@ -35,11 +43,14 @@ object SeasonalModel {
   def slotCol(bucket: Column, p: SeasonalModelParams): Column =
     (pmod(bucket, lit(p.period)) / lit(p.bucketInterval)).cast("long").as("slot")
 
-  /** Train: per-slot mean/σ_pop profile of `valueCol` over a bucketed
-    * series (σ=0→1 guard as in /root/reference/loudml/donut.py:644-650). */
-  def train(bucketed: DataFrame, valueCol: String, p: SeasonalModelParams): DataFrame =
+  /** Train: per-(key, slot) mean/σ_pop profile of `valueCol` over a
+    * bucketed frame (σ=0→1 guard as in loudml/donut.py:644-650).
+    * Returns
+    * `(keys…, slot, mu, sigma)`. */
+  def train(bucketed: DataFrame, valueCol: String, keys: Seq[String],
+      p: SeasonalModelParams): DataFrame =
     bucketed
-      .groupBy(slotCol(col("bucket"), p))
+      .groupBy((keys.map(col) :+ slotCol(col("bucket"), p)): _*)
       .agg(
         avg(col(valueCol)).as("mu"),
         coalesce(
@@ -47,19 +58,24 @@ object SeasonalModel {
             .otherwise(stddev_pop(col(valueCol))),
           lit(1.0)).as("sigma"))
 
-  /** Predict over a bucketed series: adds predicted / lower / upper
-    * (μ ± 3σ, matching the reference's 3-sigma bands,
+  /** Predict over a bucketed frame, each series against its OWN profile
+    * (join on keys + slot): adds predicted / lower / upper (μ ± 3σ,
+    * matching the reference's 3-sigma bands,
     * /root/reference/loudml/donut.py:1290-1296) and the 0..100 anomaly
-    * score (/root/reference/loudml/donut.py:899-924). */
+    * score (loudml/donut.py:899-924). A key absent from
+    * the profile (a host that appeared after training) emits nothing. A
+    * single series' profile (`keys = Nil`) is broadcast; a fleet's is
+    * O(#series) and joins by key. */
   def predict(
       bucketed: DataFrame,
       profile: DataFrame,
       valueCol: String,
+      keys: Seq[String],
       p: SeasonalModelParams,
       anomalyType: String = "low_high"): DataFrame = {
     val joined = bucketed
       .withColumn("slot", slotCol(col("bucket"), p))
-      .join(broadcast(profile), "slot")
+      .join(if (keys.isEmpty) broadcast(profile) else profile, keys :+ "slot")
     joined
       .withColumn("predicted", col("mu"))
       .withColumn("lower", col("mu") - lit(3.0) * col("sigma"))
@@ -168,8 +184,8 @@ object SeasonalModel {
       bucketInterval: Long, periods: Seq[Long]): (SeasonalModelParams, DataFrame) = {
     val scored = periods.map { period =>
       val p = SeasonalModelParams(bucketInterval, period)
-      val profile = SeasonalModel.train(train, valueCol, p)
-      val err = mse(predict(valid, profile, valueCol, p), valueCol)
+      val profile = SeasonalModel.train(train, valueCol, Nil, p)
+      val err = mse(predict(valid, profile, valueCol, Nil, p), valueCol)
         .collect()(0).getDouble(0)
       (p, profile, err)
     }
@@ -197,7 +213,7 @@ object SeasonalModelType extends ModelType {
 
   def train(bucketed: DataFrame, valueCol: String, settingsJson: String): TrainedModel =
     new TrainedSeasonal(
-      SeasonalModel.train(bucketed, valueCol, parseParams(settingsJson)),
+      SeasonalModel.train(bucketed, valueCol, Nil, parseParams(settingsJson)),
       parseParams(settingsJson))
 
   def load(spark: SparkSession, profile: DataFrame, settingsJson: String): TrainedModel =
@@ -211,7 +227,7 @@ object SeasonalModelType extends ModelType {
         s""""period":${p.period}}"""
     def predict(bucketed: DataFrame, valueCol: String,
         anomalyType: String = "low_high"): DataFrame =
-      SeasonalModel.predict(bucketed, profile, valueCol, p, anomalyType)
+      SeasonalModel.predict(bucketed, profile, valueCol, Nil, p, anomalyType)
     def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
       SeasonalModel.forecast(spark, profile, from, to, p)
     def forecastCI(spark: SparkSession, from: Long, to: Long,

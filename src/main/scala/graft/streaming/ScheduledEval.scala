@@ -21,7 +21,7 @@ import graft.ml.{AnomalyScan, Hook, Hooks, RunState, TrainedModel}
   * and the caller's scheduler — cron, Airflow, a Structured Streaming
   * `foreachBatch` with `Trigger.ProcessingTime(interval)` — owns the
   * clock. Everything inside is plan-building plus O(window) collects
-  * (event rows + a 1-row state aggregate): no data-scale driver work.
+  * (event rows + the scanned window): no data-scale driver work.
   */
 final case class EvalParams(
     interval: Long,               // trigger period, model.interval
@@ -58,13 +58,14 @@ class ScheduledEval(
       .cache() // scanned feeds events + state + caller; tiny (one window)
     try {
       Hooks.dispatch(scanned, hooks, valueCol)
-      StateStore.save(stateRoot, modelName, RunState.fromScan(scanned, before))
       // hand the caller a LOCAL copy (one eval window — O(buckets) rows)
       // and release the cached plan: a scheduled loop must not accumulate
-      // one pinned storage-memory block per trigger forever
-      val spark = scanned.sparkSession
-      spark.createDataFrame(
-        java.util.Arrays.asList(scanned.collect(): _*), scanned.schema)
+      // one pinned storage-memory block per trigger forever; the new run
+      // state folds over the same rows, no extra job
+      val rows = scanned.collect()
+      StateStore.save(stateRoot, modelName, RunState.fold(rows, before))
+      scanned.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*), scanned.schema)
     } finally scanned.unpersist()
   }
 

@@ -121,10 +121,10 @@ class AutoencoderSpec extends SparkSpec {
       "db1" -> amSeries(10, seed = 5).map(t => (t._1, t._2 + 8.0)))
     val df = fleet.flatMap { case (h, s) => s.map(x => (h, x._1, x._2)) }
       .toDF("host", "bucket", "value")
-    val states = FleetAutoencoder.train(df, "value", Seq("host"), p)
+    val states = AutoencoderReconstructor.train(df, "value", Seq("host"), p)
     assert(states.count() == 3)
 
-    val scoredAll = FleetAutoencoder.predict(df, states, "value",
+    val scoredAll = AutoencoderReconstructor.predict(df, states, "value",
       Seq("host"), p)
     for ((h, s) <- fleet) {
       val solo = AutoencoderReconstructor.train(
@@ -150,7 +150,7 @@ class AutoencoderSpec extends SparkSpec {
     // a key with points but no trained state scores nothing
     val extra = df.union(Seq(("ghost", 0L, 1.0), ("ghost", HOUR, 2.0))
       .toDF("host", "bucket", "value"))
-    val got = FleetAutoencoder.predict(extra, states, "value",
+    val got = AutoencoderReconstructor.predict(extra, states, "value",
       Seq("host"), p)
     assert(got.filter(col("host") === "ghost").count() == 0)
     assert(got.count() == scoredAll.count())
@@ -166,7 +166,7 @@ class AutoencoderSpec extends SparkSpec {
         (0 until 48).map(h => ("ghost", h * HOUR, null.asInstanceOf[Any])))
       .map { case (h, b, v) => (h, b, v.asInstanceOf[java.lang.Double]) }
       .toDF("host", "bucket", "value")
-    val states = FleetAutoencoder.train(df, "value", Seq("host"), p)
+    val states = AutoencoderReconstructor.train(df, "value", Seq("host"), p)
     // one healthy key fits; the two degenerate keys skip without
     // aborting the job (the skip count rides the named accumulator
     // `graft.fleetAe.skippedKeys`, visible in the UI/status store)

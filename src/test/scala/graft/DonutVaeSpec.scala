@@ -141,10 +141,10 @@ class DonutVaeSpec extends SparkSpec {
     val df = (fleet.flatMap { case (h, s) => s.map(x => (h, x._1, x._2)) } ++
         Seq(("shorty", 0L, 1.0), ("shorty", HOUR, 2.0))) // < span buckets
       .toDF("host", "bucket", "value")
-    val states = FleetDonutVae.train(df, "value", Seq("host"), p)
+    val states = DonutVae.train(df, "value", Seq("host"), p)
     assert(states.select("host").as[String].collect().sorted.toSeq ==
       Seq("web1", "web2")) // shorty skipped, not fatal
-    val scoredAll = FleetDonutVae.predict(df, states, "value", Seq("host"), p)
+    val scoredAll = DonutVae.predict(df, states, "value", Seq("host"), p)
     assert(scoredAll.filter(col("host") === "shorty").count() == 0)
     for ((h, s) <- fleet) {
       val solo = DonutVae.train(s.toDF("bucket", "value"), "value", p)

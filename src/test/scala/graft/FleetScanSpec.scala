@@ -185,7 +185,7 @@ class FleetScanSpec extends SparkSpec {
   test("FleetSeasonal: one-pass keyed profiles ≡ per-key SeasonalModel; " +
       "each host scored against its OWN baseline in streaming fleet eval") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.ml.{FleetSeasonal, SeasonalModel, SeasonalModelParams}
+    import graft.ml.{SeasonalModel, SeasonalModelParams}
     import graft.streaming.StreamingEval
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -196,11 +196,11 @@ class FleetScanSpec extends SparkSpec {
     val train = (for (h <- Seq("a", "b"); t <- 0 until 240)
       yield (h, t * 10L, level(h, (t % 4).toLong))).toDF("host", "bucket", "value")
 
-    val fleetProfile = FleetSeasonal.train(train, "value", Seq("host"), p)
+    val fleetProfile = SeasonalModel.train(train, "value", Seq("host"), p)
     // equivalence: the one-pass keyed profile equals training each key alone
     for (h <- Seq("a", "b")) {
       val solo = SeasonalModel.train(
-        train.filter(col("host") === h), "value", p)
+        train.filter(col("host") === h), "value", Nil, p)
         .orderBy("slot").collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
       val keyed = fleetProfile.filter(col("host") === h)
         .select("slot", "mu", "sigma").orderBy("slot").collect()
@@ -223,7 +223,7 @@ class FleetScanSpec extends SparkSpec {
       graft.streaming.EvalParams(interval = 10L, offset = 0L,
         bucketInterval = 10L, maxThreshold = 99.7, minThreshold = 68.0),
       stateRoot, "fs1", Seq("host"), checkpointDir = ckpt,
-      score = Some(df => FleetSeasonal.predict(df, fleetProfile, "value",
+      score = Some(df => SeasonalModel.predict(df, fleetProfile, "value",
         Seq("host"), p)),
       onBatch = b => got ++= b.orderBy("host", "bucket").collect().map(r =>
         (r.getString(r.fieldIndex("host")), r.getLong(r.fieldIndex("bucket")),

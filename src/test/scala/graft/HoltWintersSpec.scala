@@ -152,7 +152,6 @@ class HoltWintersSpec extends SparkSpec {
   }
 
   test("fleet training: per-key state identical to each series fit alone") {
-    import graft.ml.FleetHoltWinters
     val p = HoltWintersParams(bucketInterval = H, period = 86400L,
       alpha = 0.3, beta = 0.01, gamma = 0.3)
     // two keys with different shapes, plus a gap in one of them
@@ -161,7 +160,7 @@ class HoltWintersSpec extends SparkSpec {
       case ((bk, v)) if (bk / H) % 31 != 0 => ("b", bk, v * 0.5 + 7)
     }
     val df = (a ++ b).toDF("k", "bucket", "v")
-    val states = FleetHoltWinters.train(df, "v", Seq("k"), p)
+    val states = HoltWinters.train(df, "v", Seq("k"), p)
       .collect().map(r => r.getString(0) -> r).toMap
     for ((key, rows) <- Seq("a" -> a, "b" -> b)) {
       val solo = HoltWinters.fit(
@@ -176,13 +175,12 @@ class HoltWintersSpec extends SparkSpec {
   }
 
   test("fleet forecast matches the solo projection per key and bucket") {
-    import graft.ml.FleetHoltWinters
     val p = HoltWintersParams(bucketInterval = H, period = 86400L)
     val a = synth(4).map { case (b, v) => ("a", b, v) }
     val df = a.toDF("k", "bucket", "v")
-    val states = FleetHoltWinters.train(df, "v", Seq("k"), p)
+    val states = HoltWinters.train(df, "v", Seq("k"), p)
     val from = 4L * 86400L
-    val fc = FleetHoltWinters.forecast(states, Seq("k"), from, from + 6 * H, p)
+    val fc = HoltWinters.forecast(states, Seq("k"), from, from + 6 * H, p)
       .orderBy("bucket").collect()
     val solo = HoltWinters.fit(
       a.map { case (_, b, v) => (b, Some(v)) }, p)

@@ -207,7 +207,7 @@ class ModelSpec extends SparkSpec {
     val s2 = sinSeries(240, HOUR, seed = 10).map { case (ts, v) =>
       (ts + 240 * HOUR, v) }
     val p = SeasonalModelParams(bucketInterval = HOUR)
-    val full = SeasonalModel.train((s1 ++ s2).toDF("bucket", "value"), "value", p)
+    val full = SeasonalModel.train((s1 ++ s2).toDF("bucket", "value"), "value", Nil, p)
       .orderBy("slot").collect()
     val merged = SeasonalModel.statsToProfile(SeasonalModel.mergeStats(
       SeasonalModel.trainStats(s1.toDF("bucket", "value"), "value", p),
@@ -243,5 +243,25 @@ class ModelSpec extends SparkSpec {
     assert(Seq("predicted", "lower", "upper", "score")
       .forall(out.columns.contains))
     assert(m.forecast(spark, 720L * HOUR, 744L * HOUR).count() == 24)
+  }
+
+  test("every registered model's solo predict keeps its output contract: " +
+      "every input column by name plus predicted/lower/upper/score, one " +
+      "row per input bucket") {
+    val series = sinSeries(96, HOUR, seed = 21).zipWithIndex
+      .map { case ((b, v), i) => (b, v, i.toLong) }
+      .toDF("bucket", "value", "count")
+    val passthrough = series.select("bucket", "count").as[(Long, Long)]
+      .collect().toMap
+    for (name <- ModelRegistry.names) withClue(name) {
+      val m = ModelRegistry(name).train(series, "value",
+        s"""{"type":"$name","bucket_interval":$HOUR,"epochs":2}""")
+      val out = m.predict(series, "value")
+      assert((series.columns ++ Seq("predicted", "lower", "upper", "score"))
+        .forall(out.columns.contains), out.columns.mkString(","))
+      val got = out.select("bucket", "count").as[(Long, Long)].collect()
+      assert(got.length == passthrough.size)
+      assert(got.toMap == passthrough)
+    }
   }
 }

@@ -343,6 +343,22 @@ class PipelineOpsSpec extends SparkSpec {
     assert(bad === Map(2L -> "missing"))
   }
 
+  test("Publish.writeShards: a nondeterministic input publishes data " +
+      "its manifest covers (the data and manifest writes see one " +
+      "materialization)") {
+    import graft.io.Publish
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_publish_nondet").toString
+    // an unseeded random draw per evaluation: every re-execution of
+    // the input yields new text
+    val noise = udf(() => scala.util.Random.nextLong().toString)
+      .asNondeterministic()
+    val docs = spark.range(1L, 201L).select(col("id").as("doc_id"),
+      concat(lit("body "), noise()).as("text"))
+    Publish.writeShards(docs, "doc_id", "text", dir, shards = 4)
+    assert(Publish.verifyShards(spark, dir, "doc_id", "text").count() === 0L)
+  }
+
   test("Publish.verifyShards: the modulus comes from the layout " +
       "artifact, so empty top-numbered shards (tiny corpus, many " +
       "shards) verify clean instead of spuriously corrupt") {
@@ -1578,8 +1594,8 @@ class PipelineOpsSpec extends SparkSpec {
     val buckets = (0 until 16).map(i => (i * 21600L, (i % 4) * 10.0))
       .toDF("bucket", "observed")
     val p = SeasonalModelParams(bucketInterval = 21600L)
-    val profile = SeasonalModel.train(buckets, "observed", p)
-    val pred = SeasonalModel.predict(buckets, profile, "observed", p)
+    val profile = SeasonalModel.train(buckets, "observed", Nil, p)
+    val pred = SeasonalModel.predict(buckets, profile, "observed", Nil, p)
     val rows = pred.orderBy("bucket").collect()
     assert(rows.forall(r =>
       r.getDouble(r.fieldIndex("observed")) == r.getDouble(r.fieldIndex("predicted"))))

@@ -114,6 +114,22 @@ class ScheduledEvalSpec extends SparkSpec {
     assert(StateStore.load(root, "x") == RunState.empty)
   }
 
+  test("run state from a scanned window: an empty window keeps the " +
+      "state before it; a trailing end advances lastEndTs and closes") {
+    val before = RunState(open = true, lastEndTs = Some(5L), episodeMax = 99.8)
+    def window(rows: Seq[(Long, String, java.lang.Double)]): DataFrame =
+      rows.toDF("bucket", "anomaly", "episode_max")
+    val empty = window(Nil)
+    assert(RunState.fromScan(empty, before) == before)
+    assert(RunState.fold(empty.collect(), before) == before)
+    // the episode ends mid-window; the rows after it carry no marker
+    val ended = window(Seq((30L, null, null), (10L, "ongoing", 99.9),
+      (20L, "end", 99.9)))
+    val want = RunState(open = false, lastEndTs = Some(20L), episodeMax = 0.0)
+    assert(RunState.fromScan(ended, before) == want)
+    assert(RunState.fold(ended.collect(), before) == want)
+  }
+
   test("streaming eval: watermarked windows, anomaly spanning two " +
       "micro-batches fires one start + one end (SURVEY §2.9)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
