@@ -15,7 +15,10 @@ fetchall-based check; this version fails them locally:
   - oracle-vs-spark pandas dtype *kinds* must agree per column
     (float vs int is the hazard; datetime tick resolution is not).
 
-Usage: python3 scripts/check.py <sfDir> <verifyOutDir>
+Usage: python3 scripts/check.py <sfDir> <verifyOutDir> [q1,q2,...]
+
+The optional third argument (the same comma-separated list `graft.Verify`
+takes) checks only those queries; a name with no oracle entry fails.
 """
 import glob, json, math, sys
 import duckdb
@@ -50,12 +53,17 @@ def dtype_mismatches(exp_df, got_df):
             bad.append((col, str(exp_df[col].dtype), str(got_df[col].dtype)))
     return bad
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    if only is not None:
+        for name in sorted(set(only) - oracle.keys()):
+            print(f"FAIL {name}: no oracle entry")
+            n_fail += 1
+        oracle = {k: v for k, v in oracle.items() if k in only}
     for name, sql in sorted(oracle.items()):
         try:
             rel = con.sql(sql)
@@ -116,4 +124,5 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    only = [n for n in sys.argv[3].split(",") if n] if len(sys.argv) > 3 else None
+    sys.exit(main(sys.argv[1], sys.argv[2], only))

@@ -2,10 +2,10 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ml.{Annotations, AnomalyScan, Constraints, Hook, ModelRegistry, TrainedModel}
+import graft.ml.{Annotations, Constraints, Hook, ModelRegistry, TrainedModel}
 import graft.operators.{ConstFill, Feature, Fill, NoFill, PreviousFill, TimesQuery}
 import graft.sources.BucketRegistry
-import graft.streaming.{EvalParams, ScheduledEval}
+import graft.streaming.{EvalParams, EvalStep, ScheduledEval}
 
 /** Model settings — the reference's settings dict
   * (/root/reference/loudml/model.py:207-264: name, type, features[],
@@ -234,23 +234,26 @@ class Engine(
   def evalModel(name: String, from: String, to: String,
       detectAnomalies: Boolean = true, bucket: Option[String] = None,
       nowEpoch: Long = System.currentTimeMillis() / 1000): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val s = getModel(name)
+    val p = evalParams(s)
     val f = DateMath.parseTs(from, nowEpoch).toLong
     val t = DateMath.parseTs(to, nowEpoch).toLong
     val model = loadTrained(name)
-    // context reaches back 2 seasonal periods so window models have
-    // their phase-aligned lags (donut.py:1210-1217 extends by span)
-    val scored = model.predict(
-      series(s, bucketOf(s, bucket), f - 2 * s.period, t),
-      inputFeature(s).name, inputFeature(s).anomalyType)
-      .filter(col("bucket") >= f && col("bucket") < t)
-    if (!detectAnomalies) scored
-    else AnomalyScan.scan(
-      scored.withColumn("score", coalesce(col("score"), lit(0.0))),
-      maxThreshold = s.maxThreshold, minThreshold = s.minThreshold,
-      gracePeriodSec = s.gracePeriod)
+    val scored = EvalStep.predict(model,
+      series(s, bucketOf(s, bucket), f - p.contextSec, t),
+      inputFeature(s).name, p, f, t)
+    if (!detectAnomalies) scored else EvalStep.scan(scored, p)
   }
+
+  /** A model's eval settings, shared by `_eval` and `_start`. The lag
+    * context reaches back 2 seasonal periods so window models have their
+    * phase-aligned lags (donut.py:1210-1217 extends by span). */
+  private def evalParams(s: ModelSettings): EvalParams =
+    EvalParams(interval = s.interval, offset = s.offset,
+      bucketInterval = s.bucketInterval,
+      maxThreshold = s.maxThreshold, minThreshold = s.minThreshold,
+      gracePeriodSec = s.gracePeriod, contextSec = 2 * s.period,
+      anomalyType = inputFeature(s).anomalyType)
 
   /** `_forecast` with optional `feature:low|high:threshold` constraint;
     * returns the bands and the first constraint violation if any.
@@ -297,11 +300,8 @@ class Engine(
       new ScheduledEval(
         loadTrained(name),
         (from, to) => series(s, b, from, to),
-        EvalParams(interval = s.interval, offset = s.offset,
-          bucketInterval = s.bucketInterval,
-          maxThreshold = s.maxThreshold, minThreshold = s.minThreshold,
-          gracePeriodSec = s.gracePeriod, contextSec = 2 * s.period),
-        storageRoot, name, hooksOf(name) ++ hooks, inputFeature(s).name)
+        evalParams(s), storageRoot, name, hooksOf(name) ++ hooks,
+        inputFeature(s).name)
     })
 
   /** `_stop` (server.py:1629-1674): deregister the scheduled loop. The

@@ -1,7 +1,7 @@
 package graft.io
 
-import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException,
-  Files, NoSuchFileException, Path, StandardCopyOption}
+import java.nio.file.{FileSystemException, Files, NoSuchFileException, Path,
+  StandardCopyOption}
 import java.util.UUID
 
 /** Everything the daemon keeps on disk is written here — the
@@ -92,8 +92,10 @@ object Durable {
       val won =
         try { Files.move(stage, path(v), StandardCopyOption.ATOMIC_MOVE); true }
         catch {
-          case _: DirectoryNotEmptyException | _: FileAlreadyExistsException =>
-            false
+          // rename(2) onto a non-empty directory fails with EEXIST or
+          // ENOTEMPTY; the JDK types only the first, so a lost race is
+          // any failure with the number taken
+          case _: FileSystemException if Files.exists(path(v)) => false
         }
       if (won) v else claim(stage, v + 1)
     }

@@ -200,12 +200,16 @@ object HoltWinters {
   /** Train one state per key from a bucketized frame `(keys…, bucket,
     * valueCol)` (gaps as missing rows or null values — both roll the
     * state exactly like [[fit]], which this reuses verbatim per key), in
-    * one Spark job ([[Keyed.fit]]). Returns
+    * one Spark job ([[Keyed.fit]]). A key with no observation (empty or
+    * all-null) is skipped and counted in the named accumulator
+    * `graft.fleetHw.skippedKeys`. Returns
     * `(keys…, level, trend, sigma, last_bucket, season)`. */
   def train(bucketed: DataFrame, valueCol: String, keys: Seq[String],
       p: HoltWintersParams): DataFrame =
-    Keyed.fit(bucketed, valueCol, keys, skip = None) { (k, series) =>
-      keyedState(k, fit(series, p))
+    Keyed.fit(bucketed, valueCol, keys, Some(Keyed.Skip(
+        "graft.fleetHw.skippedKeys", s => s.forall(_._2.isEmpty)))) {
+      (k, series) =>
+        keyedState(k, fit(series, p))
     }
 
   /** predicted = ℓ + h·b + s_slot with h = steps since the forecast

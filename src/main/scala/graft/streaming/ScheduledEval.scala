@@ -5,24 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.ml.{AnomalyScan, Hook, Hooks, RunState, TrainedModel}
 
-/** Scheduled near-real-time evaluation — the reference's production mode
-  * (`_start`, /root/reference/loudml/server.py:1559-1580): every
-  * `interval` seconds, predict + detect over the window
-  * `[now − offset − interval, now − offset[`, where `offset` is the
-  * allowed data latency (the watermark analog) and `interval` the trigger
-  * period. The anomaly run state persists between invocations
-  * (/root/reference/loudml/worker.py:255-263 saves it after every run;
-  * /root/reference/loudml/server.py:1821-1843 restores scheduled jobs at
-  * boot), so an anomaly spanning two eval windows fires exactly one start
-  * and one end.
-  *
-  * This is deliberately micro-batch (the reference is a scheduler POSTing
-  * `_eval`, not a stream processor): [[evalOnce]] is one trigger firing,
-  * and the caller's scheduler — cron, Airflow, a Structured Streaming
-  * `foreachBatch` with `Trigger.ProcessingTime(interval)` — owns the
-  * clock. Everything inside is plan-building plus O(window) collects
-  * (event rows + the scanned window): no data-scale driver work.
-  */
+/** A model's eval settings (loudml/model.py:207-264):
+  * trigger period, allowed data latency, thresholds, grace, the lag
+  * context fetched before a window and the input feature's
+  * `anomaly_type`. */
 final case class EvalParams(
     interval: Long,               // trigger period, model.interval
     offset: Long,                 // data-latency allowance (watermark)
@@ -30,8 +16,26 @@ final case class EvalParams(
     maxThreshold: Double = 99.7,
     minThreshold: Double = 68.0,
     gracePeriodSec: Long = 0L,
-    contextSec: Long = 2 * 86400L) // lag context fetched before the window
+    contextSec: Long = 2 * 86400L, // lag context fetched before the window
+    anomalyType: String = "low_high") { // scored direction of the input feature
 
+  /** The watermark at wall clock `now`: `now − offset` floored to the
+    * bucket grid. Every bucket below it is closed (`b + bucketInterval ≤
+    * now − offset`, the reference scheduler's window rule,
+    * loudml/server.py:1559-1580). */
+  def closedEdge(now: Long): Long = {
+    val n = now - offset
+    n - Math.floorMod(n, bucketInterval)
+  }
+}
+
+/** Scheduled near-real-time evaluation — the reference's `_start`
+  * (loudml/server.py:1559-1580): each trigger runs
+  * [[EvalStep.run]] over `[closedEdge(now) − interval, closedEdge(now)[`,
+  * resuming the persisted run state, so an anomaly spanning two eval
+  * windows fires exactly one start and one end. The caller's scheduler
+  * (cron, a `foreachBatch`, [[graft.api.ScheduledJobs]]) owns the clock;
+  * [[evalOnce]] is one firing. */
 class ScheduledEval(
     model: TrainedModel,
     fetch: (Long, Long) => DataFrame, // [from,to[ → spine-complete series
@@ -41,39 +45,65 @@ class ScheduledEval(
     hooks: Seq[Hook] = Nil,
     valueCol: String = "value") {
 
-  /** One trigger firing at wall-clock `now`: score the eval window,
-    * resume the hysteresis scan from the persisted [[RunState]], fire
-    * hooks for start/end events, persist the new state, return the
-    * scanned window. */
+  /** One trigger firing at wall-clock `now`; returns the scanned window
+    * as a local frame. */
   def evalOnce(now: Long): DataFrame = {
-    val to = alignFloor(now - params.offset)
+    val to = params.closedEdge(now)
     val from = to - alignCeil(params.interval)
-    val scored = model.predict(fetch(from - params.contextSec, to), valueCol)
-      .filter(col("bucket") >= from && col("bucket") < to)
-      .withColumn("score", coalesce(col("score"), lit(0.0)))
-    val before = StateStore.load(stateRoot, modelName)
-    val scanned = AnomalyScan.scan(scored,
-      maxThreshold = params.maxThreshold, minThreshold = params.minThreshold,
-      gracePeriodSec = params.gracePeriodSec, initial = before)
-      .cache() // scanned feeds events + state + caller; tiny (one window)
-    try {
-      Hooks.dispatch(scanned, hooks, valueCol)
-      // hand the caller a LOCAL copy (one eval window — O(buckets) rows)
-      // and release the cached plan: a scheduled loop must not accumulate
-      // one pinned storage-memory block per trigger forever; the new run
-      // state folds over the same rows, no extra job
-      val rows = scanned.collect()
-      StateStore.save(stateRoot, modelName, RunState.fold(rows, before))
-      scanned.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), scanned.schema)
-    } finally scanned.unpersist()
+    EvalStep.run(model, fetch(from - params.contextSec, to), valueCol, params,
+      from, to, stateRoot, modelName, hooks)
   }
 
-  private def alignFloor(ts: Long): Long =
-    ts - Math.floorMod(ts, params.bucketInterval)
   private def alignCeil(d: Long): Long = {
     val r = Math.floorMod(d, params.bucketInterval)
     if (r == 0) d else d + params.bucketInterval - r
+  }
+}
+
+/** The single-series eval step — the reference scores a window with the
+  * same `predict` + `detect_anomalies` code on every path
+  * (loudml/donut.py:1477-1578): `_eval`
+  * ([[graft.api.Engine.evalModel]]) uses the stateless [[predict]] +
+  * [[scan]]; `_start` ([[ScheduledEval]]) and the solo stream
+  * ([[StreamingEval.start]], [[StreamingEval.tick]]) use the stateful
+  * [[run]]. The fleet stream keeps its own distributed core: its run
+  * state is a keyed parquet table ([[graft.ml.FleetScan]]). */
+object EvalStep {
+
+  /** Score `series` with the input feature `feature` and the params'
+    * anomaly type; keep `[from, to[`. */
+  def predict(model: TrainedModel, series: DataFrame, feature: String,
+      params: EvalParams, from: Long, to: Long): DataFrame =
+    model.predict(series, feature, params.anomalyType)
+      .filter(col("bucket") >= from && col("bucket") < to)
+
+  /** Hysteresis scan of a predicted window resumed from `initial`; a
+    * bucket without a score scans as 0. */
+  def scan(predicted: DataFrame, params: EvalParams,
+      initial: RunState = RunState.empty): DataFrame =
+    AnomalyScan.scan(
+      predicted.withColumn("score", coalesce(col("score"), lit(0.0))),
+      maxThreshold = params.maxThreshold, minThreshold = params.minThreshold,
+      gracePeriodSec = params.gracePeriodSec, initial = initial)
+
+  /** The stateful step: predict and scan `[from, to[` from the persisted
+    * [[RunState]], collect the window once (O(buckets) rows), fire hooks
+    * from those rows in bucket order, persist the state folded over the
+    * same rows, and return them as a local frame: the hooks and the
+    * state start no Spark job, and nothing stays cached per trigger. */
+  def run(model: TrainedModel, series: DataFrame, feature: String,
+      params: EvalParams, from: Long, to: Long, stateRoot: String,
+      modelName: String, hooks: Seq[Hook]): DataFrame = {
+    val before = StateStore.load(stateRoot, modelName)
+    val scanned = scan(predict(model, series, feature, params, from, to),
+      params, before)
+    // a single-series scan is one partition sorted by bucket, so the
+    // collected rows are in bucket order
+    val rows = scanned.collect()
+    Hooks.fire(rows.iterator, hooks, feature)
+    StateStore.save(stateRoot, modelName, RunState.fold(rows, before))
+    scanned.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), scanned.schema)
   }
 }
 

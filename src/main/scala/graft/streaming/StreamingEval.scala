@@ -5,56 +5,33 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.Metrics
-import graft.ml.{AnomalyScan, Hook, Hooks, RunState, TrainedModel}
+import graft.ml.{Hook, Hooks, TrainedModel}
 
-/** Structured Streaming variant of the near-real-time eval (SURVEY §2.9):
-  * where [[ScheduledEval]] replays the reference's scheduler-POSTs-_eval
-  * micro-batching verbatim, this maps the same semantics onto Spark's
-  * native streaming primitives —
+/** Structured Streaming eval (SURVEY §2.9): the model's `offset` becomes
+  * `withWatermark(offset)`, so append-mode windowed aggregation emits a
+  * bucket only once late data can no longer change it, and `interval`
+  * becomes the trigger. Two cores, both run once per micro-batch in
+  * `foreachBatch`:
   *
-  *  - model `interval` (trigger cadence, loudml/donut.py:502,519-520) →
-  *    `Trigger.ProcessingTime(interval)`;
-  *  - model `offset` (allowed data latency, donut.py:503,521) →
-  *    `withWatermark(offset)`: a bucket emits once the watermark passes
-  *    its end, exactly the "don't evaluate a window that late data may
-  *    still change" guard the reference implements by evaluating
-  *    `[now-offset-interval, now-offset[`;
-  *  - the incomplete-last-bucket caveat (elastic.py:573-603's
-  *    commented-out interpolation) disappears: append-mode windowed
-  *    aggregation only ever emits closed buckets;
-  *  - anomaly run state across micro-batches → the same persisted
-  *    [[StateStore]] the batch path uses, so an anomaly spanning two
-  *    micro-batches fires exactly one start and one end, and batch and
-  *    streaming paths cannot drift semantically.
-  *
-  * The scan runs in `foreachBatch` rather than `flatMapGroupsWithState`:
-  * each emitted micro-batch holds a handful of closed buckets
-  * (model-sized), the state machine is the SAME code as the batch path,
-  * and hooks/state persistence happen exactly once per batch. The
-  * heavy lifting — the windowed aggregation over the raw point stream —
-  * stays fully distributed with map-side partial aggregation.
+  *  - the solo stream ([[start]], [[tick]]) runs the same
+  *    [[EvalStep.run]] as `_start`, with the same JSON [[StateStore]], so
+  *    batch and stream cannot drift; it adds only what is specific to a
+  *    stream — the gap spine from the persisted high-water mark and the
+  *    lag-context rows ([[BucketHistory]]);
+  *  - the fleet stream ([[startFleet]], [[fleetTick]]) stays distributed:
+  *    its run state is a keyed parquet table, O(#series)
+  *    ([[graft.ml.FleetScan]]), and its hooks stream O(episodes) through
+  *    `toLocalIterator`.
   */
 object StreamingEval {
 
-  /** Tumbling-window bucketed aggregation over a streaming points frame:
-    * epoch-aligned `interval`-second windows labeled by LEFT edge, late
-    * data admitted up to `offsetSec`. Append mode ⇒ only closed buckets
-    * flow downstream. */
-  def bucketize(points: DataFrame, tsCol: String, valueCol: String,
-      interval: Long, offsetSec: Long, metric: String = "avg"): DataFrame =
-    points
-      .withWatermark(tsCol, s"$offsetSec seconds")
-      .groupBy(window(col(tsCol), s"$interval seconds"))
-      // approx tier: single-pass mergeable aggregates (the streaming
-      // setting is the 100 TB setting)
-      .agg(Metrics.agg(metric, col(valueCol), exact = false)
-        .cast("double").as("value"))
-      .select(unix_timestamp(col("window.start")).as("bucket"), col("value"))
-
-  /** Keyed variant of [[bucketize]]: per-(series, window) tumbling
-    * aggregation — the fleet input shape. Same watermark/append
-    * semantics; the shuffle is keyed by (series ++ window), so a million
-    * series aggregate in parallel with map-side partials. */
+  /** Per-(series, window) tumbling aggregation over a streaming points
+    * frame: epoch-aligned `interval`-second windows labeled by LEFT edge,
+    * late data admitted up to `offsetSec`; append mode ⇒ only closed
+    * buckets flow downstream. Output `(keys…, bucket, value)`;
+    * `seriesKeys = Nil` is one series. The shuffle is keyed by (series ++
+    * window), so a million series aggregate in parallel with map-side
+    * partials. */
   def bucketizeKeyed(points: DataFrame, tsCol: String, valueCol: String,
       seriesKeys: Seq[String], interval: Long, offsetSec: Long,
       metric: String = "avg"): DataFrame =
@@ -62,6 +39,8 @@ object StreamingEval {
       .withWatermark(tsCol, s"$offsetSec seconds")
       .groupBy((seriesKeys.map(col) :+
         window(col(tsCol), s"$interval seconds")): _*)
+      // approx tier: single-pass mergeable aggregates (the streaming
+      // setting is the 100 TB setting)
       .agg(Metrics.agg(metric, col(valueCol), exact = false)
         .cast("double").as("value"))
       .select((seriesKeys.map(col) :+
@@ -142,9 +121,7 @@ object StreamingEval {
       fill: Double = 0.0,
       now: Long,
       onBatch: DataFrame => Unit = _ => ()): Unit = {
-    val bi = params.bucketInterval
-    val n = now - params.offset
-    val closed = n - Math.floorMod(n, bi) - bi
+    val closed = params.closedEdge(now) - params.bucketInterval
     val fields = seriesKeys.map(k => org.apache.spark.sql.types.StructField(k,
       org.apache.spark.sql.types.StringType)) ++ Seq(
       org.apache.spark.sql.types.StructField("bucket",
@@ -198,46 +175,30 @@ object StreamingEval {
     }
   }
 
-  /** Start the scored + scanned stream. Each micro-batch of closed
-    * buckets is SPINE-COMPLETED, extended with lag context, scored by
-    * `model`, scanned with the hysteresis machine resumed from
-    * [[StateStore]], hooks fire on start/end, the new state persists, and
-    * `onBatch` receives the scanned (cached, small) frame.
+  /** Start the solo stream. Each micro-batch of closed buckets is
+    * SPINE-COMPLETED, extended with lag context and run through
+    * [[EvalStep.run]] (score, scan resumed from [[StateStore]], hooks,
+    * state); `onBatch` receives the scanned window as a local frame.
     *
-    * Gap materialization (the batch path's empty-bucket semantics,
-    * /root/reference/loudml/elastic.py:488-500): append-mode windowed
-    * aggregation emits only NON-EMPTY closed windows, so without spine
-    * completion a silent source — the classic "traffic dropped to zero"
-    * anomaly that gap materialization exists to catch — produces no
-    * buckets and no anomaly. Here every bucket between the persisted
-    * high-water mark and the newest watermark-closed bucket is emitted,
-    * missing ones synthesized with `fill` (the count=0 / default-fill
-    * analog): when data resumes after a gap, the skipped buckets are
-    * filled retroactively IN ORDER before the resuming bucket, so the
-    * hysteresis machine sees the outage. This is race-free: append mode
-    * releases every closed window with data in watermark order, so a
-    * bucket absent from the batch output yet older than the newest
-    * released one can never receive data later (it would be dropped as
-    * late). Synthesis starts only after the first observed bucket (a
-    * model that never saw data emits nothing), and a bucket at-or-below
-    * the high-water mark is dropped as a late duplicate.
-    *
-    * TOTAL silence never fires `foreachBatch` at all (an event-time
-    * watermark cannot advance without events), so it is closed by the
-    * caller's scheduler calling [[tick]] with the wall clock — the same
-    * ownership split as [[ScheduledEval]]: the engine owns event-time,
-    * the caller owns wall-time. (A wall clock consulted INSIDE
-    * `foreachBatch` would be wrong: a data micro-batch can fire with
-    * empty OUTPUT before the watermark-advance batch releases the rows,
-    * and clock-filling there would synthesize buckets whose real data is
-    * still pending, then drop that data as late.)
+    * Gap materialization (loudml/elastic.py:488-500):
+    * append mode emits only NON-EMPTY closed windows, so a silent source
+    * would produce no bucket and no anomaly. Every bucket between the
+    * persisted high-water mark and the newest closed one is emitted,
+    * missing ones synthesized with `fill`, in order before the resuming
+    * bucket. This is race-free: append mode releases closed windows in
+    * watermark order, so an absent bucket older than the newest released
+    * one can only receive late (dropped) data. Synthesis starts after the
+    * first observed bucket; a bucket at or below the high-water mark is
+    * dropped as a late duplicate. TOTAL silence fires no micro-batch (an
+    * event-time watermark needs events), so the caller's scheduler
+    * closes it with [[tick]] — the engine owns event time, the caller
+    * wall time. (A clock read inside `foreachBatch` could synthesize
+    * buckets whose real data the watermark has not released yet.)
     *
     * Lag context: the trailing `contextSec` of emitted buckets persists
-    * next to the run state and is prepended before `predict`, then
-    * filtered back out — so window models see their phase-aligned lags
-    * and streaming scores match the batch path's ([[ScheduledEval]]
-    * fetches the same context) instead of imputing every lag to slot
-    * means. */
+    * next to the run state and is prepended before scoring, so window
+    * models see the lags [[ScheduledEval]] fetches and stream scores
+    * match the batch path's. */
   def start(
       bucketed: DataFrame,
       model: TrainedModel,
@@ -264,16 +225,13 @@ object StreamingEval {
     writer.start()
   }
 
-  /** Close TOTALLY silent buckets by wall clock: every bucket `b` with
-    * `b + bucketInterval ≤ now − offset` (the reference scheduler's
-    * window rule, loudml/server.py:1559-1580) above the persisted
-    * high-water mark is synthesized with `fill` and pushed through the
-    * same score → scan → hooks → state path as a streaming micro-batch.
-    * Call from the owner's scheduler when the stream reports no progress
-    * (e.g. once per `interval`); a no-op before the first observed bucket
-    * or when event-time already caught up. Data arriving later for a
-    * ticked bucket is dropped as late — the same contract `offset` gives
-    * the watermark. */
+  /** Close TOTALLY silent buckets by wall clock: every bucket closed at
+    * `now` ([[EvalParams.closedEdge]]) above the persisted high-water mark
+    * is synthesized with `fill` and run like a micro-batch. Call from the
+    * owner's scheduler when the stream reports no progress; a no-op
+    * before the first observed bucket or when event time caught up. Data
+    * arriving later for a ticked bucket is dropped as late, the contract
+    * `offset` gives the watermark. */
   def tick(
       spark: org.apache.spark.sql.SparkSession,
       model: TrainedModel,
@@ -284,16 +242,14 @@ object StreamingEval {
       fill: Double = 0.0,
       now: Long,
       onBatch: DataFrame => Unit = _ => ()): Unit = {
-    val bi = params.bucketInterval
-    val n = now - params.offset
-    val closed = n - Math.floorMod(n, bi) - bi
+    val closed = params.closedEdge(now) - params.bucketInterval
     advance(spark, model, params, stateRoot, modelName, hooks, fill,
       observed = Map.empty, upperExtra = Some(closed), onBatch)
   }
 
-  /** Shared micro-batch core: spine-complete `[hwm+bi, up]`, prepend the
-    * persisted lag context, score, scan from persisted state, dispatch
-    * hooks, persist state + trailing context. */
+  /** The solo stream's part around [[EvalStep.run]]: spine-complete
+    * `[hwm+bi, up]`, prepend the persisted lag context, and persist the
+    * new high-water mark + trailing context. */
   private def advance(
       spark: org.apache.spark.sql.SparkSession,
       model: TrainedModel,
@@ -315,22 +271,11 @@ object StreamingEval {
         val newRows = (lo to up by bi).map(b => b -> observed.getOrElse(b, fill))
         import spark.implicits._
         val series = (hist ++ newRows).toDF("bucket", "value")
-        val scored = model.predict(series, "value")
-          .filter(col("bucket") >= lo)
-          .withColumn("score", coalesce(col("score"), lit(0.0)))
-        val before = StateStore.load(stateRoot, modelName)
-        val scanned = AnomalyScan.scan(scored,
-          maxThreshold = params.maxThreshold,
-          minThreshold = params.minThreshold,
-          gracePeriodSec = params.gracePeriodSec,
-          initial = before).cache()
-        try {
-          Hooks.dispatch(scanned, hooks)
-          StateStore.save(stateRoot, modelName, RunState.fromScan(scanned, before))
-          BucketHistory.save(stateRoot, modelName, up,
-            (hist ++ newRows).filter(_._1 > up - params.contextSec))
-          onBatch(scanned)
-        } finally scanned.unpersist()
+        val scanned = EvalStep.run(model, series, "value", params, lo, up + bi,
+          stateRoot, modelName, hooks)
+        BucketHistory.save(stateRoot, modelName, up,
+          (hist ++ newRows).filter(_._1 > up - params.contextSec))
+        onBatch(scanned)
       }
   }
 }
@@ -366,7 +311,4 @@ object BucketHistory {
         }
         (Json.long(j \ "hwm"), rows)
     }
-
-  def clear(root: String, model: String): Unit =
-    java.nio.file.Files.deleteIfExists(path(root, model))
 }

@@ -106,6 +106,40 @@ class EngineSpec extends SparkSpec {
     assert(seen.toSeq == Seq(730L * HOUR))
   }
 
+  test("anomaly_type low: _eval and the scheduled loop score the same " +
+      "direction, so an upward spike alerts on neither") {
+    val (engine, _) = newEngine()
+    // the lifecycle test's data: flat-10 hourly, spike to 100 at 730/731
+    val dir = java.nio.file.Files.createTempDirectory("low").toString + "/pts"
+    (0 until 744).map { t =>
+      (t * HOUR, if (t == 730 || t == 731) 100.0 else 10.0)
+    }.toDF("epoch", "value")
+      .select(timestamp_seconds(col("epoch")).as("ts"), col("value"))
+      .write.parquet(dir)
+    engine.buckets.register(new ParquetBucket("pts", dir))
+    engine.createModel(
+      s"""{"name": "lo", "type": "seasonal",
+         |  "features": [{"name": "avg_v", "metric": "avg", "field": "value",
+         |                "default": 0, "anomaly_type": "low"}],
+         |  "bucket_interval": "1h", "interval": "6h", "offset": "0s",
+         |  "default_bucket": "pts"}""".stripMargin)
+    engine.trainModel("lo", "0", (720L * HOUR).toString)
+
+    val scanned = engine.evalModel("lo", (720L * HOUR).toString,
+      (744L * HOUR).toString)
+    assert(scanned.filter(col("is_anomaly")).count() == 0)
+
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val hook = new Hook {
+      val name = "rec"
+      override def onAnomalyStart(ts: Long, score: Double, p: Option[Double],
+          o: Option[Double], a: Map[String, (String, Double)]): Unit = seen += ts
+    }
+    engine.startScheduled("lo", hooks = Seq(hook))
+      .evalOnce(732L * HOUR) // window [726h, 732h) holds the spike
+    assert(seen.isEmpty)
+  }
+
   test("training masks labeled anomaly windows: contaminated segment " +
       "scores higher after exclusion (test_donut.py:296-340 analog)") {
     // flat-10 series with a 2-day plateau at 100 (hours 240..288) — the

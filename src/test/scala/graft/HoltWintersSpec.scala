@@ -194,6 +194,24 @@ class HoltWintersSpec extends SparkSpec {
     }
   }
 
+  test("fleet training: an all-null key is skipped and counted, not " +
+      "fatal to the fleet job") {
+    val p = HoltWintersParams(bucketInterval = H, period = 86400L,
+      alpha = 0.3, beta = 0.01, gamma = 0.3)
+    val a = synth(3).map { case (b, v) => ("a", b, Double.box(v)) }
+    val ghost = (0 until 48).map(i => ("ghost", i * H, null: java.lang.Double))
+    val df = (a ++ ghost).toDF("k", "bucket", "v")
+    val states = HoltWinters.train(df, "v", Seq("k"), p)
+    // the healthy key fits exactly as alone; the all-null key is dropped
+    // (counted in `graft.fleetHw.skippedKeys`)
+    val rows = states.collect()
+    assert(rows.map(_.getString(0)).toSeq == Seq("a"))
+    val solo = HoltWinters.fit(
+      a.map { case (_, b, v) => (b, Some(v.doubleValue)) }, p)
+    assert(rows.head.getDouble(1) == solo.level)
+    assert(rows.head.getSeq[Double](5) == solo.season.toSeq)
+  }
+
   test("rolling-origin backtest: per-origin metrics on clean seasonal data — accurate, calibrated, leak-free") {
     // two keys, trend + daily season + small noise, 12 days
     val rows = Seq("a", "b").flatMap { k =>

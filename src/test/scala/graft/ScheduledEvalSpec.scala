@@ -104,6 +104,48 @@ class ScheduledEvalSpec extends SparkSpec {
     assert(anns(0).getString(anns(0).fieldIndex("text")).contains("too high"))
   }
 
+  test("evalOnce fires hooks from the collected window: a hook starts " +
+      "no Spark job of its own") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val model = trainedModel()
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    def inGroup(group: String)(body: => Unit): Unit = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    def evalOnce(group: String, hooks: Seq[Hook]): Unit = {
+      val eval = new ScheduledEval(model, fetch,
+        EvalParams(interval = 6 * HOUR, offset = 0L, bucketInterval = HOUR),
+        java.nio.file.Files.createTempDirectory("jobs").toString, "m", hooks)
+      inGroup(group)(eval.evalOnce(726L * HOUR))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val hook = new RecordingHook
+      evalOnce("evalOnce-no-hook", Nil)
+      evalOnce("evalOnce-hook", Seq(hook))
+      // the listener bus delivers events in order: once a later job's
+      // start is seen, every earlier job start has been counted
+      inGroup("evalOnce-sentinel")(sc.parallelize(Seq(1)).count())
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!groups.contains("evalOnce-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      def jobs(group: String) = groups.asScala.count(_ == group)
+      assert(hook.starts.map(_._1).toSeq == Seq(724L * HOUR))
+      assert(jobs("evalOnce-no-hook") > 0)
+      assert(jobs("evalOnce-hook") <= jobs("evalOnce-no-hook"),
+        s"with a hook ${jobs("evalOnce-hook")} jobs, " +
+          s"without ${jobs("evalOnce-no-hook")}")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("run state round-trips through the store") {
     val root = java.nio.file.Files.createTempDirectory("runstate").toString
     assert(StateStore.load(root, "x") == RunState.empty)
@@ -144,8 +186,8 @@ class ScheduledEvalSpec extends SparkSpec {
     val ms = MemoryStream[(Long, Double)]
     val points = ms.toDF()
       .select(timestamp_seconds(col("_1")).as("ts"), col("_2").as("value"))
-    val bucketed = StreamingEval.bucketize(points, "ts", "value",
-      interval = 10L, offsetSec = 0L)
+    val bucketed = StreamingEval.bucketizeKeyed(points, "ts", "value",
+      Nil, interval = 10L, offsetSec = 0L)
 
     val stateRoot = java.nio.file.Files.createTempDirectory("srs").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
@@ -190,8 +232,8 @@ class ScheduledEvalSpec extends SparkSpec {
     val ms = MemoryStream[(Long, Double)]
     val points = ms.toDF()
       .select(timestamp_seconds(col("_1")).as("ts"), col("_2").as("value"))
-    val bucketed = StreamingEval.bucketize(points, "ts", "value",
-      interval = 10L, offsetSec = 0L)
+    val bucketed = StreamingEval.bucketizeKeyed(points, "ts", "value",
+      Nil, interval = 10L, offsetSec = 0L)
 
     val stateRoot = java.nio.file.Files.createTempDirectory("srs2").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt2").toString
@@ -272,8 +314,8 @@ class ScheduledEvalSpec extends SparkSpec {
     val ms = MemoryStream[(Long, Double)]
     val points = ms.toDF()
       .select(timestamp_seconds(col("_1")).as("ts"), col("_2").as("value"))
-    val bucketed = StreamingEval.bucketize(points, "ts", "value",
-      interval = HOUR, offsetSec = 0L)
+    val bucketed = StreamingEval.bucketizeKeyed(points, "ts", "value",
+      Nil, interval = HOUR, offsetSec = 0L)
     val stateRoot = java.nio.file.Files.createTempDirectory("srs3").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt3").toString
     // seed the persisted context exactly as a restarted deployment would
@@ -331,8 +373,8 @@ class ScheduledEvalSpec extends SparkSpec {
     val ms = MemoryStream[(Long, Double)]
     val points = ms.toDF()
       .select(timestamp_seconds(col("_1")).as("ts"), col("_2").as("value"))
-    val bucketed = StreamingEval.bucketize(points, "ts", "value",
-      interval = HOUR, offsetSec = 0L)
+    val bucketed = StreamingEval.bucketizeKeyed(points, "ts", "value",
+      Nil, interval = HOUR, offsetSec = 0L)
     val stateRoot = java.nio.file.Files.createTempDirectory("srs4").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt4").toString
     graft.streaming.BucketHistory.save(stateRoot, "ae_s", 719L * HOUR,
