@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total","value":N,"unit":"sec",
   * "runs":R,"agg":"min","sf":…,"passes":[…],"queries":{name:sec,…}}
@@ -43,26 +41,14 @@ import org.apache.spark.sql.SparkSession
   *    SPARK_GRAFT_BENCH_ISOLATED (comma-separated; empty disables).
   */
 object Bench {
-  /** `SPARK_GRAFT_CPUS` as a positive core count (`default` when unset);
-    * anything else fails fast, before a session starts. */
-  def cpusFromEnv(default: Int): Int =
-    sys.env.get("SPARK_GRAFT_CPUS").fold(default) { s =>
-      s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer core count, got '$s'"))
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = cpusFromEnv(32)
+    val cpus = Suite.cpusFromEnv(32)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional subset for local iteration: comma-separated query names
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val names = Suite.select(only).map(_.name)
+    val spark = Suite.session(cpus)
 
     def once(name: String): Double = {
       val t0 = System.nanoTime()
@@ -75,10 +61,6 @@ object Bench {
       }
       (System.nanoTime() - t0) / 1e9
     }
-
-    // optional subset for local iteration: comma-separated query names
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
     // data fingerprint = warmup: one scan per table exercises codegen,
     // parquet footer reads and JIT, and pins WHAT was measured. Raw
@@ -130,8 +112,6 @@ object Bench {
     if (only.isDefined)
       SparkEntry.queries.get("q_agg_stats").foreach(f =>
         f(spark, sfDir).write.format("noop").mode("overwrite").save())
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     // interleaved passes: run the WHOLE suite once per pass, min per
     // query across passes — a contiguous throttle burst can inflate a
     // query in at most one pass. r15 (VERDICT r14 item 2): each pass
@@ -165,8 +145,7 @@ object Bench {
         "q_media_dirty", "q_audio_features", "q_frame_sample",
         "q_audio_hash", "q_audio_hash_ulaw", "q_video_neardups",
         "q_video_dirty"))
-      .filter(n => SparkEntry.queries.contains(n) &&
-        only.forall(_.contains(n)))
+      .filter(names.contains)
     val isolatedPasses =
       (1 to runs).map(_ => isolatedFamily.map(n => n -> once(n)).toMap)
     val isoJson = isolatedFamily.map { n =>

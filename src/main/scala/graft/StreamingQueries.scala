@@ -49,12 +49,12 @@ object StreamingQueries {
 
   private def docsPath(dir: String) = s"$dir/documents.parquet"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] lazy val declared: Seq[Query] = Seq(
     // ── streaming ingest dedup: dropDuplicatesWithinWatermark over the
     //    md5 fingerprint, horizon >> data span (state bounded by the
     //    horizon in production; global-distinct here so the replay is
     //    batch-split-invariant). Output: one row per distinct text.
-    "q_stream_dedup" -> ((s, dir) => {
+    Query("q_stream_dedup", (s, dir) => {
       StreamRun.toTable(s, docsPath(dir), src =>
           StreamingDedup.dedupStream(
               src.withColumn("__ts",
@@ -64,12 +64,17 @@ object StreamingQueries {
               length(col("text")).cast("long").as("n_chars")),
           OutputMode.Append())
         .orderBy("fp")
-    }),
+    },
+      // one row per distinct text: fp is the dedup key, n_chars is
+      // constant within a fp group (same bytes), so min() = the value
+      """SELECT md5(text) AS fp,
+        |       CAST(min(length(text)) AS BIGINT) AS n_chars
+        |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin),
 
     // ── live heavy hitters: top-5 tokens per 1000-doc event-time
     //    window through the mergeable SpaceSaving aggregate, Complete
     //    mode (final table = full-input aggregate).
-    "q_stream_tokens" -> ((s, dir) => {
+    Query("q_stream_tokens", (s, dir) => {
       StreamRun.toTable(s, docsPath(dir), src =>
           StreamingTopTokens.topTokensStream(
             src.withColumn("__ts",
@@ -82,7 +87,25 @@ object StreamingQueries {
         .select((col("window_start").cast("long") - lit(TsShift))
           .as("bucket"), col("token"), col("cnt"))
         .orderBy("bucket", "token")
-    }),
+    },
+      // exact replay of the windowed top-5: tumbling 1000-second windows
+      // over epoch-second doc_id, count per token, (cnt desc, token asc)
+      // rank — the sketch is exact at this vocabulary (≤ capacity)
+      """WITH toks AS (
+        |  SELECT CAST(doc_id // 1000 * 1000 AS BIGINT) AS bucket,
+        |         unnest(string_split_regex(text, '\s+')) AS token
+        |  FROM documents
+        |), cnt AS (
+        |  SELECT bucket, token, CAST(count(*) AS BIGINT) AS cnt
+        |  FROM toks WHERE length(token) > 0 GROUP BY 1, 2
+        |), rk AS (
+        |  SELECT bucket, token, cnt,
+        |         row_number() OVER (PARTITION BY bucket
+        |           ORDER BY cnt DESC, token) AS r
+        |  FROM cnt
+        |)
+        |SELECT bucket, token, cnt FROM rk WHERE r <= 5
+        |ORDER BY bucket, token""".stripMargin),
 
     // ── streaming distribution drift: per-(type, day) PSI of the live
     //    value histogram against the corpus baseline (binFractions),
@@ -90,7 +113,7 @@ object StreamingQueries {
     //    we trained on" monitor over the real events stream. Baseline
     //    lo/hi/fractions come from one batch pre-pass (a real monitor
     //    freezes them from the training corpus the same way).
-    "q_stream_psi" -> ((s, dir) => {
+    Query("q_stream_psi", (s, dir) => {
       val ev = graft.sources.Tables.load(s, dir, "events")
       val mm = ev.agg(min(col("value").cast("double")),
         max(col("value").cast("double"))).head()
@@ -117,7 +140,47 @@ object StreamingQueries {
           col("window_start").cast("long").as("bucket"), col("n"),
           (round(col("psi") + lit(1e-9), 6) + lit(0.0)).as("psi"))
         .orderBy("event_type", "bucket")
-    }),
+    },
+      // windowed PSI replay: baseline bin fractions = smoothed corpus
+      // histogram ((c+1)/(n+bins), binFractions' formula); per-(type,
+      // day) smoothed window fractions against them; terms decimal-routed
+      // like q_psi so summation order can't move the 6-decimal rounding
+      """WITH mm AS (
+        |  SELECT CAST(min(value) AS DOUBLE) AS lo,
+        |         CAST(max(value) AS DOUBLE) AS hi FROM events
+        |), b AS (
+        |  SELECT event_type,
+        |         CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS bucket,
+        |         least(9, greatest(0, CAST(floor(
+        |           (CAST(value AS DOUBLE) - mm.lo) * 10 /
+        |           (mm.hi - mm.lo + 1.0)) AS INT))) AS bb
+        |  FROM events CROSS JOIN mm
+        |), refc AS (SELECT bb, count(*) AS c FROM b GROUP BY 1),
+        |nall AS (SELECT count(*) AS nn FROM b),
+        |spine AS (SELECT unnest(range(0, 10)) AS bb),
+        |ref AS (
+        |  SELECT sp.bb,
+        |         CAST(coalesce(rc.c, 0) + 1 AS DOUBLE) /
+        |         CAST(nall.nn + 10 AS DOUBLE) AS e
+        |  FROM spine sp LEFT JOIN refc rc USING (bb) CROSS JOIN nall
+        |), wb AS (
+        |  SELECT event_type, bucket, bb, count(*) AS cc
+        |  FROM b GROUP BY 1, 2, 3
+        |), wn AS (
+        |  SELECT event_type, bucket, count(*) AS n FROM b GROUP BY 1, 2
+        |), grid AS (
+        |  SELECT wn.event_type, wn.bucket, wn.n, r.bb, r.e,
+        |         coalesce(wb.cc, 0) AS cc
+        |  FROM wn CROSS JOIN ref r
+        |  LEFT JOIN wb ON wb.event_type = wn.event_type
+        |    AND wb.bucket = wn.bucket AND wb.bb = r.bb
+        |)
+        |SELECT event_type, bucket, CAST(n AS BIGINT) AS n,
+        |  round(CAST(sum(CAST(
+        |    (CAST(cc + 1 AS DOUBLE) / CAST(n + 10 AS DOUBLE) - e) *
+        |    ln((CAST(cc + 1 AS DOUBLE) / CAST(n + 10 AS DOUBLE)) / e)
+        |  AS DECIMAL(30,12))) AS DOUBLE) + 1e-9, 6) + 0.0 AS psi
+        |FROM grid GROUP BY 1, 2, n ORDER BY 1, 2""".stripMargin),
 
     // ── the scheduled-inference journey on the streaming path
     //    (reference semantics: loudml/server.py:1559-1580 — train on
@@ -131,7 +194,7 @@ object StreamingQueries {
     //    — streamed bucketization ≡ batch bucketization ≡ DuckDB,
     //    end to end. The cross-RUN state-resume variant of the same
     //    scan is driver-gated too (q_stream_resume below).
-    "q_stream_eval" -> ((s, dir) => {
+    Query("q_stream_eval", (s, dir) => {
       val keys = Seq("event_type")
       val scored = scoredRange(s, dir, evalProfile(s, dir),
         EvalSplit, EvalTo, roster = None)
@@ -140,7 +203,13 @@ object StreamingQueries {
         maxThreshold = 90.0, minThreshold = 60.0,
         gracePeriodSec = 21600L)
       evalPresent(scanned).orderBy("event_type", "bucket")
-    }),
+    },
+      // the q_fleet_scan recursive-CTE state machine, replayed over the
+      // STREAMED bucketization: profile keys span the full table
+      // (TimesQuery's spine semantics), the test spine spans the types
+      // observed in the test range (= the streamed snapshot's types);
+      // avg is the same decimal-sum-over-count both sides
+      streamEvalOracle),
 
     // ── the reference's actual restart semantics (loudml/server.py:
     //    1559-1580 — the scheduler fires `_start` every interval and
@@ -159,7 +228,7 @@ object StreamingQueries {
     //    the same type set and run 1 emits score-0 rows even for a
     //    series that first reports after the restart, exactly like the
     //    one-run oracle.
-    "q_stream_resume" -> ((s, dir) => {
+    Query("q_stream_resume", (s, dir) => {
       val keys = Seq("event_type")
       // both runs broadcast the (type × 24-slot)-sized profile — pin it
       // so the TimesQuery training pipeline behind it runs once, not
@@ -193,7 +262,10 @@ object StreamingQueries {
         gracePeriodSec = 21600L)
       evalPresent(scan1Pinned.unionByName(scan2))
         .orderBy("event_type", "bucket")
-    }),
+    },
+      // the resume row's contract is precisely "two persisted-state runs
+      // ≡ one run" — so the oracle IS the one-run replay, verbatim
+      streamEvalOracle),
   )
 
   // ── shared scoring pipeline for the scheduled-eval rows ───────────
@@ -272,88 +344,6 @@ object StreamingQueries {
       round(col("score"), 4).as("score"),
       col("is_anomaly"), col("anomaly"),
       round(col("episode_max"), 4).as("episode_max"))
-
-  def oracleSql: Map[String, String] = Map(
-    // one row per distinct text: fp is the dedup key, n_chars is
-    // constant within a fp group (same bytes), so min() = the value
-    "q_stream_dedup" ->
-      """SELECT md5(text) AS fp,
-        |       CAST(min(length(text)) AS BIGINT) AS n_chars
-        |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin,
-
-    // exact replay of the windowed top-5: tumbling 1000-second windows
-    // over epoch-second doc_id, count per token, (cnt desc, token asc)
-    // rank — the sketch is exact at this vocabulary (≤ capacity)
-    "q_stream_tokens" ->
-      """WITH toks AS (
-        |  SELECT CAST(doc_id // 1000 * 1000 AS BIGINT) AS bucket,
-        |         unnest(string_split_regex(text, '\s+')) AS token
-        |  FROM documents
-        |), cnt AS (
-        |  SELECT bucket, token, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM toks WHERE length(token) > 0 GROUP BY 1, 2
-        |), rk AS (
-        |  SELECT bucket, token, cnt,
-        |         row_number() OVER (PARTITION BY bucket
-        |           ORDER BY cnt DESC, token) AS r
-        |  FROM cnt
-        |)
-        |SELECT bucket, token, cnt FROM rk WHERE r <= 5
-        |ORDER BY bucket, token""".stripMargin,
-
-    // windowed PSI replay: baseline bin fractions = smoothed corpus
-    // histogram ((c+1)/(n+bins), binFractions' formula); per-(type,
-    // day) smoothed window fractions against them; terms decimal-routed
-    // like q_psi so summation order can't move the 6-decimal rounding
-    "q_stream_psi" ->
-      """WITH mm AS (
-        |  SELECT CAST(min(value) AS DOUBLE) AS lo,
-        |         CAST(max(value) AS DOUBLE) AS hi FROM events
-        |), b AS (
-        |  SELECT event_type,
-        |         CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS bucket,
-        |         least(9, greatest(0, CAST(floor(
-        |           (CAST(value AS DOUBLE) - mm.lo) * 10 /
-        |           (mm.hi - mm.lo + 1.0)) AS INT))) AS bb
-        |  FROM events CROSS JOIN mm
-        |), refc AS (SELECT bb, count(*) AS c FROM b GROUP BY 1),
-        |nall AS (SELECT count(*) AS nn FROM b),
-        |spine AS (SELECT unnest(range(0, 10)) AS bb),
-        |ref AS (
-        |  SELECT sp.bb,
-        |         CAST(coalesce(rc.c, 0) + 1 AS DOUBLE) /
-        |         CAST(nall.nn + 10 AS DOUBLE) AS e
-        |  FROM spine sp LEFT JOIN refc rc USING (bb) CROSS JOIN nall
-        |), wb AS (
-        |  SELECT event_type, bucket, bb, count(*) AS cc
-        |  FROM b GROUP BY 1, 2, 3
-        |), wn AS (
-        |  SELECT event_type, bucket, count(*) AS n FROM b GROUP BY 1, 2
-        |), grid AS (
-        |  SELECT wn.event_type, wn.bucket, wn.n, r.bb, r.e,
-        |         coalesce(wb.cc, 0) AS cc
-        |  FROM wn CROSS JOIN ref r
-        |  LEFT JOIN wb ON wb.event_type = wn.event_type
-        |    AND wb.bucket = wn.bucket AND wb.bb = r.bb
-        |)
-        |SELECT event_type, bucket, CAST(n AS BIGINT) AS n,
-        |  round(CAST(sum(CAST(
-        |    (CAST(cc + 1 AS DOUBLE) / CAST(n + 10 AS DOUBLE) - e) *
-        |    ln((CAST(cc + 1 AS DOUBLE) / CAST(n + 10 AS DOUBLE)) / e)
-        |  AS DECIMAL(30,12))) AS DOUBLE) + 1e-9, 6) + 0.0 AS psi
-        |FROM grid GROUP BY 1, 2, n ORDER BY 1, 2""".stripMargin,
-
-    // the q_fleet_scan recursive-CTE state machine, replayed over the
-    // STREAMED bucketization: profile keys span the full table
-    // (TimesQuery's spine semantics), the test spine spans the types
-    // observed in the test range (= the streamed snapshot's types);
-    // avg is the same decimal-sum-over-count both sides
-    "q_stream_eval" -> streamEvalOracle,
-
-    // the resume row's contract is precisely "two persisted-state runs
-    // ≡ one run" — so the oracle IS the one-run replay, verbatim
-    "q_stream_resume" -> streamEvalOracle,
-  )
 
   private lazy val streamEvalOracle: String = {
       val det = "(sm.last_end IS NULL OR o.bucket - sm.last_end >= 21600)" +

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,36 +7,26 @@ object Verify {
     // optional 3rd arg: comma-separated query names — builder-side subset
     // runs while iterating (the driver always passes exactly two args)
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = Bench.cpusFromEnv(4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Suite.select(args.lift(2))
+    val spark = Suite.session(Suite.cpusFromEnv(4))
     new java.io.File(outDir).mkdirs()
     // A query that throws must leave an explicit failure record — not just
     // a stderr line — so a shrunk result set can never read as a green
     // suite (the r7 regression shipped exactly that way).
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        System.err.println(s"[verify] $name failed: $msg")
-        errors(name) = msg.linesIterator.take(3).mkString(" | ").take(500)
+        System.err.println(s"[verify] ${q.name} failed: $msg")
+        errors(q.name) = msg.linesIterator.take(3).mkString(" | ").take(500)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
+    def jsonStr(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
       case '\n' => "\\n"
@@ -47,16 +36,16 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
     // loud summary, but exit 0: the driver must still get the oracle dump
     // and compare the queries that DID succeed
     if (errors.nonEmpty)
       System.err.println(
-        s"[verify] ${errors.size} of ${SparkEntry.queries.size} queries FAILED: " +
+        s"[verify] ${errors.size} of ${selected.size} queries FAILED: " +
           errors.keys.mkString(", "))
     spark.stop()
   }

@@ -144,16 +144,22 @@ object GraftConfig {
 
   /** config → running service, the `loudmld -c config.yml` analog
     * (/root/reference/loudml/server.py main): hydrate the bucket
-    * registry, build the engine over the configured storage path, and
-    * bind the HTTP facade on the configured listen port (port 0 for an
-    * ephemeral test bind). Returns (engine, api, boundAddress). */
+    * registry, build the engine and the scheduled jobs over the
+    * configured storage path (registering the config's
+    * `scheduled_jobs`), and bind the HTTP facade on the configured listen
+    * port (port 0 for an ephemeral test bind). Nothing fires the jobs
+    * yet: the daemon has no scheduler clock. Returns (engine, api,
+    * boundAddress). */
   def serve(spark: org.apache.spark.sql.SparkSession, config: GraftConfig,
       portOverride: Option[Int] = None)
       : (Engine, HttpApi, java.net.InetSocketAddress) = {
     val reg = new BucketRegistry
     config.registerBuckets(reg)
     val engine = new Engine(spark, reg, config.storagePath)
-    val api = new HttpApi(engine,
+    val jobs = new ScheduledJobs(engine, config.storagePath)
+    config.scheduledJobs.values.foreach(j =>
+      jobs.create(JsonMethods.compact(j)))
+    val api = new HttpApi(engine, jobs,
       jobWorkers = config.server.workers.toInt.max(1).min(64),
       jobsMaxTtlMs = config.server.jobsMaxTtl * 1000L)
     val port = portOverride.orElse(config.server.listenAddr._2).getOrElse(8077)

@@ -27,6 +27,15 @@ final case class ModelSettings(
     defaultBucket: Option[String],
     raw: String) {
 
+  /** The model's input feature — model I/O assembly filters on the
+    * feature's declared direction (donut.py:547-551 `enum_features(
+    * is_input=True)`; model.py:126-127 `is_input = 'i' in io`): an
+    * output-only feature never feeds the model. Reference models are
+    * single-feature (donut.py:543-545), so the first input wins. */
+  def inputFeature: Feature =
+    features.find(_.isInput).getOrElse(throw new IllegalArgumentException(
+      s"model $name has no input feature (every feature is io='o')"))
+
   /** Settings JSON for the model trait with EVERY duration field numeric
     * — model types parse durations with a plain numeric extractor, so a
     * timedelta string (`"period": "2h"`, valid at this surface) must be
@@ -174,21 +183,12 @@ class Engine(
       feats)
   }
 
-  /** The model's input feature — model I/O assembly filters on the
-    * feature's declared direction (donut.py:547-551 `enum_features(
-    * is_input=True)`; model.py:126-127 `is_input = 'i' in io`): an
-    * output-only feature never feeds the model. Reference models are
-    * single-feature (donut.py:543-545), so the first input wins. */
-  private def inputFeature(s: ModelSettings): Feature =
-    s.features.find(_.isInput).getOrElse(throw new IllegalArgumentException(
-      s"model ${s.name} has no input feature (every feature is io='o')"))
-
   /** Bucketed single-feature series for a model. */
   private def series(s: ModelSettings, bucket: String, from: Long,
       to: Long): DataFrame = {
     val b = buckets(bucket)
     TimesQuery.run(spark, b.readPoints(spark), b.timestampField,
-      s.bucketInterval, from, to, Seq(inputFeature(s)))
+      s.bucketInterval, from, to, Seq(s.inputFeature))
   }
 
   private def bucketOf(s: ModelSettings, bucket: Option[String]): String =
@@ -216,10 +216,10 @@ class Engine(
         val windows = Annotations.inRange(
           annotations.toDF(spark)
             .withColumn("end_ts", coalesce(col("end_ts"), lit(t))), f, t)
-        Annotations.maskWindows(bucketed, windows, inputFeature(s).name)
+        Annotations.maskWindows(bucketed, windows, s.inputFeature.name)
       }
     val trained = ModelRegistry(s.tpe)
-      .train(input, inputFeature(s).name, s.canonicalJson)
+      .train(input, s.inputFeature.name, s.canonicalJson)
     trained.save(storageRoot, name)
   }
 
@@ -241,7 +241,7 @@ class Engine(
     val model = loadTrained(name)
     val scored = EvalStep.predict(model,
       series(s, bucketOf(s, bucket), f - p.contextSec, t),
-      inputFeature(s).name, p, f, t)
+      s.inputFeature.name, p, f, t)
     if (!detectAnomalies) scored else EvalStep.scan(scored, p)
   }
 
@@ -253,7 +253,7 @@ class Engine(
       bucketInterval = s.bucketInterval,
       maxThreshold = s.maxThreshold, minThreshold = s.minThreshold,
       gracePeriodSec = s.gracePeriod, contextSec = 2 * s.period,
-      anomalyType = inputFeature(s).anomalyType)
+      anomalyType = s.inputFeature.anomalyType)
 
   /** `_forecast` with optional `feature:low|high:threshold` constraint;
     * returns the bands and the first constraint violation if any.
@@ -301,7 +301,7 @@ class Engine(
         loadTrained(name),
         (from, to) => series(s, b, from, to),
         evalParams(s), storageRoot, name, hooksOf(name) ++ hooks,
-        inputFeature(s).name)
+        s.inputFeature.name)
     })
 
   /** `_stop` (server.py:1629-1674): deregister the scheduled loop. The
@@ -359,7 +359,7 @@ class Engine(
       nowEpoch: Long = System.currentTimeMillis() / 1000): Boolean =
     modelHooks.get(model).flatMap(_.get(hookName)) match {
       case Some(h) =>
-        graft.ml.HookTest.fire(Seq(h), inputFeature(getModel(model)).name,
+        graft.ml.HookTest.fire(Seq(h), getModel(model).inputFeature.name,
           nowEpoch, getModel(model).bucketInterval)
         true
       case None => false

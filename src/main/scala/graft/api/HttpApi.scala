@@ -30,7 +30,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   */
 class HttpApi(
     engine: Engine,
-    scheduledJobs: Option[ScheduledJobs] = None,
+    scheduledJobs: ScheduledJobs,
     version: String = "0.1.0",
     jobWorkers: Int = 2,
     jobsMaxTtlMs: Long = 60000L,
@@ -250,32 +250,12 @@ class HttpApi(
         if (n == 0) (404, jsonStr(s"model not found: $names"))
         else (200, jsonStr(names))
 
-      // ── train / eval / forecast (server.py:907-936, 1583-1602,
-      //    1677-1717): job-shaped
-      case ("POST", "models" :: name :: "_train" :: Nil) =>
-        val rec = runJob("training") {
-          val n = engine.trainModel(name, require(params, "from"),
-            require(params, "to"))
-          Some(JsonMethods.compact(JsonMethods.render(
-            JObject("trained_buckets" -> JInt(n)))))
-        }
-        (202, jsonStr(rec.id))
-      case ("POST", "models" :: name :: "_eval" :: Nil) =>
-        val rec = runJob("eval") {
-          val s = engine.getModel(name)
-          val scored = engine.evalModel(name, require(params, "from"),
-            require(params, "to"))
-          Some(graft.io.Format.buckets(scored,
-            Seq(s.features.head.name)))
-        }
-        (202, jsonStr(rec.id))
-      case ("POST", "models" :: name :: "_forecast" :: Nil) =>
-        val rec = runJob("forecast") {
-          val (fc, _) = engine.forecastModel(name,
-            require(params, "from"), require(params, "to"))
-          Some(graft.io.Format.series(
-            fc.withColumnRenamed("predicted", "value"), Seq("value"),
-            predicted = false))
+      // ── train / eval / forecast: job-shaped
+      case ("POST", "models" :: name :: endpoint :: Nil)
+          if ModelEndpoints.jobTypes.contains(endpoint) =>
+        val rec = runJob(ModelEndpoints.jobTypes(endpoint)) {
+          Some(ModelEndpoints.run(engine, name, endpoint, params,
+            nowMs() / 1000))
         }
         (202, jsonStr(rec.id))
 
@@ -298,23 +278,15 @@ class HttpApi(
 
       // ── scheduled jobs CRUD (server.py:1401-1402)
       case ("GET", "scheduled_jobs" :: Nil) =>
-        val sj = scheduledJobs.getOrElse(
-          throw new IllegalArgumentException("scheduled jobs disabled"))
-        (200, "[" + sj.list.map(_.toJson).mkString(", ") + "]")
+        (200, "[" + scheduledJobs.list.map(_.toJson).mkString(", ") + "]")
       case ("POST", "scheduled_jobs" :: Nil) =>
-        val sj = scheduledJobs.getOrElse(
-          throw new IllegalArgumentException("scheduled jobs disabled"))
-        val j = sj.create(body); (201, jsonStr(j.name))
+        val j = scheduledJobs.create(body); (201, jsonStr(j.name))
       case ("GET", "scheduled_jobs" :: names :: Nil) =>
-        val sj = scheduledJobs.getOrElse(
-          throw new IllegalArgumentException("scheduled jobs disabled"))
-        val found = sj.get(names)
+        val found = scheduledJobs.get(names)
         if (found.isEmpty) (404, jsonStr(s"scheduled job not found: $names"))
         else (200, "[" + found.map(_.toJson).mkString(", ") + "]")
       case ("DELETE", "scheduled_jobs" :: names :: Nil) =>
-        val sj = scheduledJobs.getOrElse(
-          throw new IllegalArgumentException("scheduled jobs disabled"))
-        if (sj.delete(names) == 0)
+        if (scheduledJobs.delete(names) == 0)
           (404, jsonStr(s"scheduled job not found: $names"))
         else (200, jsonStr(names))
 

@@ -12,8 +12,9 @@ import org.json4s.jackson.JsonMethods
   *
   * The reference's daemon maps `every` onto the Python `schedule` library
   * and fires HTTP requests at itself; here the library IS the server, so
-  * [[runDue]] routes `relative_url` straight to the [[Engine]] method the
-  * URL names. The cadence semantics ([[nextRun]]) mirror `schedule`:
+  * [[runDue]] routes `method` + `relative_url` straight to the body the
+  * HTTP endpoint runs ([[ModelEndpoints]]) and gets the same JSON
+  * document back. The cadence semantics ([[nextRun]]) mirror `schedule`:
   *
   *  - interval units `second(s)/minute(s)/hour(s)/day(s)/week(s)`: next
   *    run = previous (or registration) + count·unit;
@@ -163,11 +164,15 @@ class ScheduledJobs(engine: Engine, storageRoot: String) {
   // boot restore (config.py:35-37 analog)
   dir.readAll().map(ScheduledJob.parse).foreach(j => jobs.put(j.name, j))
 
-  /** POST /scheduled_jobs */
+  /** POST /scheduled_jobs. A model URL called with a method its endpoint
+    * does not accept is rejected here, not at its first firing. */
   def create(json: String, nowEpoch: Long = System.currentTimeMillis / 1000)
       : ScheduledJob = {
     val job = ScheduledJob.parse(json)
     Schemas.requireKey(job.name, "scheduled job name")
+    methodOf(job.relativeUrl).foreach(m => require(job.method == m,
+      s"${job.relativeUrl} accepts ${m.toUpperCase} only, not " +
+        job.method.toUpperCase))
     jobs.put(job.name, job)
     registered.put(job.name, nowEpoch)
     dir.put(job.name, job.toJson)
@@ -195,11 +200,10 @@ class ScheduledJobs(engine: Engine, storageRoot: String) {
     jobs.get(name).map(j => ScheduledJob.nextRun(j,
       lastRun.getOrElse(name, registered.getOrElse(name, nowEpoch))))
 
-  /** One scheduler heartbeat: fire every due job (route its
-    * `relative_url` to the engine), record the run, return
-    * (name, result) pairs. Failures are caught per job and logged — a
-    * broken job cancels nothing else (`catch_exceptions(cancel_on_failure
-    * =False)`, server.py:100-113). */
+  /** One scheduler heartbeat: fire every due job ([[route]]), record the
+    * run, return (name, JSON document or failure) pairs. Failures are
+    * caught per job and logged — a broken job cancels nothing else
+    * (`catch_exceptions(cancel_on_failure=False)`, server.py:100-113). */
   def runDue(nowEpoch: Long): Seq[(String, Any)] =
     list.flatMap { j =>
       val due = nextRunOf(j.name, nowEpoch).exists(_ <= nowEpoch)
@@ -216,26 +220,32 @@ class ScheduledJobs(engine: Engine, storageRoot: String) {
       }
     }
 
+  private val ModelUrl = "/models/([^/]+)(/(_[a-z]+))?".r
+
+  /** The method a model URL accepts: GET for the model document, POST for
+    * the job endpoints; None for a URL this dispatch does not know. */
+  private def methodOf(url: String): Option[String] = url match {
+    case ModelUrl(_, _, null) => Some("get")
+    case ModelUrl(_, _, e) if ModelEndpoints.jobTypes.contains(e) => Some("post")
+    case _ => None
+  }
+
   /** The in-process analog of the reference's self-HTTP dispatch
-    * (server.py:156-176): map the documented model endpoints onto the
-    * engine. */
-  def route(j: ScheduledJob, nowEpoch: Long): Any = {
-    val ModelUrl = "/models/([^/]+)(/(_[a-z]+))?".r
-    val p = j.params
-    def from = p.getOrElse("from", "now-1d")
-    def to = p.getOrElse("to", "now")
+    * (server.py:156-176): run the endpoint `method` + `relative_url`
+    * names and return its JSON document. `from`/`to` default to the
+    * last day (the next day for `_forecast`). */
+  def route(j: ScheduledJob, nowEpoch: Long): String = {
+    require(methodOf(j.relativeUrl).contains(j.method),
+      s"scheduled job url not routable: ${j.method.toUpperCase} " +
+        j.relativeUrl)
     j.relativeUrl match {
-      case ModelUrl(name, _, "_train") =>
-        engine.trainModel(name, from, to, nowEpoch = nowEpoch)
-      case ModelUrl(name, _, "_forecast") =>
-        engine.forecastModel(name, p.getOrElse("from", "now"),
-          p.getOrElse("to", "now+1d"), constraint = p.get("constraint"),
-          nowEpoch = nowEpoch)
-      case ModelUrl(name, _, "_eval") =>
-        engine.evalModel(name, from, to, nowEpoch = nowEpoch)
-      case ModelUrl(name, _, null) => engine.getModel(name)
-      case u => throw new IllegalArgumentException(
-        s"scheduled job url not routable: $u")
+      case ModelUrl(name, _, null) => engine.getModel(name).canonicalJson
+      case ModelUrl(name, _, endpoint) =>
+        val window =
+          if (endpoint == "_forecast") Map("from" -> "now", "to" -> "now+1d")
+          else Map("from" -> "now-1d", "to" -> "now")
+        ModelEndpoints.run(engine, name, endpoint, window ++ j.params,
+          nowEpoch)
     }
   }
 }

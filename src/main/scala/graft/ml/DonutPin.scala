@@ -1,7 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.{Feature, TimesQuery}
 import graft.sources.Tables
 
@@ -29,13 +27,7 @@ object DonutPin {
     seed = 42L, mcmcIters = 3)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Suite.session(8)
     val series = TimesQuery.run(spark,
       Tables.load(spark, "/root/testdata/sf0.001", "events"),
       "ts", 3600L, FROM, SPLIT,

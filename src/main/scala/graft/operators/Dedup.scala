@@ -1883,12 +1883,12 @@ object Dedup {
       seeds: DataFrame, labelCol: String, iters: Int = 5,
       ckptEvery: Int = 2): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    // ≤ 6: the logical plan between checkpoints holds 2^ckptEvery
+    // ≤ 5: the logical plan between checkpoints holds 2^ckptEvery
     // copies of the round subtree (each round references the previous
-    // frame twice); past ~2⁶ copies the driver stalls in
+    // frame twice); at ~2⁶ copies the driver stalls in
     // analysis/optimization before a single task runs
-    require(ckptEvery >= 1 && ckptEvery <= 6,
-      "ckptEvery must be in [1, 6] — plan size doubles per " +
+    require(ckptEvery >= 1 && ckptEvery <= 5,
+      "ckptEvery must be in [1, 5] — plan size doubles per " +
         "un-checkpointed round")
     val e = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))

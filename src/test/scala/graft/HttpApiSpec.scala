@@ -23,7 +23,7 @@ class HttpApiSpec extends SparkSpec {
   private def withServer(test: (String, Engine) => Unit): Unit = {
     val root = java.nio.file.Files.createTempDirectory("httpapi").toString
     val engine = new Engine(spark, new BucketRegistry, root)
-    val api = new HttpApi(engine, Some(new ScheduledJobs(engine, root)))
+    val api = new HttpApi(engine, new ScheduledJobs(engine, root))
     val addr = api.start(0)
     try test(s"http://127.0.0.1:${addr.getPort}", engine)
     finally api.stop()
@@ -229,7 +229,7 @@ class HttpApiSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("httpttl").toString
     val engine = new Engine(spark, new BucketRegistry, root)
     @volatile var now = 1000000000L // injected clock, ms
-    val api = new HttpApi(engine, None, jobWorkers = 1,
+    val api = new HttpApi(engine, new ScheduledJobs(engine, root), jobWorkers = 1,
       jobsMaxTtlMs = 60000L, nowMs = () => now)
     val addr = api.start(0)
     val base = s"http://127.0.0.1:${addr.getPort}"
@@ -313,5 +313,68 @@ class HttpApiSpec extends SparkSpec {
         .statusCode() == 200)
       assert(send("GET", s"$base/scheduled_jobs/nightly").statusCode() == 404)
     }
+  }
+
+  test("HTTP _eval on a model whose first feature is output-only formats " +
+      "the input feature the engine scores") {
+    withServer { (base, _) =>
+      val dir = java.nio.file.Files.createTempDirectory("httpio")
+        .toString + "/pts"
+      (0 until 96).map(t => (t * HOUR, 10.0 + t % 3)).toDF("epoch", "value")
+        .select(timestamp_seconds(col("epoch")).as("ts"), col("value"))
+        .write.parquet(dir)
+      assert(send("POST", s"$base/buckets",
+        s"""{"name": "pts", "type": "parquet", "path": "$dir"}""")
+        .statusCode() == 201)
+      assert(send("POST", s"$base/models",
+        """{"name": "mio", "type": "seasonal", "bucket_interval": "1h",
+          |  "default_bucket": "pts", "features": [
+          |  {"name": "out_f", "metric": "max", "field": "value", "io": "o"},
+          |  {"name": "in_f", "metric": "avg", "field": "value", "io": "i",
+          |   "default": 0}]}""".stripMargin).statusCode() == 201)
+      jobResult(base, send("POST",
+        s"$base/models/mio/_train?from=0&to=${72L * HOUR}"))
+      val buckets = jobResult(base, send("POST",
+        s"$base/models/mio/_eval?from=${72L * HOUR}&to=${96L * HOUR}"))
+        .asInstanceOf[org.json4s.JArray].arr
+      assert(buckets.length == 24)
+      assert(buckets.forall(b =>
+        (b \ "values" \ "in_f") != org.json4s.JNothing &&
+          (b \ "values" \ "out_f") == org.json4s.JNothing))
+    }
+  }
+
+  test("GraftConfig.serve boots with scheduled jobs: the config's entries " +
+      "are registered and /scheduled_jobs answers") {
+    val store = java.nio.file.Files.createTempDirectory("graft_sched")
+    val cfg = graft.api.GraftConfig.fromJson(s"""{
+      "storage": {"path": "$store"},
+      "scheduled_jobs": [{"name": "from_config", "method": "post",
+        "relative_url": "/models/m1/_train",
+        "every": {"count": 1, "unit": "days", "at": "01:00"}}]
+    }""")
+    val (_, api, addr) = graft.api.GraftConfig.serve(
+      spark, cfg, portOverride = Some(0))
+    val base = s"http://127.0.0.1:${addr.getPort}"
+    try {
+      val listed = send("GET", s"$base/scheduled_jobs")
+      assert(listed.statusCode() == 200 &&
+        listed.body().contains("\"from_config\""), listed.body())
+      val created = send("POST", s"$base/scheduled_jobs",
+        """{"name": "hourly_eval", "method": "post",
+          |"relative_url": "/models/m1/_eval",
+          |"every": {"count": 1, "unit": "hours"}}""".stripMargin)
+      assert(created.statusCode() == 201, created.body())
+      assert(send("GET", s"$base/scheduled_jobs/hourly_eval")
+        .statusCode() == 200)
+      // a GET on a POST-only model endpoint is refused at creation
+      val wrong = send("POST", s"$base/scheduled_jobs",
+        """{"name": "get_train", "method": "get",
+          |"relative_url": "/models/m1/_train",
+          |"every": {"count": 1, "unit": "hours"}}""".stripMargin)
+      assert(wrong.statusCode() == 400, wrong.body())
+      assert(send("GET", s"$base/scheduled_jobs/get_train")
+        .statusCode() == 404)
+    } finally api.stop()
   }
 }

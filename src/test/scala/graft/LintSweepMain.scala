@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.plans.PlanLint
 
 /** Whole-suite plan audit (not a unit test — run with `Test/runMain
@@ -81,18 +79,13 @@ object LintSweepMain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Suite.session(8)
     var unsanctioned = 0
     val counts = scala.collection.mutable.Map.empty[String, Int]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    Suite.select(None).foreach { case Query(name, run, _) =>
       val line =
         try {
-          val findings = PlanLint.lint(fn(spark, sfDir), corpusBytes = 1L)
+          val findings = PlanLint.lint(run(spark, sfDir), corpusBytes = 1L)
           findings.map(_.rule).foreach(r =>
             counts(r) = counts.getOrElse(r, 0) + 1)
           val hard = findings.map(_.rule).distinct.filter {

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Deterministic per-query plan-metric probe: runs each named query
   * through the noop sink and prints jobs / stages / tasks / shuffle
@@ -16,20 +15,9 @@ import org.apache.spark.sql.SparkSession
   */
 object MetricsProbeMain {
   def main(args: Array[String]): Unit = {
-    val names =
-      if (args.length > 0 && args(0).nonEmpty)
-        args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val dataDir =
-      if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val selected = Suite.select(args.lift(0).filter(_.nonEmpty))
+    val dataDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
+    val spark = Suite.session(args.lift(2).fold(32)(_.toInt))
 
     val jobs = new AtomicLong
     val stages = new AtomicLong
@@ -57,23 +45,22 @@ object MetricsProbeMain {
     SparkEntry.queries.get("q_agg_stats").foreach(f =>
       f(spark, dataDir).write.format("noop").mode("overwrite").save())
 
-    names.foreach { name =>
+    selected.foreach { q =>
       jobs.set(0); stages.set(0)
       tasks.reset(); shufRead.reset(); shufWrite.reset(); cpuNs.reset()
       val t0 = System.nanoTime()
       try {
-        SparkEntry.queries(name)(spark, dataDir)
-          .write.format("noop").mode("overwrite").save()
+        q.run(spark, dataDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
         // listener bus is async (no public drain API) — settle briefly
         Thread.sleep(500)
-        println(f"$name%-28s jobs=${jobs.get}%-4d stages=${stages.get}%-5d " +
+        println(f"${q.name}%-28s jobs=${jobs.get}%-4d stages=${stages.get}%-5d " +
           f"tasks=${tasks.sum}%-6d shufRead=${shufRead.sum / 1024}%-8dK " +
           f"shufWrite=${shufWrite.sum / 1024}%-8dK " +
           f"cpu=${cpuNs.sum / 1e9}%-7.2fs wall=$wall%.2fs")
       } catch {
         case e: Throwable =>
-          System.err.println(s"FAILED $name: ${e.getMessage}")
+          System.err.println(s"FAILED ${q.name}: ${e.getMessage}")
       }
     }
     spark.stop()

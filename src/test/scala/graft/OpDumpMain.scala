@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Operator-level plan dumps for the iterative graph operators, whose
@@ -22,12 +21,7 @@ object OpDumpMain {
     val dataDir =
       if (args.length > 2) args(2) else "/root/testdata/sf0.001"
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Suite.session(8)
 
     val d = graft.sources.Tables.load(spark, dataDir, "documents")
     val pairs = operators.Dedup.lshVerifiedPairs(d, "doc_id", "text",

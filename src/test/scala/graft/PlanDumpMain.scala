@@ -2,15 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump the AQE-final `explain("formatted")` plan of every SparkEntry
-  * query (or a comma-separated subset in arg 1) to `<outDir>/<name>_<tag>.txt`
-  * — the round's plan evidence (plans/r14, tags "before" and "after").
+  * query (or a comma-separated subset in arg 3) to `<outDir>/<name>_<tag>.txt`
+  * — the round's plan evidence (plans/r14, tags "before" and "after") —
+  * and print each plan's exchange, join and codegen counts.
   *
-  * Runs each query at sf0.001 (audit-sized) and collect()s it first so the
-  * explain shows the AQE-final plan with codegen markers, exactly like
-  * PlanAuditMain (a noop write would leave the frame unexecuted /
+  * Runs each query at sf0.001 (audit-sized) and collect()s it first:
+  * collect() executes THIS DataFrame's QueryExecution, so the explain
+  * shows the AQE-final plan with codegen markers (a noop write would
+  * spawn a separate execution and leave the frame unexecuted /
   * isFinalPlan=false).
   *
   * Usage: Test/runMain graft.PlanDumpMain <outDir> <tag> [names] [dataDir]
@@ -19,34 +19,32 @@ object PlanDumpMain {
   def main(args: Array[String]): Unit = {
     val outDir = Paths.get(args(0))
     val tag = args(1)
-    val dataDir =
-      if (args.length > 3) args(3) else "/root/testdata/sf0.001"
+    val selected = Suite.select(args.lift(2).filter(_.nonEmpty))
+    val dataDir = args.lift(3).getOrElse("/root/testdata/sf0.001")
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names =
-      if (args.length > 2)
-        args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+    val spark = Suite.session(8)
     var failed = 0
-    names.foreach { name =>
+    selected.foreach { q =>
       try {
-        val df = SparkEntry.queries(name)(spark, dataDir)
+        val df = q.run(spark, dataDir)
         df.collect()
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        Files.write(outDir.resolve(s"${name}_$tag.txt"),
+        Files.write(outDir.resolve(s"${q.name}_$tag.txt"),
           plan.getBytes("UTF-8"),
           StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-        println(s"dumped $name")
+        def n(re: String): Int = re.r.findAllIn(plan).length
+        // formatted mode marks codegen'd nodes with a "* " prefix
+        println(s"dumped ${q.name}: ReusedExchange=${n("ReusedExchange")} " +
+          s"Exchange=${n("\\bExchange\\b")} " +
+          s"BroadcastHashJoin=${n("BroadcastHashJoin")} " +
+          s"SortMergeJoin=${n("SortMergeJoin")} " +
+          s"NestedLoop=${n("BroadcastNestedLoopJoin")} " +
+          s"codegen=${n("\\* [A-Z]")}/${n("\\([0-9]+\\)\n")}")
       } catch {
         case e: Throwable =>
           failed += 1
-          System.err.println(s"FAILED $name: ${e.getMessage}")
+          System.err.println(s"FAILED ${q.name}: ${e.getMessage}")
       }
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, Packing, Sampling, Similarity, Temporal, TextAnalysis}
@@ -18,13 +18,7 @@ import graft.operators.{Dedup, Multimodal, Packing, Sampling, Similarity, Tempor
 object ScaleGrowthMain {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Suite.session(32)
 
     val sf = "/root/testdata/sf0.1"
     val docs1 = spark.read.parquet(s"$sf/documents.parquet")

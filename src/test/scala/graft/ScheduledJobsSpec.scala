@@ -100,10 +100,10 @@ class ScheduledJobsSpec extends SparkSpec {
     assert(fired.map(_._1).toSet == Set("nightly_train", "hourly_forecast"))
     assert(!fired.exists(_._2.isInstanceOf[Throwable]))
     assert(engine.loadTrained("m1").modelType == "seasonal")
-    // forecast result is the (frame, violation) pair from the engine
-    val fc = fired.toMap.apply("hourly_forecast")
-      .asInstanceOf[(org.apache.spark.sql.DataFrame, Option[(Long, Double)])]
-    assert(fc._1.count() == 6)
+    // forecast result is the endpoint's series document
+    val fc = org.json4s.jackson.JsonMethods.parse(
+      fired.toMap.apply("hourly_forecast").asInstanceOf[String])
+    assert((fc \ "timestamps").asInstanceOf[org.json4s.JArray].arr.length == 6)
 
     // immediately after, nothing is due (next fire computed off lastRun)
     assert(sj.runDue(744 * HOUR + 1).isEmpty)
@@ -122,5 +122,56 @@ class ScheduledJobsSpec extends SparkSpec {
         |"every":{"count":1,"unit":"seconds"}}""".stripMargin, nowEpoch = 0L)
     val r = sj.runDue(745 * HOUR)
     assert(r.toMap.apply("broken").isInstanceOf[IllegalArgumentException])
+  }
+
+  test("a scheduled _eval runs the eval endpoint: one entry per bucket") {
+    val root = java.nio.file.Files.createTempDirectory("schedeval").toString
+    val reg = new BucketRegistry
+    val dir = java.nio.file.Files.createTempDirectory("pts").toString + "/p"
+    (0 until 744).map(t => (t * HOUR, if (t == 740) 100.0 else 10.0))
+      .toDF("epoch", "value")
+      .select(timestamp_seconds(col("epoch")).as("ts"), col("value"))
+      .write.parquet(dir)
+    reg.register(new ParquetBucket("b1", dir))
+    val engine = new Engine(spark, reg, root)
+    engine.createModel(
+      """{"name":"m1","type":"seasonal","features":[
+        |{"name":"avg_value","metric":"avg","field":"value"}],
+        |"bucket_interval":"1h","default_bucket":"b1"}""".stripMargin)
+    engine.trainModel("m1", "now-30d", "now-1d", nowEpoch = 744 * HOUR)
+
+    val sj = new ScheduledJobs(engine, root)
+    sj.create(
+      """{"name":"hourly_eval","method":"post",
+        |"relative_url":"/models/m1/_eval",
+        |"params":{"from":"now-1d","to":"now"},
+        |"every":{"count":1,"unit":"hours"}}""".stripMargin, nowEpoch = 0L)
+    val fired = sj.runDue(744 * HOUR).toMap
+    val buckets = org.json4s.jackson.JsonMethods.parse(
+      fired("hourly_eval").asInstanceOf[String])
+      .asInstanceOf[org.json4s.JArray].arr
+    assert(buckets.length == 24)
+    assert(buckets.map(b => (b \ "timestamp").asInstanceOf[org.json4s.JInt]
+      .num.toLong) == (720L until 744L).map(_ * HOUR))
+    assert(buckets.exists(b =>
+      (b \ "stats" \ "anomaly") == org.json4s.JBool(true)))
+  }
+
+  test("a job whose method its model endpoint does not accept is " +
+      "rejected at create") {
+    val root = java.nio.file.Files.createTempDirectory("schedget").toString
+    val sj = new ScheduledJobs(new Engine(spark, new BucketRegistry, root),
+      root)
+    val e = intercept[IllegalArgumentException](sj.create(
+      """{"name":"get_train","method":"get",
+        |"relative_url":"/models/m1/_train",
+        |"every":{"count":1,"unit":"hours"}}""".stripMargin))
+    assert(e.getMessage.contains("POST"))
+    assertThrows[IllegalArgumentException](sj.create(
+      """{"name":"post_model","method":"post","relative_url":"/models/m1",
+        |"every":{"count":1,"unit":"hours"}}""".stripMargin))
+    assert(sj.list.isEmpty)
+    assert(new ScheduledJobs(new Engine(spark, new BucketRegistry, root),
+      root).list.isEmpty)
   }
 }
