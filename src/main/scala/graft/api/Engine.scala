@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.io.ModelStore
 import graft.ml.{Annotations, Constraints, Hook, ModelRegistry, TrainedModel}
 import graft.operators.{ConstFill, Feature, Fill, NoFill, PreviousFill, TimesQuery}
 import graft.sources.BucketRegistry
@@ -157,6 +158,9 @@ class Engine(
   private val settings =
     scala.collection.concurrent.TrieMap.empty[String, ModelSettings]
 
+  // a crashed writer's staging leftovers go before this engine writes
+  graft.io.Durable.sweep(java.nio.file.Paths.get(storageRoot))
+
   def createModel(settingsJson: String): ModelSettings = {
     val s = ModelSettings.parse(settingsJson)
     Schemas.requireKey(s.name, "model name")
@@ -223,8 +227,29 @@ class Engine(
     trained.save(storageRoot, name)
   }
 
-  def loadTrained(name: String): TrainedModel =
-    ModelRegistry.load(spark, storageRoot, name)
+  /** One loaded model per name, with the checkpoint version it came from. */
+  private val loaded =
+    scala.collection.concurrent.TrieMap.empty[String, (Int, TrainedModel)]
+
+  /** The model behind `name`'s `ACTIVE` checkpoint. `ACTIVE` (one small
+    * file) is read on every call: while it names the cached version the
+    * cached model answers, with its state already on the driver; a
+    * `_train` or a restore flips it, and the next call loads that
+    * checkpoint and replaces the entry. One entry per model name, so the
+    * cache holds at most the models registered. */
+  def loadTrained(name: String): TrainedModel = {
+    val v = ModelStore.activeVersion(storageRoot, name).getOrElse(
+      throw new IllegalStateException(s"no active checkpoint for $name"))
+    loaded.get(name).filter(_._1 == v).fold {
+      val m = ModelRegistry.load(spark, storageRoot, name, Some(v))
+      // a deleteModel racing this load must not leave its entry behind
+      loaded.synchronized {
+        if (ModelStore.activeVersion(storageRoot, name).contains(v))
+          loaded.put(name, (v, m))
+      }
+      m
+    }(_._2)
+  }
 
   /** `_eval`: score `[from,to[` (context extended back 2 periods for
     * window models, donut.py:1210-1217) and, when `detectAnomalies`, run
@@ -238,8 +263,7 @@ class Engine(
     val p = evalParams(s)
     val f = DateMath.parseTs(from, nowEpoch).toLong
     val t = DateMath.parseTs(to, nowEpoch).toLong
-    val model = loadTrained(name)
-    val scored = EvalStep.predict(model,
+    val scored = EvalStep.predict(loadTrained(name),
       series(s, bucketOf(s, bucket), f - p.contextSec, t),
       s.inputFeature.name, p, f, t)
     if (!detectAnomalies) scored else EvalStep.scan(scored, p)
@@ -289,14 +313,18 @@ class Engine(
     scala.collection.concurrent.TrieMap.empty[String, ScheduledEval]
 
   /** `_start`: the scheduled near-real-time loop with persisted run
-    * state; drive it with [[ScheduledEval.evalOnce]] per trigger.
-    * Idempotent like the reference (`_start` twice returns the existing
-    * scheduled job, server.py:1563-1566). */
+    * state; drive it with [[ScheduledEval.evalOnce]] per trigger. Each
+    * firing resolves the model through [[loadTrained]], so a later
+    * `_train` is scored with, like the reference worker, which loads the
+    * model for every job (worker.py:218-234). Idempotent like the
+    * reference (`_start` twice returns the existing scheduled job,
+    * server.py:1563-1566). */
   def startScheduled(name: String, hooks: Seq[Hook] = Nil,
       bucket: Option[String] = None): ScheduledEval =
     scheduled.getOrElseUpdate(name, {
       val s = getModel(name)
       val b = bucketOf(s, bucket)
+      loadTrained(name) // an untrained model fails at _start
       new ScheduledEval(
         loadTrained(name),
         (from, to) => series(s, b, from, to),
@@ -324,7 +352,10 @@ class Engine(
       val had = settings.remove(n).isDefined
       scheduled.remove(n)
       modelHooks.remove(n)
-      graft.io.Durable.deleteTree(java.nio.file.Paths.get(storageRoot, n))
+      loaded.synchronized {
+        graft.io.Durable.deleteTree(java.nio.file.Paths.get(storageRoot, n))
+        loaded.remove(n)
+      }
       had
     }
 

@@ -253,10 +253,9 @@ class HttpApi(
       // ── train / eval / forecast: job-shaped
       case ("POST", "models" :: name :: endpoint :: Nil)
           if ModelEndpoints.jobTypes.contains(endpoint) =>
-        val rec = runJob(ModelEndpoints.jobTypes(endpoint)) {
-          Some(ModelEndpoints.run(engine, name, endpoint, params,
-            nowMs() / 1000))
-        }
+        val body = ModelEndpoints.prepare(engine, name, endpoint, params,
+          nowMs() / 1000)
+        val rec = runJob(ModelEndpoints.jobTypes(endpoint))(Some(body()))
         (202, jsonStr(rec.id))
 
       // ── scheduled near-real-time loop (server.py:1629-1674)

@@ -13,7 +13,8 @@ import java.util.UUID
   * and each version either whole or not at all. Every write goes to a
   * hidden temp entry in the same directory and becomes visible through
   * one atomic rename. Nothing is fsync'd, so the guarantee covers a
-  * crashed process, not a power cut.
+  * crashed process, not a power cut. What a crash leaves behind is hidden
+  * and removed by [[sweep]].
   */
 object Durable {
 
@@ -107,6 +108,23 @@ object Durable {
       val s = Files.list(dir)
       try s.toArray.toSeq.map(_.asInstanceOf[Path].getFileName.toString)
       finally s.close()
+    }
+
+  /** Delete what writers that crashed left under `root`: the hidden
+    * `.stage-*` directories of [[Versioned.commit]] and the hidden `.*.tmp`
+    * files of [[write]]. Readers already skip both; run it only while no
+    * writer is active on `root`, as [[graft.api.Engine]] does when it is
+    * constructed. */
+  def sweep(root: Path): Unit =
+    if (Files.isDirectory(root)) {
+      val walk = Files.walk(root)
+      val leftovers =
+        try walk.toArray.toSeq.map(_.asInstanceOf[Path]).filter { p =>
+          val n = p.getFileName.toString
+          n.startsWith(".stage-") && Files.isDirectory(p) ||
+            n.startsWith(".") && n.endsWith(".tmp") && Files.isRegularFile(p)
+        } finally walk.close()
+      leftovers.foreach(deleteTree)
     }
 
   /** Delete `root` and everything under it, if it exists. */

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Output formatting — the REST-response shapes of the reference
@@ -25,8 +25,13 @@ object Format {
     * (/root/reference/loudml/donut.py:331-358). Optional predicted columns
     * become `predicted: {f: [...], lower_f: [...], upper_f: [...]}`. */
   def series(df: DataFrame, features: Seq[String],
-      predicted: Boolean = false): String = {
-    val rows = df.orderBy("bucket").collect()
+      predicted: Boolean = false): String =
+    JsonMethods.compact(JsonMethods.render(seriesDoc(df, features, predicted)))
+
+  /** [[series]] as a JSON object, for a caller that adds fields. */
+  def seriesDoc(df: DataFrame, features: Seq[String],
+      predicted: Boolean = false): JObject = {
+    val rows = byBucket(df)
     def colVals(c: String): JArray =
       JArray(rows.map(r => nanSafe(r.get(r.fieldIndex(c)))).toList)
     val base: List[(String, JValue)] = List(
@@ -38,13 +43,13 @@ object Format {
       else List("predicted" -> JObject(
         ("predicted" -> colVals("predicted")) ::
           ("lower" -> colVals("lower")) :: ("upper" -> colVals("upper")) :: Nil))
-    JsonMethods.compact(JsonMethods.render(JObject(base ++ pred)))
+    JObject(base ++ pred)
   }
 
   /** Row-wise bucket list with per-bucket stats — `format_buckets`
     * (/root/reference/loudml/donut.py:370-412). */
   def buckets(df: DataFrame, features: Seq[String]): String = {
-    val rows = df.orderBy("bucket").collect()
+    val rows = byBucket(df)
     val arr = JArray(rows.map { r =>
       val stats =
         (if (r.schema.fieldNames.contains("score"))
@@ -60,6 +65,13 @@ object Format {
           f -> nanSafe(r.get(r.fieldIndex(f)))).toList))
     }.toList)
     JsonMethods.compact(JsonMethods.render(arr))
+  }
+
+  /** The frame's rows sorted by `bucket` on the driver: a response frame
+    * is O(buckets), and a local one collects without a Spark job. */
+  private def byBucket(df: DataFrame): Array[Row] = {
+    val b = df.schema.fieldIndex("bucket")
+    df.collect().sortBy(_.getLong(b))
   }
 }
 

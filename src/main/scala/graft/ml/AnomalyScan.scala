@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BooleanType, DoubleType, StringType, StructField, StructType}
 
 /** The stateful anomaly hysteresis scan — Spark restatement of the
@@ -27,8 +28,10 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, StringType, StructFi
   * Dataset-typed `mapPartitions` pass (rows never leave Tungsten) keeps
   * O(1) state and resets it on key change — no per-group materialization,
   * no driver collect, so a million independent series scan in parallel
-  * while each series stays ordered. For the reference's single-series case
-  * this degenerates to one task, same as the reference's sequential loop.
+  * while each series stays ordered. A single series runs the same kernel
+  * through [[Local.series]]: on the driver when the scored window is a
+  * local frame, else as one sorted partition — the reference's
+  * sequential loop.
   */
 /** The persisted anomaly run state — what the reference keeps in
   * `model._state` across scheduled evals (`last_anomaly_ts` + the open
@@ -110,14 +113,7 @@ object AnomalyScan {
           inSchema.fieldIndex("__init_episode_max")))
       else None
 
-    val arranged =
-      if (seriesKeys.isEmpty) scored.repartition(1).sortWithinPartitions(bucketCol)
-      else scored.repartition(seriesKeys.map(org.apache.spark.sql.functions.col): _*)
-        .sortWithinPartitions(
-          (seriesKeys.map(org.apache.spark.sql.functions.col) :+
-            org.apache.spark.sql.functions.col(bucketCol)): _*)
-
-    arranged.mapPartitions { it =>
+    val kernel: Iterator[Row] => Iterator[Row] = { it =>
       // unkeyed scans resume from `initial` (cross-run state, §2.9);
       // keyed scans always start fresh per series (curKey=null forces the
       // first-row reset)
@@ -158,6 +154,13 @@ object AnomalyScan {
         val epi: java.lang.Double = if (marker != null) episodeMax else null
         Row.fromSeq(r.toSeq ++ Seq(marker, detected, epi))
       }
-    }(Encoders.row(outSchema))
+    }
+    if (seriesKeys.isEmpty) Local.series(scored, bucketCol, outSchema)(kernel)
+    else {
+      val keys = seriesKeys.map(col)
+      scored.repartition(keys: _*)
+        .sortWithinPartitions((keys :+ col(bucketCol)): _*)
+        .mapPartitions(kernel)(Encoders.row(outSchema))
+    }
   }
 }

@@ -34,18 +34,19 @@ object Constraints {
 
   /** First forecast bucket where the constraint is met, if any:
     * low → predicted < threshold, high → predicted > threshold.
-    * One filtered limit-1 scan over the (model-sized) forecast frame. */
+    * The forecast frame is model-sized: its two columns are collected
+    * and searched on the driver (no Spark job over a local forecast). */
   def firstViolation(
       forecast: DataFrame, c: Constraint,
       predictedCol: String = "predicted"): Option[(Long, Double)] = {
-    val pred = col(predictedCol)
-    val hit = c.kind match {
-      case "low"  => pred < c.threshold
-      case _      => pred > c.threshold
+    val hit: Double => Boolean = c.kind match {
+      case "low"  => _ < c.threshold
+      case _      => _ > c.threshold
     }
-    forecast.filter(hit).orderBy("bucket")
-      .select(col("bucket"), pred).limit(1).collect()
-      .headOption.map(r => (r.getLong(0), r.getDouble(1)))
+    forecast.select(col("bucket"), col(predictedCol)).collect()
+      .collect { case r if !r.isNullAt(1) && hit(r.getDouble(1)) =>
+        (r.getLong(0), r.getDouble(1)) }
+      .minByOption(_._1)
   }
 
   /** Top-N abnormal series keys from a keyed scan output — the

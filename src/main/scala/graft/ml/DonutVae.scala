@@ -765,7 +765,7 @@ object DonutVae extends ModelType {
           val half = z * sigma + noisePerStep * h * math.abs(pred)
           (b, pred, pred - half, pred + half)
         }.toSeq
-      rows.toDF("bucket", "predicted", "lower", "upper").orderBy("bucket")
+      rows.toDF("bucket", "predicted", "lower", "upper")
     }
   }
 }

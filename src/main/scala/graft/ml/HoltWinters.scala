@@ -29,8 +29,8 @@ import graft.io.Json
   * Prediction and forecasting are pure per-bucket projections from the
   * frozen end-of-training state (level + h·trend + season[slot] ± z·σ),
   * keyed: a fleet's states (one row per series, [[HoltWinters.train]])
-  * join the bucketed frame by key; a solo model is the one-row state
-  * with the empty key — fully distributed, no extra shuffle.
+  * join the bucketed frame by key; a solo model carries its state into
+  * the plan as literals — no join, and over a local series no Spark job.
   */
 /** Smoothing constants. β defaults SMALL deliberately: with long seasonal
   * periods (m = 24, 168 …) the coupled level/trend/season system has
@@ -238,10 +238,14 @@ object HoltWinters {
       p: HoltWintersParams, z: Double = 3.0): DataFrame = {
     val spine = states.sparkSession.range(from, to, p.bucketInterval)
       .select(col("id").as("bucket"))
-    withBands(states.crossJoin(spine), p, z)
+    forecastBands(states.crossJoin(spine), keys, p, z)
+  }
+
+  private def forecastBands(withState: DataFrame, keys: Seq[String],
+      p: HoltWintersParams, z: Double): DataFrame =
+    withBands(withState, p, z)
       .select((keys.map(col) :+ col("bucket")) ++
         Seq(col("predicted"), col("lower"), col("upper")): _*)
-  }
 
   /** Score an observed bucketized frame against the states: join by key
     * (`keys = Nil`: the one-row state crosses a single series), project
@@ -249,9 +253,32 @@ object HoltWinters {
   def predict(bucketed: DataFrame, states: DataFrame, valueCol: String,
       keys: Seq[String], p: HoltWintersParams,
       anomalyType: String = "low_high", z: Double = 3.0): DataFrame =
-    withBands(bucketed.join(states, keys), p, z)
+    scored(bucketed.join(states, keys), valueCol, p, anomalyType, z)
+
+  private def scored(withState: DataFrame, valueCol: String,
+      p: HoltWintersParams, anomalyType: String, z: Double): DataFrame =
+    withBands(withState, p, z)
       .withColumn("score", Stats.anomalyScore(
         col(valueCol), col("predicted"), col("upper"), anomalyType))
+
+  /** A single series' state as literal columns: a projection in place of
+    * the cross join with a one-row state. */
+  private def withState(df: DataFrame, st: HoltWintersState): DataFrame =
+    df.select(col("*"), lit(st.level).as("level"), lit(st.trend).as("trend"),
+      lit(st.sigma).as("sigma"), lit(st.lastBucket).as("last_bucket"),
+      typedLit(st.season.toSeq).as("season"))
+
+  /** [[predict]] for a single series whose state is on the driver. */
+  private[ml] def predictSolo(bucketed: DataFrame, st: HoltWintersState,
+      valueCol: String, p: HoltWintersParams, anomalyType: String): DataFrame =
+    scored(withState(bucketed, st), valueCol, p, anomalyType, z = 3.0)
+
+  /** [[forecast]] for a single series whose state is on the driver, over a
+    * local spine: rows in bucket order, no Spark job. */
+  private[ml] def forecastSolo(spark: SparkSession, st: HoltWintersState,
+      from: Long, to: Long, p: HoltWintersParams, z: Double): DataFrame =
+    forecastBands(withState(Local.range(spark, from, to, p.bucketInterval), st),
+      Nil, p, z)
 }
 
 /** Registry wrapper: settings `{"type":"holtwinters","bucket_interval":N,
@@ -327,14 +354,9 @@ object HoltWintersType extends ModelType {
       p: HoltWintersParams, st: HoltWintersState) extends TrainedModel {
     val modelType: String = name
 
-    /** The one-row state with the empty key. */
-    private def state(spark: SparkSession): DataFrame =
-      Keyed.soloState(spark, HoltWinters.keyedState(Nil, st))
-
     def predict(bucketed: DataFrame, valueCol: String,
         anomalyType: String = "low_high"): DataFrame =
-      HoltWinters.predict(bucketed, state(bucketed.sparkSession), valueCol,
-        Nil, p, anomalyType)
+      HoltWinters.predictSolo(bucketed, st, valueCol, p, anomalyType)
 
     def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
       forecastCI(spark, from, to, 0.9973002039367398, 0.0)
@@ -343,18 +365,16 @@ object HoltWintersType extends ModelType {
         percentInterval: Double, percentNoise: Double): DataFrame = {
       val z = Stats.normPpf(1.0 - (1.0 - percentInterval) / 2.0)
       val noisePerStep = percentNoise * p.bucketInterval.toDouble / 86400.0
-      val base = HoltWinters.forecast(state(spark), Nil, from, to, p, z)
-      val out =
-        if (noisePerStep == 0.0) base
-        else {
-          val half = lit(z * st.sigma) + lit(noisePerStep) *
-            ((col("bucket") - lit(from)) / lit(p.bucketInterval)).cast("long") *
-            abs(col("predicted"))
-          base
-            .withColumn("lower", col("predicted") - half)
-            .withColumn("upper", col("predicted") + half)
-        }
-      out.orderBy("bucket")
+      val base = HoltWinters.forecastSolo(spark, st, from, to, p, z)
+      if (noisePerStep == 0.0) base
+      else {
+        val half = lit(z * st.sigma) + lit(noisePerStep) *
+          ((col("bucket") - lit(from)) / lit(p.bucketInterval)).cast("long") *
+          abs(col("predicted"))
+        base
+          .withColumn("lower", col("predicted") - half)
+          .withColumn("upper", col("predicted") + half)
+      }
     }
   }
 }

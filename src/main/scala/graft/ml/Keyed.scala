@@ -99,15 +99,17 @@ private[ml] object Keyed {
   }
 
   /** Score a bucketized frame against per-key window-model states
-    * (`(keys…, weights, sigma, mu, sd, slot_mean, slot_sigma)`): cogroup
-    * each key's rows with its state row, sort the series, and slide a
-    * window over the last `span` ROWS ending at each bucket. `scorer`
-    * builds the per-key kernel ONCE (weights decode once per key) that
-    * maps `(endBucket, window)` to `(predicted, half-band)`. Output:
-    * every input column (the input row is carried through) plus
-    * `predicted`, `lower`, `upper` and the Φ-`score`. Keys without a
-    * state emit nothing. The series should extend span−1 buckets back
-    * past the scoring range for full context (donut.py:1210-1217). */
+    * (`(keys…, weights, sigma, mu, sd, slot_mean, slot_sigma)`): each
+    * key's series, sorted by bucket, slides a window over the last `span`
+    * ROWS ending at each bucket. `scorer` builds the per-key kernel ONCE
+    * (weights decode once per key) that maps `(endBucket, window)` to
+    * `(predicted, half-band)`. Output: every input column (the input row
+    * is carried through) plus `predicted`, `lower`, `upper` and the
+    * Φ-`score`. Keys without a state emit nothing. The series should
+    * extend span−1 buckets back past the scoring range for full context
+    * (donut.py:1210-1217). A fleet cogroups each key's rows with its state
+    * row; a single series (`keys = Nil`) brings its one state to the
+    * driver and runs through [[Local.series]]. */
   def scoreWindows(bucketed: DataFrame, states: DataFrame, valueCol: String,
       keys: Seq[String], span: Int, anomalyType: String)(
       scorer: WindowState => (Long, Series) => (Double, Double)): DataFrame = {
@@ -115,41 +117,41 @@ private[ml] object Keyed {
     val outSchema = StructType(bucketed.schema.fields ++
       Seq("predicted", "lower", "upper")
         .map(StructField(_, DoubleType, nullable = true)))
-    // a single series is one group: one task on a single-partition
-    // exchange, not one key hashed over spark.sql.shuffle.partitions
-    // partitions on both sides (the daemon runs at Spark's default 200)
-    val (in, stIn) =
-      if (keys.isEmpty) (bucketed.repartition(1), states.coalesce(1))
-      else (bucketed, states)
-    val rows = in.select(col("*"), keyCol(keys).as("__k"),
+    val rows = bucketed.select(col("*"), keyCol(keys).as("__k"),
       col("bucket").cast("long").as("__b"), col(valueCol).cast("double").as("__v"))
     val (kIdx, bIdx, vIdx) = (n, n + 1, n + 2)
-    val pts = rows.groupByKey(_.getSeq[String](kIdx))(keyEncoder)
-    val sts = stIn.select(keyCol(keys).as("k"),
+    val sts = states.select(keyCol(keys).as("k"),
         col("weights").cast("array<double>").as("weights"),
         col("sigma").cast("double").as("sigma"),
         col("mu").cast("double").as("mu"),
         col("sd").cast("double").as("sd"),
         col("slot_mean").cast("array<double>").as("slot_mean"),
         col("slot_sigma").cast("array<double>").as("slot_sigma"))
-      .as[WindowState].groupByKey(_.k)(keyEncoder)
-    val scored = pts.cogroup(sts) { (_, points, stRows) =>
-      stRows.nextOption() match {
-        case None => Iterator.empty
-        case Some(st) =>
-          val score = scorer(st)
-          val sorted = points.toVector.sortBy(_.getLong(bIdx))
-          val series = sorted.map(r => (r.getLong(bIdx),
-            if (r.isNullAt(vIdx)) None else Some(r.getDouble(vIdx))))
-          sorted.indices.iterator.map { i =>
-            val b = series(i)._1
-            val (pred, half) =
-              score(b, series.slice(math.max(0, i - span + 1), i + 1))
-            Row.fromSeq(sorted(i).toSeq.take(n) ++
-              Seq(pred, pred - half, pred + half))
-          }
+      .as[WindowState]
+    // one key: its bucket-sorted rows scored against its state
+    def score(st: WindowState, sorted: IndexedSeq[Row]): Iterator[Row] = {
+      val f = scorer(st)
+      val series = sorted.map(r => (r.getLong(bIdx),
+        if (r.isNullAt(vIdx)) None else Some(r.getDouble(vIdx))))
+      sorted.indices.iterator.map { i =>
+        val (pred, half) =
+          f(series(i)._1, series.slice(math.max(0, i - span + 1), i + 1))
+        Row.fromSeq(sorted(i).toSeq.take(n) ++
+          Seq(pred, pred - half, pred + half))
       }
-    }(Encoders.row(outSchema))
+    }
+    val scored =
+      if (keys.isEmpty) {
+        // a solo model's state is a local frame: collecting it is free
+        val st = sts.collect().headOption
+        Local.series(rows, "__b", outSchema)(it =>
+          st.fold(Iterator.empty[Row])(score(_, it.toVector)))
+      } else
+        rows.groupByKey(_.getSeq[String](kIdx))(keyEncoder)
+          .cogroup(sts.groupByKey(_.k)(keyEncoder)) { (_, points, stRows) =>
+            stRows.nextOption().fold(Iterator.empty[Row])(st =>
+              score(st, points.toVector.sortBy(_.getLong(bIdx))))
+          }(Encoders.row(outSchema))
     scored.withColumn("score", Stats.anomalyScore(
       col(valueCol), col("predicted"), col("upper"), anomalyType))
   }

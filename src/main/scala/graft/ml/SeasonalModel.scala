@@ -72,18 +72,26 @@ object SeasonalModel {
       valueCol: String,
       keys: Seq[String],
       p: SeasonalModelParams,
-      anomalyType: String = "low_high"): DataFrame = {
-    val joined = bucketed
-      .withColumn("slot", slotCol(col("bucket"), p))
+      anomalyType: String = "low_high"): DataFrame =
+    scored(joinProfile(bucketed, profile, keys, p), valueCol, anomalyType)
+
+  /** `df` with its slot's `mu` and `sigma` joined from `profile` (inner:
+    * a slot or key the profile lacks drops the row). */
+  private def joinProfile(df: DataFrame, profile: DataFrame,
+      keys: Seq[String], p: SeasonalModelParams): DataFrame =
+    df.withColumn("slot", slotCol(col("bucket"), p))
       .join(if (keys.isEmpty) broadcast(profile) else profile, keys :+ "slot")
-    joined
+
+  /** Bands and score from the `slot`/`mu`/`sigma` columns, which go. */
+  private[ml] def scored(withProfile: DataFrame, valueCol: String,
+      anomalyType: String): DataFrame =
+    withProfile
       .withColumn("predicted", col("mu"))
       .withColumn("lower", col("mu") - lit(3.0) * col("sigma"))
       .withColumn("upper", col("mu") + lit(3.0) * col("sigma"))
       .withColumn("score",
         Stats.anomalyScore(col(valueCol), col("predicted"), col("upper"), anomalyType))
       .drop("slot", "mu", "sigma")
-  }
 
   /** Forecast `[from, to[`: future spine joined with the profile — bands
     * only, no observations (the reference's `forecast` analog,
@@ -95,7 +103,8 @@ object SeasonalModel {
       from: Long,
       to: Long,
       p: SeasonalModelParams): DataFrame =
-    forecastBands(spark, profile, from, to, p, z = 3.0, noisePerStep = 0.0)
+    forecastBands(spine(spark, profile, from, to, p), from, p, z = 3.0,
+      noisePerStep = 0.0)
 
   /** Forecast at a requested confidence (`percent_interval`) with noise
     * growth over the horizon (`percent_noise`) — the reference's forecast
@@ -108,28 +117,67 @@ object SeasonalModel {
       spark: SparkSession, profile: DataFrame, from: Long, to: Long,
       p: SeasonalModelParams, percentInterval: Double,
       percentNoise: Double): DataFrame =
-    forecastBands(spark, profile, from, to, p,
+    ciBands(spine(spark, profile, from, to, p), from, p, percentInterval,
+      percentNoise)
+
+  private[ml] def ciBands(withProfile: DataFrame, from: Long,
+      p: SeasonalModelParams, percentInterval: Double,
+      percentNoise: Double): DataFrame =
+    forecastBands(withProfile, from, p,
       z = Stats.normPpf(1.0 - (1.0 - percentInterval) / 2.0),
       noisePerStep = percentNoise * p.bucketInterval.toDouble / 86400.0)
 
-  private def forecastBands(
-      spark: SparkSession, profile: DataFrame, from: Long, to: Long,
+  private def spine(spark: SparkSession, profile: DataFrame, from: Long,
+      to: Long, p: SeasonalModelParams): DataFrame =
+    joinProfile(spark.range(from, to, p.bucketInterval)
+      .select(col("id").as("bucket")), profile, Nil, p)
+
+  /** Bands over a future spine carrying `mu`/`sigma`; rows keep the
+    * spine's bucket order. */
+  private[ml] def forecastBands(withProfile: DataFrame, from: Long,
       p: SeasonalModelParams, z: Double, noisePerStep: Double): DataFrame = {
-    val spine = spark.range(from, to, p.bucketInterval)
-      .select(col("id").as("bucket"))
     val half =
       if (noisePerStep == 0.0) lit(z) * col("sigma")
       else lit(z) * col("sigma") +
         lit(noisePerStep) * ((col("bucket") - lit(from)) / lit(p.bucketInterval))
           .cast("long") * abs(col("mu"))
-    spine
-      .withColumn("slot", slotCol(col("bucket"), p))
-      .join(broadcast(profile), "slot")
+    withProfile
       .withColumn("predicted", col("mu"))
       .withColumn("lower", col("mu") - half)
       .withColumn("upper", col("mu") + half)
       .select("bucket", "predicted", "lower", "upper")
-      .orderBy("bucket")
+  }
+
+  /** A single series' profile held on the driver, indexed by slot over
+    * every slot of the period: whether the profile has the slot, and its
+    * μ and σ. */
+  private[ml] final case class Slots(has: Seq[Boolean], mu: Seq[Option[Double]],
+      sigma: Seq[Option[Double]])
+
+  /** Collect a single series' `(slot, mu, sigma)` profile (model-sized). */
+  private[ml] def collectSlots(profile: DataFrame,
+      p: SeasonalModelParams): Slots = {
+    val rows = profile.select(col("slot").cast("long"),
+      col("mu").cast("double"), col("sigma").cast("double")).collect()
+    val bySlot = rows.map(r => r.getLong(0) -> r).toMap
+    val n = (bySlot.keys.toSeq :+ (p.period - 1) / p.bucketInterval).max + 1
+    def value(i: Int)(s: Long): Option[Double] =
+      bySlot.get(s).filterNot(_.isNullAt(i)).map(_.getDouble(i))
+    Slots((0L until n).map(bySlot.contains), (0L until n).map(value(1)),
+      (0L until n).map(value(2)))
+  }
+
+  /** `df` with its slot's `mu` and `sigma` from a collected profile: array
+    * literals indexed by slot, a projection and a filter instead of a
+    * join. A slot the profile lacks drops the row, as the join does. */
+  private[ml] def withSlots(df: DataFrame, s: Slots,
+      p: SeasonalModelParams): DataFrame = {
+    def at(values: Column): Column =
+      element_at(values, (col("slot") + 1).cast("int"))
+    df.withColumn("slot", slotCol(col("bucket"), p))
+      .filter(at(typedLit(s.has)))
+      .withColumn("mu", at(typedLit(s.mu)))
+      .withColumn("sigma", at(typedLit(s.sigma)))
   }
 
   /** Mean squared error between observed and predicted
@@ -216,23 +264,36 @@ object SeasonalModelType extends ModelType {
       SeasonalModel.train(bucketed, valueCol, Nil, parseParams(settingsJson)),
       parseParams(settingsJson))
 
-  def load(spark: SparkSession, profile: DataFrame, settingsJson: String): TrainedModel =
-    new TrainedSeasonal(profile, parseParams(settingsJson))
+  def load(spark: SparkSession, profile: DataFrame, settingsJson: String): TrainedModel = {
+    val m = new TrainedSeasonal(profile, parseParams(settingsJson))
+    m.slots // collect the profile once, at load
+    m
+  }
 
+  /** A single series: the profile is collected once, and predict and
+    * forecast carry it into the plan as literals
+    * ([[SeasonalModel.withSlots]]), so over a local series or spine they
+    * start no Spark job. */
   final class TrainedSeasonal(
       val profile: DataFrame, p: SeasonalModelParams) extends TrainedModel {
+    private[ml] lazy val slots = SeasonalModel.collectSlots(profile, p)
     def modelType: String = name
     def settingsJson: String =
       s"""{"type":"$name","bucket_interval":${p.bucketInterval},""" +
         s""""period":${p.period}}"""
     def predict(bucketed: DataFrame, valueCol: String,
         anomalyType: String = "low_high"): DataFrame =
-      SeasonalModel.predict(bucketed, profile, valueCol, Nil, p, anomalyType)
+      SeasonalModel.scored(SeasonalModel.withSlots(bucketed, slots, p),
+        valueCol, anomalyType)
     def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
-      SeasonalModel.forecast(spark, profile, from, to, p)
+      SeasonalModel.forecastBands(spine(spark, from, to), from, p, z = 3.0,
+        noisePerStep = 0.0)
     def forecastCI(spark: SparkSession, from: Long, to: Long,
         percentInterval: Double, percentNoise: Double): DataFrame =
-      SeasonalModel.forecastCI(spark, profile, from, to, p,
-        percentInterval, percentNoise)
+      SeasonalModel.ciBands(spine(spark, from, to), from, p, percentInterval,
+        percentNoise)
+    private def spine(spark: SparkSession, from: Long, to: Long): DataFrame =
+      SeasonalModel.withSlots(Local.range(spark, from, to, p.bucketInterval),
+        slots, p)
   }
 }

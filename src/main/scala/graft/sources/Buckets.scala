@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The bucket (data source/sink) seam — Spark restatement of the
   * reference's abstract `Bucket` (/root/reference/loudml/bucket.py:29-74:
@@ -87,15 +88,35 @@ object BucketSettings {
   }
 }
 
+/** A bucket of self-describing files whose reader infers the schema
+  * from one file. The schema is resolved by the first read that
+  * succeeds and passed to every later read, which skips the
+  * footer-reading inference job; each read still lists the files, so
+  * appended files are seen. A `writePoints` that adds a field drops the
+  * resolved schema; a field that another writer adds stays hidden until
+  * the bucket is re-registered. */
+abstract class FixedSchemaBucket(format: String, path: String) extends Bucket {
+  @volatile private var schema: Option[StructType] = None
+
+  def readPoints(spark: SparkSession): DataFrame = {
+    val df = schema.fold(spark.read)(spark.read.schema).format(format).load(path)
+    schema = Some(df.schema)
+    df
+  }
+
+  override def writePoints(df: DataFrame): Unit = {
+    df.write.mode("append").format(format).save(path)
+    if (schema.exists(s => !df.columns.forall(s.fieldNames.contains)))
+      schema = None
+  }
+}
+
 /** Parquet-backed bucket (the 100 TB shape: date-partitioned parquet with
   * pushdown + pruning). `path` may be a partitioned directory. */
 final class ParquetBucket(
     val name: String, path: String,
-    override val timestampField: String = "ts") extends Bucket {
-  def readPoints(spark: SparkSession): DataFrame = spark.read.parquet(path)
-  override def writePoints(df: DataFrame): Unit =
-    df.write.mode("append").parquet(path)
-}
+    override val timestampField: String = "ts")
+  extends FixedSchemaBucket("parquet", path)
 
 /** One driver testdata table as a bucket (nanos-ts normalization via
   * [[Tables.load]]). */
@@ -131,11 +152,8 @@ final class JsonBucket(
   * shops standardized on ORC. */
 final class OrcBucket(
     val name: String, path: String,
-    override val timestampField: String = "ts") extends Bucket {
-  def readPoints(spark: SparkSession): DataFrame = spark.read.orc(path)
-  override def writePoints(df: DataFrame): Unit =
-    df.write.mode("append").orc(path)
-}
+    override val timestampField: String = "ts")
+  extends FixedSchemaBucket("orc", path)
 
 /** JDBC bucket — the one "external store" connector class buildable in a
   * network-less sandbox (embedded/file-backed engines like Derby; in

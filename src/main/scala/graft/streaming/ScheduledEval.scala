@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ml.{AnomalyScan, Hook, Hooks, RunState, TrainedModel}
+import graft.ml.{AnomalyScan, Hook, Hooks, Local, RunState, TrainedModel}
 
 /** A model's eval settings (loudml/model.py:207-264):
   * trigger period, allowed data latency, thresholds, grace, the lag
@@ -35,9 +35,11 @@ final case class EvalParams(
   * resuming the persisted run state, so an anomaly spanning two eval
   * windows fires exactly one start and one end. The caller's scheduler
   * (cron, a `foreachBatch`, [[graft.api.ScheduledJobs]]) owns the clock;
-  * [[evalOnce]] is one firing. */
+  * [[evalOnce]] is one firing. `model` is evaluated on every firing, so
+  * a caller that resolves it there (as [[graft.api.Engine.startScheduled]]
+  * does) scores each firing with the checkpoint active at that time. */
 class ScheduledEval(
-    model: TrainedModel,
+    model: => TrainedModel,
     fetch: (Long, Long) => DataFrame, // [from,to[ → spine-complete series
     params: EvalParams,
     stateRoot: String,
@@ -71,10 +73,13 @@ class ScheduledEval(
 object EvalStep {
 
   /** Score `series` with the input feature `feature` and the params'
-    * anomaly type; keep `[from, to[`. */
+    * anomaly type; keep `[from, to[`. The series (O(buckets)) is
+    * collected once, here: a model that scores by projections and
+    * driver-side kernels then starts no further Spark job
+    * ([[graft.ml.Local]]). */
   def predict(model: TrainedModel, series: DataFrame, feature: String,
       params: EvalParams, from: Long, to: Long): DataFrame =
-    model.predict(series, feature, params.anomalyType)
+    model.predict(Local.collect(series), feature, params.anomalyType)
       .filter(col("bucket") >= from && col("bucket") < to)
 
   /** Hysteresis scan of a predicted window resumed from `initial`; a
@@ -97,13 +102,12 @@ object EvalStep {
     val before = StateStore.load(stateRoot, modelName)
     val scanned = scan(predict(model, series, feature, params, from, to),
       params, before)
-    // a single-series scan is one partition sorted by bucket, so the
-    // collected rows are in bucket order
+    // a single-series scan runs in bucket order, so the collected rows
+    // are in bucket order
     val rows = scanned.collect()
     Hooks.fire(rows.iterator, hooks, feature)
     StateStore.save(stateRoot, modelName, RunState.fold(rows, before))
-    scanned.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), scanned.schema)
+    Local.frame(scanned.sparkSession, rows.toSeq, scanned.schema)
   }
 }
 

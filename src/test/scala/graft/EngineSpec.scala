@@ -304,6 +304,49 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  test("boot sweeps crash leftovers: staging dirs and temp files go, " +
+      "checkpoints, ACTIVE, run state, bucket and scheduled-job JSON stay") {
+    import java.nio.file.{Files, Paths}
+    val (engine, root) = newEngine()
+    val dir = Files.createTempDirectory("sweep").toString + "/pts"
+    (0 until 48).map(t => (t * HOUR, 10.0)).toDF("epoch", "value")
+      .select(timestamp_seconds(col("epoch")).as("ts"), col("value"))
+      .write.parquet(dir)
+    engine.createBucket(s"""{"name": "pts", "type": "parquet", "path": "$dir"}""")
+    engine.createModel(
+      """{"name": "m", "type": "seasonal", "default_bucket": "pts",
+        |  "features": [{"name": "avg_v", "metric": "avg", "field": "value"}],
+        |  "bucket_interval": "1h"}""".stripMargin)
+    assert(engine.trainModel("m", "0", (48L * HOUR).toString) == 1)
+    val state = graft.ml.RunState(open = true, lastEndTs = Some(7L), episodeMax = 99.0)
+    graft.streaming.StateStore.save(root, "m", state)
+    new graft.api.ScheduledJobs(engine, root).create(
+      """{"name": "nightly", "method": "post", "relative_url": "/models/m/_train",
+        |"params": {"from": "now-2d", "to": "now"},
+        |"every": {"count": 1, "unit": "day"}}""".stripMargin, nowEpoch = 0L)
+
+    // what a crash mid-commit and mid-write leaves behind
+    val stage = Paths.get(root, "m", ".stage-0b1c")
+    Files.createDirectories(stage.resolve("profile.parquet"))
+    Files.writeString(stage.resolve("settings.json"), "{}")
+    val tmps = Seq(Paths.get(root, "m", ".ACTIVE.0b1c.tmp"),
+      Paths.get(root, "m", ".run_state.json.0b1c.tmp"),
+      Paths.get(root, "buckets", ".pts.json.0b1c.tmp"),
+      Paths.get(root, "scheduled_jobs", ".nightly.json.0b1c.tmp"))
+    tmps.foreach(Files.writeString(_, "partial"))
+
+    val rebooted = new Engine(spark, new BucketRegistry, root)
+    assert(!Files.exists(stage))
+    tmps.foreach(t => assert(!Files.exists(t), t))
+    assert(Files.isDirectory(Paths.get(root, "m", "ckpt-1")))
+    assert(graft.io.ModelStore.activeVersion(root, "m").contains(1))
+    assert(graft.streaming.StateStore.load(root, "m") == state)
+    assert(rebooted.listBuckets() == Seq("pts"))
+    assert(new graft.api.ScheduledJobs(rebooted, root).list.map(_.name) == Seq("nightly"))
+    rebooted.createModel(engine.getModel("m").raw)
+    assert(rebooted.evalModel("m", "0", (24L * HOUR).toString).count() == 24)
+  }
+
   test("key schema validation mirrors tests/test_schemas.py:test_key") {
     import graft.api.Schemas
     Seq("foo", "foo_bar", "Foo-Bar", "00_foo_00_bar_001", "_foo")

@@ -182,6 +182,66 @@ class HttpApiSpec extends SparkSpec {
     }
   }
 
+  /** A server with a seasonal model `mc` trained on a flat-10 series. */
+  private def withTrainedModel(test: String => Unit): Unit =
+    withServer { (base, _) =>
+      val dir = java.nio.file.Files.createTempDirectory("httpfc")
+        .toString + "/pts"
+      (0 until 744).map(t => (t * HOUR, 10.0)).toDF("epoch", "value")
+        .select(timestamp_seconds(col("epoch")).as("ts"), col("value"))
+        .write.parquet(dir)
+      assert(send("POST", s"$base/buckets",
+        s"""{"name": "pts", "type": "parquet", "path": "$dir"}""")
+        .statusCode() == 201)
+      assert(send("POST", s"$base/models",
+        """{"name": "mc", "type": "seasonal",
+          |  "features": [{"name": "avg_v", "metric": "avg", "field": "value"}],
+          |  "bucket_interval": "1h", "default_bucket": "pts"}""".stripMargin)
+        .statusCode() == 201)
+      jobResult(base, send("POST", s"$base/models/mc/_train?from=0&to=${720L * HOUR}"))
+      test(base)
+    }
+
+  private def forecastWith(base: String, constraint: String) =
+    send("POST", s"$base/models/mc/_forecast?from=${744L * HOUR}" +
+      s"&to=${768L * HOUR}&constraint=${enc(constraint)}")
+
+  test("_forecast constraint met: the document reports the first " +
+      "violating bucket (worker.py:299-318)") {
+    withTrainedModel { base =>
+      val doc = jobResult(base, forecastWith(base, "avg_v:low:50"))
+      assert((doc \ "timestamps").children.length == 24)
+      val c = doc \ "constraint"
+      assert((c \ "timestamp") == org.json4s.JInt(744L * HOUR), c)
+      assert((c \ "type") == org.json4s.JString("low"))
+      assert((c \ "threshold") == org.json4s.JDouble(50.0))
+      assert(math.abs((c \ "predicted").asInstanceOf[org.json4s.JDouble].num - 10.0) < 1e-6)
+    }
+  }
+
+  test("_forecast constraint not met: the document's constraint is null; " +
+      "without the parameter the document has no constraint field") {
+    withTrainedModel { base =>
+      val doc = jobResult(base, forecastWith(base, "avg_v:high:50"))
+      assert((doc \ "constraint") == org.json4s.JNull)
+      val plain = jobResult(base, send("POST",
+        s"$base/models/mc/_forecast?from=${744L * HOUR}&to=${768L * HOUR}"))
+      assert((plain \ "constraint") == org.json4s.JNothing)
+      assert((plain \ "timestamps") == (doc \ "timestamps"))
+    }
+  }
+
+  test("_forecast with a malformed constraint answers 400 before a job is " +
+      "submitted") {
+    withTrainedModel { base =>
+      Seq("avg_v:sideways:50", "avg_v:low:high", "avg_v:low").foreach { c =>
+        val res = forecastWith(base, c)
+        assert(res.statusCode() == 400, s"$c: ${res.body()}")
+        assert(res.body().contains("constraint"), res.body())
+      }
+    }
+  }
+
   test("async job contract: _train returns 202 while the job is " +
       "genuinely in flight, then polls through to done " +
       "(server.py:1846-1872 pool semantics)") {
