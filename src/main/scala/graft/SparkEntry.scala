@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ml.{AnomalyScan, SeasonalModel, SeasonalModelParams}
+import graft.ml.{AnomalyScan, SeasonalModel, SeasonalModelParams, SeasonalModelType}
 import graft.operators._
 import graft.sources.Tables
 
@@ -818,7 +818,8 @@ object SparkEntry {
     Query("q_forecast", (s, dir) => {
       val profile = SeasonalModel.train(
         hourlyAvg(s, dir, FROM, SPLIT), "observed", Nil, seasonalParams)
-      SeasonalModel.forecast(s, profile, TO, TO + 2 * 86400L, seasonalParams)
+      new SeasonalModelType.TrainedSeasonal(profile, seasonalParams)
+        .forecast(s, TO, TO + 2 * 86400L)
         .select(
           col("bucket"),
           round(col("predicted"), 4).as("predicted"),
@@ -867,13 +868,12 @@ object SparkEntry {
     },
       // the Holt-Winters fold replayed as a recursive CTE with the seasonal
       // vector carried as a LIST column — every double op in the same order
-      // as HoltWinters.fit; z is a plan literal from the same Scala normPpf
-      // the query uses (cannot drift); list_reduce forces the sequential
-      // summation order of Seq.sum in the init means
+      // as HoltWinters.fit; the forecast bands are ±3σ exactly, as in
+      // q_fleet_hw; list_reduce forces the sequential summation order of
+      // Seq.sum in the init means
       {
       val alpha = 0.3; val beta = 0.01; val gamma = 0.3; val m = 24
-      val z = graft.functions.Stats.normPpf(
-        1.0 - (1.0 - 0.9973002039367398) / 2.0)
+      val z = 3.0
       val roll = s"(CASE WHEN (o.bucket - f.prev_bucket) // $HOUR > 1 " +
         s"THEN f.lvl + CAST((o.bucket - f.prev_bucket) // $HOUR - 1 AS DOUBLE) * f.tr " +
         "ELSE f.lvl END)"
@@ -970,8 +970,9 @@ object SparkEntry {
     Query("q_forecast_ci", (s, dir) => {
       val profile = SeasonalModel.train(
         hourlyAvg(s, dir, FROM, SPLIT), "observed", Nil, seasonalParams)
-      SeasonalModel.forecastCI(s, profile, TO, TO + 2 * 86400L, seasonalParams,
-          percentInterval = 0.68, percentNoise = 2.0)
+      new SeasonalModelType.TrainedSeasonal(profile, seasonalParams)
+        .forecastCI(s, TO, TO + 2 * 86400L, percentInterval = 0.68,
+          percentNoise = 2.0)
         .select(
           col("bucket"),
           round(col("predicted"), 4).as("predicted"),

@@ -2,7 +2,6 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.Stats
 import graft.io.Json
 
 /** Low-rank tied-weights autoencoder — the fast linear-subspace
@@ -180,8 +179,7 @@ object AutoencoderReconstructor extends ModelType {
       val w = Array.tabulate(p.hidden, p.span)((i, j) =>
         st.weights(i * p.span + j))
       val (sm, ss) = (st.slot_mean.toArray, st.slot_sigma.toArray)
-      (b, win) => (predictWindow(w, p, st.mu, st.sd, sm, ss, b, win),
-        3.0 * st.sigma)
+      (b, win) => (predictWindow(w, p, st.mu, st.sd, sm, ss, b, win), st.sigma)
     }
 
   /** Pure fit result — everything a scorer needs, no Spark types, so
@@ -384,6 +382,7 @@ object AutoencoderReconstructor extends ModelType {
       slotSig: Array[Double]) extends TrainedModel {
 
     def modelType: String = name
+    def bucketInterval: Long = params.bucketInterval
 
     def settingsJson: String = {
       val base = params.json.stripSuffix("}")
@@ -401,19 +400,10 @@ object AutoencoderReconstructor extends ModelType {
           slotMean.toIndexedSeq, slotSig.toIndexedSeq)),
         valueCol, Nil, params, anomalyType)
 
-    def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
-      forecastBands(spark, from, to, z = 3.0, noisePerStep = 0.0)
-
-    def forecastCI(spark: SparkSession, from: Long, to: Long,
-        percentInterval: Double, percentNoise: Double): DataFrame =
-      forecastBands(spark, from, to,
-        z = Stats.normPpf(1.0 - (1.0 - percentInterval) / 2.0),
-        noisePerStep = percentNoise * params.bucketInterval.toDouble / 86400.0)
-
     /** Iterative roll (donut.py:1333-1475): the window slides forward
       * appending each prediction — driver loop over O(horizon) steps. */
-    private def forecastBands(spark: SparkSession, from: Long, to: Long,
-        z: Double, noisePerStep: Double): DataFrame = {
+    protected def expected(spark: SparkSession, from: Long,
+        to: Long): DataFrame = {
       import spark.implicits._
       val p = params
       val span = p.span
@@ -423,17 +413,15 @@ object AutoencoderReconstructor extends ModelType {
       val buf = scala.collection.mutable.ArrayBuffer.tabulate(span - 1)(
         j => slotMean(slotOf(from - (span - 1 - j) * p.bucketInterval)))
       val rows = Iterator.iterate(from)(_ + p.bucketInterval)
-        .takeWhile(_ < to).zipWithIndex.map { case (b, h) =>
+        .takeWhile(_ < to).map { b =>
           val x = (buf.takeRight(span - 1) :+ slotMean(slotOf(b))).toArray
           val imp = Array.fill(span)(false); imp(span - 1) = true
           val out = AutoencoderReconstructor.mcmcReconstruct(
             weights, x, imp, p.mcmcIters, p.hidden, span)
           buf += out(span - 1)
-          val pred = mu + sd * out(span - 1)
-          val half = z * sigma + noisePerStep * h * math.abs(pred)
-          (b, pred, pred - half, pred + half)
+          (b, mu + sd * out(span - 1), sigma)
         }.toSeq
-      rows.toDF("bucket", "predicted", "lower", "upper")
+      rows.toDF("bucket", "predicted", "sigma")
     }
   }
 }

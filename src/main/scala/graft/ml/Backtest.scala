@@ -23,7 +23,7 @@ object Backtest {
 
   /** Per-(key, origin) forecast quality over `[origin, origin+horizon)`:
     * `n_buckets`, `mae`, `mape` (zero-actual buckets excluded), and
-    * `coverage` (fraction of actuals inside the ±z·σ band — calibration,
+    * `coverage` (fraction of actuals inside the ±3σ band — calibration,
     * not just accuracy). Buckets with no actual observation are simply
     * absent from the join (scored on what happened, not on gaps). */
   def rollingOrigin(series: DataFrame, valueCol: String,

@@ -2,7 +2,6 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.Stats
 import graft.io.Json
 
 /** True variational autoencoder — the faithful restatement of the
@@ -318,7 +317,7 @@ object DonutVae extends ModelType {
     Keyed.scoreWindows(bucketed, states, valueCol, keys, p.span,
         anomalyType) { st =>
       val net = decode(p, st)
-      (b, win) => (predictWindow(net, p, st.mu, st.sd, b, win), 3.0 * st.sigma)
+      (b, win) => (predictWindow(net, p, st.mu, st.sd, b, win), st.sigma)
     }
 
   private def decode(p: Params, st: Keyed.WindowState): Net = {
@@ -671,6 +670,7 @@ object DonutVae extends ModelType {
       slotSig: Array[Double]) extends TrainedModel {
 
     def modelType: String = name
+    def bucketInterval: Long = params.bucketInterval
 
     def settingsJson: String = {
       val base = params.json.stripSuffix("}")
@@ -728,26 +728,17 @@ object DonutVae extends ModelType {
           }
           val meanD = sum / mcCount
           val stdD = math.sqrt(math.max(0.0, sumSq / mcCount - meanD * meanD))
-          (pred, 3.0 * st.sd * stdD)
+          (pred, st.sd * stdD)
         }
       }
     }
-
-    def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
-      forecastBands(spark, from, to, z = 3.0, noisePerStep = 0.0)
-
-    def forecastCI(spark: SparkSession, from: Long, to: Long,
-        percentInterval: Double, percentNoise: Double): DataFrame =
-      forecastBands(spark, from, to,
-        z = Stats.normPpf(1.0 - (1.0 - percentInterval) / 2.0),
-        noisePerStep = percentNoise * params.bucketInterval.toDouble / 86400.0)
 
     /** Iterative roll seeded from the slot profile (the trait's
       * no-observation forecast contract; the reference always forecasts
       * from observed history, so the seed is the apply_defaults slot
       * mean — documented deviation shared with the autoencoder). */
-    private def forecastBands(spark: SparkSession, from: Long, to: Long,
-        z: Double, noisePerStep: Double): DataFrame = {
+    protected def expected(spark: SparkSession, from: Long,
+        to: Long): DataFrame = {
       import spark.implicits._
       val p = params
       val span = p.span
@@ -756,16 +747,14 @@ object DonutVae extends ModelType {
       val buf = scala.collection.mutable.ArrayBuffer.tabulate(span - 1)(
         j => slotMean(slotOf(from - (span - 1 - j) * p.bucketInterval)))
       val rows = Iterator.iterate(from)(_ + p.bucketInterval)
-        .takeWhile(_ < to).zipWithIndex.map { case (b, h) =>
+        .takeWhile(_ < to).map { b =>
           val x = (buf.takeRight(span - 1) :+ 0.0).toArray
           val m = Array.fill(span)(false); m(span - 1) = true
           val xh = DonutVae.mcmcImpute(net, x, m, p.mcmcIters)
           buf += xh(span - 1)
-          val pred = mu + sd * xh(span - 1)
-          val half = z * sigma + noisePerStep * h * math.abs(pred)
-          (b, pred, pred - half, pred + half)
+          (b, mu + sd * xh(span - 1), sigma)
         }.toSeq
-      rows.toDF("bucket", "predicted", "lower", "upper")
+      rows.toDF("bucket", "predicted", "sigma")
     }
   }
 }

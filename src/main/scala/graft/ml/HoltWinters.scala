@@ -1,9 +1,8 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Stats
 import graft.io.Json
 
 /** Additive Holt-Winters (triple exponential smoothing) — the classic
@@ -27,7 +26,7 @@ import graft.io.Json
   * collects the series to the driver (model-sized, same budget as every
   * profile/1-row-aggregate collect in this repo) and folds once.
   * Prediction and forecasting are pure per-bucket projections from the
-  * frozen end-of-training state (level + h·trend + season[slot] ± z·σ),
+  * frozen end-of-training state (level + h·trend + season[slot] ± 3σ),
   * keyed: a fleet's states (one row per series, [[HoltWinters.train]])
   * join the bucketed frame by key; a solo model carries its state into
   * the plan as literals — no join, and over a local series no Spark job.
@@ -212,54 +211,39 @@ object HoltWinters {
         keyedState(k, fit(series, p))
     }
 
-  /** predicted = ℓ + h·b + s_slot with h = steps since the forecast
-    * origin, from the state columns. */
-  private def projection(p: HoltWintersParams): Column = {
+  /** `predicted` = ℓ + h·b + s_slot, with h = steps since the forecast
+    * origin, from the state columns, which go except `sigma`. */
+  private def expected(withState: DataFrame, p: HoltWintersParams): DataFrame = {
     val slot = (pmod(col("bucket"), lit(p.period)) / lit(p.bucketInterval))
       .cast("long")
     val h = ((col("bucket") - col("last_bucket")) / lit(p.bucketInterval))
       .cast("long")
-    col("level") + h * col("trend") +
-      element_at(col("season"), (slot + 1).cast("int"))
+    withState.withColumn("predicted", col("level") + h * col("trend") +
+        element_at(col("season"), (slot + 1).cast("int")))
+      .drop("level", "trend", "last_bucket", "season")
   }
-
-  private def withBands(df: DataFrame, p: HoltWintersParams,
-      z: Double): DataFrame =
-    df.withColumn("predicted", projection(p))
-      .withColumn("lower", col("predicted") - lit(z) * col("sigma"))
-      .withColumn("upper", col("predicted") + lit(z) * col("sigma"))
-      .drop("level", "trend", "sigma", "last_bucket", "season")
 
   /** Forecast every key over `[from, to)`: the bucket spine crosses the
     * states (a narrow projection, no shuffle, no per-key driver work);
-    * `predicted = ℓ + h·b + season[slot]`, bands `± z·σ`. Output:
-    * `(keys…, bucket, predicted, lower, upper)`. */
+    * `predicted = ℓ + h·b + season[slot]`, bands ±3σ ([[Bands]]).
+    * Output: `(keys…, bucket, predicted, lower, upper)`. */
   def forecast(states: DataFrame, keys: Seq[String], from: Long, to: Long,
-      p: HoltWintersParams, z: Double = 3.0): DataFrame = {
+      p: HoltWintersParams): DataFrame = {
     val spine = states.sparkSession.range(from, to, p.bucketInterval)
       .select(col("id").as("bucket"))
-    forecastBands(states.crossJoin(spine), keys, p, z)
+    Bands.forecast(expected(states.crossJoin(spine), p), from, p.bucketInterval,
+      z = 3.0, noisePerStep = 0.0)
   }
-
-  private def forecastBands(withState: DataFrame, keys: Seq[String],
-      p: HoltWintersParams, z: Double): DataFrame =
-    withBands(withState, p, z)
-      .select((keys.map(col) :+ col("bucket")) ++
-        Seq(col("predicted"), col("lower"), col("upper")): _*)
 
   /** Score an observed bucketized frame against the states: join by key
     * (`keys = Nil`: the one-row state crosses a single series), project
-    * predicted and bands, Φ-score. Keys without a state emit nothing. */
+    * predicted, bands and Φ-score ([[Bands.scored]]). Keys without a
+    * state emit nothing. */
   def predict(bucketed: DataFrame, states: DataFrame, valueCol: String,
       keys: Seq[String], p: HoltWintersParams,
-      anomalyType: String = "low_high", z: Double = 3.0): DataFrame =
-    scored(bucketed.join(states, keys), valueCol, p, anomalyType, z)
-
-  private def scored(withState: DataFrame, valueCol: String,
-      p: HoltWintersParams, anomalyType: String, z: Double): DataFrame =
-    withBands(withState, p, z)
-      .withColumn("score", Stats.anomalyScore(
-        col(valueCol), col("predicted"), col("upper"), anomalyType))
+      anomalyType: String = "low_high"): DataFrame =
+    Bands.scored(expected(bucketed.join(states, keys), p), valueCol,
+      anomalyType)
 
   /** A single series' state as literal columns: a projection in place of
     * the cross join with a one-row state. */
@@ -271,14 +255,14 @@ object HoltWinters {
   /** [[predict]] for a single series whose state is on the driver. */
   private[ml] def predictSolo(bucketed: DataFrame, st: HoltWintersState,
       valueCol: String, p: HoltWintersParams, anomalyType: String): DataFrame =
-    scored(withState(bucketed, st), valueCol, p, anomalyType, z = 3.0)
+    Bands.scored(expected(withState(bucketed, st), p), valueCol, anomalyType)
 
-  /** [[forecast]] for a single series whose state is on the driver, over a
-    * local spine: rows in bucket order, no Spark job. */
-  private[ml] def forecastSolo(spark: SparkSession, st: HoltWintersState,
-      from: Long, to: Long, p: HoltWintersParams, z: Double): DataFrame =
-    forecastBands(withState(Local.range(spark, from, to, p.bucketInterval), st),
-      Nil, p, z)
+  /** `(bucket, predicted, sigma)` over `[from, to[` for a single series
+    * whose state is on the driver, over a local spine: rows in bucket
+    * order, no Spark job. */
+  private[ml] def expectedSolo(spark: SparkSession, st: HoltWintersState,
+      from: Long, to: Long, p: HoltWintersParams): DataFrame =
+    expected(withState(Local.range(spark, from, to, p.bucketInterval), st), p)
 }
 
 /** Registry wrapper: settings `{"type":"holtwinters","bucket_interval":N,
@@ -354,27 +338,14 @@ object HoltWintersType extends ModelType {
       p: HoltWintersParams, st: HoltWintersState) extends TrainedModel {
     val modelType: String = name
 
+    def bucketInterval: Long = p.bucketInterval
+
     def predict(bucketed: DataFrame, valueCol: String,
         anomalyType: String = "low_high"): DataFrame =
       HoltWinters.predictSolo(bucketed, st, valueCol, p, anomalyType)
 
-    def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
-      forecastCI(spark, from, to, 0.9973002039367398, 0.0)
-
-    def forecastCI(spark: SparkSession, from: Long, to: Long,
-        percentInterval: Double, percentNoise: Double): DataFrame = {
-      val z = Stats.normPpf(1.0 - (1.0 - percentInterval) / 2.0)
-      val noisePerStep = percentNoise * p.bucketInterval.toDouble / 86400.0
-      val base = HoltWinters.forecastSolo(spark, st, from, to, p, z)
-      if (noisePerStep == 0.0) base
-      else {
-        val half = lit(z * st.sigma) + lit(noisePerStep) *
-          ((col("bucket") - lit(from)) / lit(p.bucketInterval)).cast("long") *
-          abs(col("predicted"))
-        base
-          .withColumn("lower", col("predicted") - half)
-          .withColumn("upper", col("predicted") + half)
-      }
-    }
+    protected def expected(spark: SparkSession, from: Long,
+        to: Long): DataFrame =
+      HoltWinters.expectedSolo(spark, st, from, to, p)
   }
 }

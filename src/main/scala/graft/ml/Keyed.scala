@@ -5,8 +5,6 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
-import graft.functions.Stats
-
 /** The keyed plumbing every model type shares: one implementation for a
   * fleet of series and for a single series, which is the empty key
   * (`keys = Nil`). The reference trains one model per series, one job
@@ -103,19 +101,19 @@ private[ml] object Keyed {
     * key's series, sorted by bucket, slides a window over the last `span`
     * ROWS ending at each bucket. `scorer` builds the per-key kernel ONCE
     * (weights decode once per key) that maps `(endBucket, window)` to
-    * `(predicted, half-band)`. Output: every input column (the input row
-    * is carried through) plus `predicted`, `lower`, `upper` and the
-    * Φ-`score`. Keys without a state emit nothing. The series should
-    * extend span−1 buckets back past the scoring range for full context
-    * (donut.py:1210-1217). A fleet cogroups each key's rows with its state
-    * row; a single series (`keys = Nil`) brings its one state to the
-    * driver and runs through [[Local.series]]. */
+    * `(predicted, σ)`. Output: every input column (the input row is
+    * carried through) plus `predicted`, `lower`, `upper` and the
+    * Φ-`score` ([[Bands.scored]]). Keys without a state emit nothing. The
+    * series should extend span−1 buckets back past the scoring range for
+    * full context (donut.py:1210-1217). A fleet cogroups each key's rows
+    * with its state row; a single series (`keys = Nil`) brings its one
+    * state to the driver and runs through [[Local.series]]. */
   def scoreWindows(bucketed: DataFrame, states: DataFrame, valueCol: String,
       keys: Seq[String], span: Int, anomalyType: String)(
       scorer: WindowState => (Long, Series) => (Double, Double)): DataFrame = {
     val n = bucketed.schema.length
     val outSchema = StructType(bucketed.schema.fields ++
-      Seq("predicted", "lower", "upper")
+      Seq("predicted", "sigma")
         .map(StructField(_, DoubleType, nullable = true)))
     val rows = bucketed.select(col("*"), keyCol(keys).as("__k"),
       col("bucket").cast("long").as("__b"), col(valueCol).cast("double").as("__v"))
@@ -134,10 +132,9 @@ private[ml] object Keyed {
       val series = sorted.map(r => (r.getLong(bIdx),
         if (r.isNullAt(vIdx)) None else Some(r.getDouble(vIdx))))
       sorted.indices.iterator.map { i =>
-        val (pred, half) =
+        val (pred, sigma) =
           f(series(i)._1, series.slice(math.max(0, i - span + 1), i + 1))
-        Row.fromSeq(sorted(i).toSeq.take(n) ++
-          Seq(pred, pred - half, pred + half))
+        Row.fromSeq(sorted(i).toSeq.take(n) ++ Seq(pred, sigma))
       }
     }
     val scored =
@@ -152,7 +149,6 @@ private[ml] object Keyed {
             stRows.nextOption().fold(Iterator.empty[Row])(st =>
               score(st, points.toVector.sortBy(_.getLong(bIdx))))
           }(Encoders.row(outSchema))
-    scored.withColumn("score", Stats.anomalyScore(
-      col(valueCol), col("predicted"), col("upper"), anomalyType))
+    Bands.scored(scored, valueCol, anomalyType)
   }
 }

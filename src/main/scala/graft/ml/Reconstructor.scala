@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Stats
 import graft.io.Json
 
 /** Windowed-reconstruction model — the Donut-class second model behind the
@@ -328,9 +327,10 @@ object WindowReconstructor extends ModelType {
         s""""global_mean":$globalMean,"global_sigma":$globalSigma}"""
     }
 
-    /** μ = w·features, bands μ ± 3σ (the reference's 3-sigma bands,
-      * /root/reference/loudml/donut.py:1290-1296), score via
-      * [[graft.functions.Stats.anomalyScore]]. The series should extend
+    def bucketInterval: Long = params.bucketInterval
+
+    /** μ = w·features, bands and score from the residual σ
+      * ([[Bands.scored]]). The series should extend
       * `2·period` back past the scoring range so lags have context (the
       * reference extends by span−1, donut.py:1210-1217). */
     def predict(bucketed: DataFrame, valueCol: String,
@@ -348,58 +348,36 @@ object WindowReconstructor extends ModelType {
         globalSigma, params, seriesKeys)
       val mu = names.zip(weights)
         .map { case (n, wi) => col(n) * lit(wi) }.reduce(_ + _)
-      feat
-        .withColumn("predicted", mu)
-        .withColumn("lower", col("predicted") - lit(3.0 * sigma))
-        .withColumn("upper", col("predicted") + lit(3.0 * sigma))
-        .withColumn("score",
-          Stats.anomalyScore(col(valueCol), col("predicted"), col("upper"),
-            anomalyType))
+      Bands.scored(
+          feat.withColumn("predicted", mu).withColumn("sigma", lit(sigma)),
+          valueCol, anomalyType)
         .drop((Seq("__slot", "__sm", "__sig") ++ names): _*)
     }
 
-    /** Future bands: with no observations every lag imputes to its slot
-      * mean, so x̂ depends only on slot — precompute the P slot
-      * predictions driver-side (profile is model-sized) and broadcast-join
-      * the spine. */
-    def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
-      forecastBands(spark, from, to, z = 3.0, noisePerStep = 0.0)
-
-    /** CI-parameterized bands — see [[TrainedModel.forecastCI]]. */
-    def forecastCI(spark: SparkSession, from: Long, to: Long,
-        percentInterval: Double, percentNoise: Double): DataFrame =
-      forecastBands(spark, from, to,
-        z = Stats.normPpf(1.0 - (1.0 - percentInterval) / 2.0),
-        noisePerStep = percentNoise * params.bucketInterval.toDouble / 86400.0)
-
-    private def forecastBands(spark: SparkSession, from: Long, to: Long,
-        z: Double, noisePerStep: Double): DataFrame = {
-      import spark.implicits._
+    /** With no observations every lag imputes to its slot mean, so x̂
+      * depends only on slot: the P slot predictions, computed once on the
+      * driver from the (model-sized) profile. */
+    private lazy val perSlot: IndexedSeq[Double] = {
       val P = params.periodBuckets
       val sm: Map[Long, Double] = profile.collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       def smOf(slot: Long): Double = sm.getOrElse(slot, globalMean)
-      val perSlot = (0 until P).map { s0 =>
+      (0 until P).map { s0 =>
         val feats = Array(1.0) ++
           (1 to params.localLags).map(i => smOf(Math.floorMod(s0 - i, P).toLong)) ++
           Seq(smOf(s0), smOf(s0), smOf(s0)) // seas_1, seas_2, sm_t: same slot
-        val mu = weights.zip(feats).map { case (w, f) => w * f }.sum
-        (s0.toLong, mu)
-      }.toDF("slot", "predicted")
-      val half =
-        if (noisePerStep == 0.0) lit(z * sigma)
-        else lit(z * sigma) +
-          lit(noisePerStep) * ((col("bucket") - lit(from)) / lit(params.bucketInterval))
-            .cast("long") * abs(col("predicted"))
-      spark.range(from, to, params.bucketInterval)
-        .select(col("id").as("bucket"))
-        .withColumn("slot", SeasonalModel.slotCol(col("bucket"),
-          SeasonalModelParams(params.bucketInterval, params.period)))
-        .join(broadcast(perSlot), "slot")
-        .withColumn("lower", col("predicted") - half)
-        .withColumn("upper", col("predicted") + half)
-        .select("bucket", "predicted", "lower", "upper")
-        .orderBy("bucket")
+        weights.zip(feats).map { case (w, f) => w * f }.sum
+      }
+    }
+
+    /** Each bucket's slot prediction and the residual σ, as a local frame. */
+    protected def expected(spark: SparkSession, from: Long,
+        to: Long): DataFrame = {
+      import spark.implicits._
+      (from until to by params.bucketInterval).map { b =>
+        (b, perSlot((Math.floorMod(b, params.period) / params.bucketInterval)
+          .toInt), sigma)
+      }.toDF("bucket", "predicted", "sigma")
     }
   }
 }

@@ -3,13 +3,12 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Stats
 import graft.io.Json
 
 /** Seasonal-baseline time-series model — the interface-compatible first
   * implementation of the reference's model trait (SURVEY §2.11, plan §7.2
   * step 4): `train` → profile, `predict` → (observed, predicted, lower,
-  * upper, score), `forecast` → future bands.
+  * upper, score), `forecast` → future bands (the trained model's).
   *
   * Where the reference trains a VAE ("Donut", arXiv 1802.03903,
   * /root/reference/loudml/donut.py:492-1595) to reconstruct each window and
@@ -59,10 +58,8 @@ object SeasonalModel {
           lit(1.0)).as("sigma"))
 
   /** Predict over a bucketed frame, each series against its OWN profile
-    * (join on keys + slot): adds predicted / lower / upper (μ ± 3σ,
-    * matching the reference's 3-sigma bands,
-    * /root/reference/loudml/donut.py:1290-1296) and the 0..100 anomaly
-    * score (loudml/donut.py:899-924). A key absent from
+    * (join on keys + slot): adds predicted (the slot's μ), the bands and
+    * the anomaly score ([[Bands.scored]]). A key absent from
     * the profile (a host that appeared after training) emits nothing. A
     * single series' profile (`keys = Nil`) is broadcast; a fleet's is
     * O(#series) and joins by key. */
@@ -73,7 +70,8 @@ object SeasonalModel {
       keys: Seq[String],
       p: SeasonalModelParams,
       anomalyType: String = "low_high"): DataFrame =
-    scored(joinProfile(bucketed, profile, keys, p), valueCol, anomalyType)
+    Bands.scored(expected(joinProfile(bucketed, profile, keys, p)), valueCol,
+      anomalyType)
 
   /** `df` with its slot's `mu` and `sigma` joined from `profile` (inner:
     * a slot or key the profile lacks drops the row). */
@@ -82,71 +80,9 @@ object SeasonalModel {
     df.withColumn("slot", slotCol(col("bucket"), p))
       .join(if (keys.isEmpty) broadcast(profile) else profile, keys :+ "slot")
 
-  /** Bands and score from the `slot`/`mu`/`sigma` columns, which go. */
-  private[ml] def scored(withProfile: DataFrame, valueCol: String,
-      anomalyType: String): DataFrame =
-    withProfile
-      .withColumn("predicted", col("mu"))
-      .withColumn("lower", col("mu") - lit(3.0) * col("sigma"))
-      .withColumn("upper", col("mu") + lit(3.0) * col("sigma"))
-      .withColumn("score",
-        Stats.anomalyScore(col(valueCol), col("predicted"), col("upper"), anomalyType))
-      .drop("slot", "mu", "sigma")
-
-  /** Forecast `[from, to[`: future spine joined with the profile — bands
-    * only, no observations (the reference's `forecast` analog,
-    * /root/reference/loudml/donut.py:1333-1475; the iterative window-roll
-    * is VAE-specific, a pure seasonal profile needs no rolling). */
-  def forecast(
-      spark: SparkSession,
-      profile: DataFrame,
-      from: Long,
-      to: Long,
-      p: SeasonalModelParams): DataFrame =
-    forecastBands(spine(spark, profile, from, to, p), from, p, z = 3.0,
-      noisePerStep = 0.0)
-
-  /** Forecast at a requested confidence (`percent_interval`) with noise
-    * growth over the horizon (`percent_noise`) — the reference's forecast
-    * parameters (/root/reference/loudml/donut.py:1338-1339,1415,1423).
-    * z = Φ⁻¹(1−(1−percentInterval)/2); at step j the reference expands the
-    * window by uniform(±percentNoise·bucket_interval/86400·j); the
-    * deterministic analog widens the half-band by that envelope times
-    * |predicted|. */
-  def forecastCI(
-      spark: SparkSession, profile: DataFrame, from: Long, to: Long,
-      p: SeasonalModelParams, percentInterval: Double,
-      percentNoise: Double): DataFrame =
-    ciBands(spine(spark, profile, from, to, p), from, p, percentInterval,
-      percentNoise)
-
-  private[ml] def ciBands(withProfile: DataFrame, from: Long,
-      p: SeasonalModelParams, percentInterval: Double,
-      percentNoise: Double): DataFrame =
-    forecastBands(withProfile, from, p,
-      z = Stats.normPpf(1.0 - (1.0 - percentInterval) / 2.0),
-      noisePerStep = percentNoise * p.bucketInterval.toDouble / 86400.0)
-
-  private def spine(spark: SparkSession, profile: DataFrame, from: Long,
-      to: Long, p: SeasonalModelParams): DataFrame =
-    joinProfile(spark.range(from, to, p.bucketInterval)
-      .select(col("id").as("bucket")), profile, Nil, p)
-
-  /** Bands over a future spine carrying `mu`/`sigma`; rows keep the
-    * spine's bucket order. */
-  private[ml] def forecastBands(withProfile: DataFrame, from: Long,
-      p: SeasonalModelParams, z: Double, noisePerStep: Double): DataFrame = {
-    val half =
-      if (noisePerStep == 0.0) lit(z) * col("sigma")
-      else lit(z) * col("sigma") +
-        lit(noisePerStep) * ((col("bucket") - lit(from)) / lit(p.bucketInterval))
-          .cast("long") * abs(col("mu"))
-    withProfile
-      .withColumn("predicted", col("mu"))
-      .withColumn("lower", col("mu") - half)
-      .withColumn("upper", col("mu") + half)
-      .select("bucket", "predicted", "lower", "upper")
-  }
+  /** `predicted` from the `slot`/`mu` columns, which go; `sigma` stays. */
+  private[ml] def expected(withProfile: DataFrame): DataFrame =
+    withProfile.withColumn("predicted", col("mu")).drop("slot", "mu")
 
   /** A single series' profile held on the driver, indexed by slot over
     * every slot of the period: whether the profile has the slot, and its
@@ -281,19 +217,14 @@ object SeasonalModelType extends ModelType {
     def settingsJson: String =
       s"""{"type":"$name","bucket_interval":${p.bucketInterval},""" +
         s""""period":${p.period}}"""
+    def bucketInterval: Long = p.bucketInterval
     def predict(bucketed: DataFrame, valueCol: String,
         anomalyType: String = "low_high"): DataFrame =
-      SeasonalModel.scored(SeasonalModel.withSlots(bucketed, slots, p),
-        valueCol, anomalyType)
-    def forecast(spark: SparkSession, from: Long, to: Long): DataFrame =
-      SeasonalModel.forecastBands(spine(spark, from, to), from, p, z = 3.0,
-        noisePerStep = 0.0)
-    def forecastCI(spark: SparkSession, from: Long, to: Long,
-        percentInterval: Double, percentNoise: Double): DataFrame =
-      SeasonalModel.ciBands(spine(spark, from, to), from, p, percentInterval,
-        percentNoise)
-    private def spine(spark: SparkSession, from: Long, to: Long): DataFrame =
-      SeasonalModel.withSlots(Local.range(spark, from, to, p.bucketInterval),
-        slots, p)
+      Bands.scored(SeasonalModel.expected(
+        SeasonalModel.withSlots(bucketed, slots, p)), valueCol, anomalyType)
+    protected def expected(spark: SparkSession, from: Long,
+        to: Long): DataFrame =
+      SeasonalModel.expected(SeasonalModel.withSlots(
+        Local.range(spark, from, to, p.bucketInterval), slots, p))
   }
 }

@@ -89,12 +89,16 @@ object BucketSettings {
 }
 
 /** A bucket of self-describing files whose reader infers the schema
-  * from one file. The schema is resolved by the first read that
-  * succeeds and passed to every later read, which skips the
-  * footer-reading inference job; each read still lists the files, so
-  * appended files are seen. A `writePoints` that adds a field drops the
-  * resolved schema; a field that another writer adds stays hidden until
-  * the bucket is re-registered. */
+  * from one file: the footer of the file whose path sorts first, not the
+  * newest. The schema is resolved once and passed to every later read,
+  * which skips the footer-reading inference job; each read still lists
+  * the files, so appended files are seen. A `writePoints` into a bucket
+  * with no resolved schema, or whose frame has a field the schema lacks,
+  * resolves it again and widens it with the frame's new fields, so the
+  * bucket's own new field shows on the next read (files without it read
+  * it as null). A field that another writer adds stays hidden until the
+  * bucket is re-registered, or until this bucket writes a new field and
+  * the inference sees it (with `mergeSchema`, say). */
 abstract class FixedSchemaBucket(format: String, path: String) extends Bucket {
   @volatile private var schema: Option[StructType] = None
 
@@ -106,8 +110,12 @@ abstract class FixedSchemaBucket(format: String, path: String) extends Bucket {
 
   override def writePoints(df: DataFrame): Unit = {
     df.write.mode("append").format(format).save(path)
-    if (schema.exists(s => !df.columns.forall(s.fieldNames.contains)))
-      schema = None
+    if (schema.forall(s => !df.columns.forall(s.fieldNames.contains))) {
+      val found = df.sparkSession.read.format(format).load(path).schema
+      schema = Some(StructType(found ++ df.schema
+        .filterNot(f => found.fieldNames.contains(f.name))
+        .map(_.copy(nullable = true))))
+    }
   }
 }
 

@@ -194,6 +194,24 @@ class EvalPathSpec extends SparkSpec {
     }
   }
 
+  test("a writePoints that adds a field shows it on the next read, though " +
+      "inference reads an older file's footer") {
+    val dir = java.nio.file.Files.createTempDirectory("widen").toString + "/b"
+    val bucket = new ParquetBucket("b", dir)
+    bucket.writePoints(points(0 until 24, _ => 10.0))
+    // inference reads the footer of the file whose path sorts first: make
+    // that the file without the new field
+    val d = java.nio.file.Paths.get(dir)
+    scala.util.Using.resource(java.nio.file.Files.list(d))(_.iterator().asScala
+        .toList).filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.move(f, d.resolve(s"a-${f.getFileName}")))
+    bucket.writePoints(points(24 until 48, _ => 10.0).withColumn("extra", lit(2.0)))
+    val read = bucket.readPoints(spark)
+    assert(read.columns.toSeq == Seq("ts", "value", "extra"))
+    assert(read.filter(col("extra").isNull).count() == 24)
+    assert(read.filter(col("extra") === 2.0).count() == 24)
+  }
+
   test("local and distributed inputs give identical rows: solo predict and " +
       "AnomalyScan.scan for every ModelRegistry type") {
     val series = points(0 until 480, _ => 10.0, Set(300L, 301L, 450L))

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Stats
 import graft.ml._
 
 /** Model trait/registry + the reference's test-enforced quality floors
@@ -130,7 +132,7 @@ class ModelSpec extends SparkSpec {
         r.getDouble(r.fieldIndex("predicted"))
       assert(math.abs(half - z68 * model.sigma) < 1e-9)
     }
-    // wide interval ⇒ wider bands; 3σ default == forecastCI(0.9973..., 0)
+    // wide interval ⇒ wider bands; 3σ default ≈ forecastCI(0.9973..., 0)
     val fc997 = model.forecastCI(spark, 720L * HOUR, 744L * HOUR,
       0.9973002039367398, 0.0).collect()
     fc997.foreach { r =>
@@ -262,6 +264,33 @@ class ModelSpec extends SparkSpec {
       val got = out.select("bucket", "count").as[(Long, Long)].collect()
       assert(got.length == passthrough.size)
       assert(got.toMap == passthrough)
+
+      // the forecast contract: one row per bucket of [from, to[, in
+      // bucket order, bands symmetric about predicted; `halves` gives
+      // (bucket, predicted, half-width)
+      val (from, to) = (96L * HOUR, 120L * HOUR)
+      def halves(df: DataFrame): Seq[(Long, Double, Double)] =
+        df.select("bucket", "predicted", "lower", "upper")
+          .as[(Long, Double, Double, Double)].collect().toSeq
+          .map { case (b, p, lo, hi) =>
+            assert(math.abs((hi - p) - (p - lo)) <= 1e-9, s"bucket $b")
+            (b, p, hi - p)
+          }
+      val fc = halves(m.forecast(spark, from, to))
+      assert(fc.map(_._1) == (from until to by HOUR))
+      // the 0.68 interval: z = Φ⁻¹(0.84) in place of 3
+      val ratio = Stats.normPpf(0.84) / 3.0
+      val ci = halves(m.forecastCI(spark, from, to, 0.68, 0.0))
+      ci.zip(fc).foreach { case ((_, _, h68), (b, _, h3)) =>
+        assert(math.abs(h68 / h3 - ratio) <= 1e-12 * ratio, s"bucket $b")
+      }
+      // percent_noise 2.0: step h widens the band by noise·h·|predicted|
+      val noise = 2.0 * HOUR.toDouble / 86400.0
+      halves(m.forecastCI(spark, from, to, 0.68, 2.0)).zip(ci).zipWithIndex
+        .foreach { case (((b, p, noisy), (_, _, plain)), h) =>
+          assert(math.abs(noisy - plain - noise * h * math.abs(p)) <= 1e-9,
+            s"bucket $b")
+        }
     }
   }
 }

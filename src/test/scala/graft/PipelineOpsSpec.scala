@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ml.{SeasonalModel, SeasonalModelParams}
+import graft.ml.{SeasonalModel, SeasonalModelParams, SeasonalModelType}
 import graft.operators.{Dedup, Multimodal, Packing, Sampling, Similarity, TextAnalysis}
 
 class PipelineOpsSpec extends SparkSpec {
@@ -1604,8 +1604,8 @@ class PipelineOpsSpec extends SparkSpec {
       r.getDouble(r.fieldIndex("upper")) - r.getDouble(r.fieldIndex("predicted")) == 3.0))
     // perfect prediction → score ~0 (approx-erf residue ≪ 0..100 resolution)
     assert(rows.forall(r => r.getDouble(r.fieldIndex("score")) < 1e-3))
-    val f = SeasonalModel.forecast(spark, profile, 16 * 21600L, 20 * 21600L, p)
-      .collect()
+    val f = new SeasonalModelType.TrainedSeasonal(profile, p)
+      .forecast(spark, 16 * 21600L, 20 * 21600L).collect()
     assert(f.map(_.getDouble(1)).toSeq == Seq(0.0, 10.0, 20.0, 30.0))
   }
 
