@@ -1748,8 +1748,9 @@ object DataPipelineQueries {
       // r15 (guide §5/§6, VERDICT r14 item 3): the four tier kernels
       // each re-scanned documents.parquet (plus its fanOut exchange) —
       // one columnar persist now feeds exact + LSH + media + audio.
-      // The tiers materialize eagerly inside multiTierClusters' edge
-      // checkpoint (and the tiers' own internal checkpoints), so the
+      // The tiers materialize inside multiTierClusters (its
+      // connected-components rounds read the pinned tier union, and the
+      // tiers have their own internal checkpoints), so the
       // cache is live exactly while the heavy kernels run; the finally
       // releases it, and the returned plan's remaining reference (the
       // id-only nodes scan) recomputes from parquet, column-pruned.

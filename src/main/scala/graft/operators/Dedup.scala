@@ -1497,13 +1497,11 @@ object Dedup {
     * no adjacency materialization beyond the edge list), and the round
     * count is bounded by the longest shortest-path to a component's
     * minimum — for near-dup graphs (dense cliquey clusters of bounded
-    * diameter) convergence is 2-3 rounds. Every round persists its label
-    * frame and materializes it via the convergence probe, so round k+1's
-    * shuffle reads round k's cached output rather than recomputing the
-    * lineage; the previous round is unpersisted immediately. For graphs
-    * with adversarially long chains swap the propagation step for
-    * large-star/small-star (same per-round shape, O(log n) rounds) —
-    * near-dup dedup does not need it.
+    * diameter) convergence is 2-3 rounds. Rounds run on [[Fixpoint]],
+    * holding the edge set and the start labels; one action per round. A
+    * graph whose labels have not settled in `maxIter` rounds throws
+    * rather than return partly propagated labels; for long chains use
+    * [[connectedComponentsStar]] (O(log n) rounds).
     *
     * `nodes` must be one column named after `idCol`; `edges` must carry
     * (`id_a`, `id_b`) with multiplicity allowed (deduped here). Returns
@@ -1511,69 +1509,28 @@ object Dedup {
   def connectedComponents(
       nodes: DataFrame, edges: DataFrame, idCol: String,
       maxIter: Int = 50): DataFrame = {
-    val e = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-    // persisted: the edge lineage (for near-dup graphs, the whole LSH
-    // candidate pipeline) must run ONCE, not once per round
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist()
-    // iterate over EDGE-INCIDENT nodes only (r14 optimization, guide
-    // §2.3): labels propagate along edges, so a node with no edge keeps
-    // its own id forever and contributes nothing to any neighbor —
-    // excluding singletons shrinks every per-round frame from
-    // corpus-sized to edge-node-sized (dedup graphs are overwhelmingly
-    // singletons at any scale); singletons rejoin via the final left
-    // join, labeling themselves. The semi-join keeps the old contract
-    // that an edge endpoint NOT in `nodes` never participates.
-    val init = nodes.select(col(idCol).as("id"))
-      .join(sym.select(col("src").as("id")), Seq("id"), "left_semi")
-      .withColumn("label", col("id"))
-      .persist()
-    var labels: DataFrame = init
-    var iter = 0
-    var done = false
-    try {
-      while (!done && iter < maxIter) {
+    val sym = symEdges(edges)
+    val init = edgeNodes(nodes, idCol, sym).withColumn("label", col("id"))
+    val labels = Fixpoint.untilSettled(init, maxIter,
+        Fixpoint.Fail(s"connectedComponents did not converge in " +
+          s"maxIter = $maxIter rounds; raise maxIter, or use " +
+          "connectedComponentsStar (O(log n) rounds) for long chains"),
+        inputs = Seq(sym, init)) { labels =>
       val nbrMin = sym
         .join(labels.select(col("id").as("dst"), col("label").as("dlabel")), "dst")
         .groupBy("src").agg(min("dlabel").as("nmin"))
-      // `old` rides along so the convergence probe is a filter on the
-      // cached frame, not another join against the previous round
-      // localCheckpoint, not persist: each round's plan references the
-      // previous labels ~3× — a cache keeps the DATA but the un-truncated
-      // LINEAGE grows 3^rounds, and a high-diameter graph (anything
-      // needing 12+ rounds) stalls in the optimizer before it runs.
-      // Checkpointing swaps the lineage for the materialized blocks.
-      // r15 (guide §5, fewer actions): the checkpoint is LAZY and the
-      // convergence probe is a full-frame aggregate, so ONE job per
-      // round both materializes every partition of the round's label
-      // frame (the aggregate reads them all — no limit short-circuit)
-      // and returns the changed-row count; the old eager-checkpoint +
-      // limit(1)-probe pair cost two scheduled jobs per round.
-      val next = labels
+      // `old` rides along so the probe is a filter on the round's own
+      // frame, not another join against the previous round
+      labels
         .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
         .select(col("id"), col("label").as("old"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        .localCheckpoint(false)
-      done = next.agg(count(when(col("label") =!= col("old"), lit(1)))
-        .as("chg")).head().getLong(0) == 0L
-      labels = next
-      iter += 1
-      }
-    } finally {
-      // both are app-lifetime CacheManager entries if left behind —
-      // release them whether the iteration converges or throws (the
-      // rounds only ever read them through the per-round checkpoints)
-      sym.unpersist(false)
-      init.unpersist(false)
+    } { next =>
+      next.agg(count(when(col("label") =!= col("old"), lit(1))))
+        .head().getLong(0) == 0L
     }
-    // the final label table is a localCheckpoint over EDGE-INCIDENT
-    // nodes (two longs per edge node — index-sized); singletons label
-    // themselves through the coalesce, so the output still covers
-    // every node exactly as before.
-    nodes.select(col(idCol).as("id"))
-      .join(labels.select(col("id"), col("label")), Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("label"), col("id")).as("cluster_id"))
+    everyNode(ids(nodes, idCol), idCol, labels.select(col("id"),
+      col("label").as("__label")), "cluster_id", col("id"))
   }
 
   /** Connected components by alternating large-star / small-star
@@ -1588,13 +1545,10 @@ object Dedup {
     * minima come from `groupBy.min` (map-side partials), never a
     * neighbor-list `collect_list`, so a celebrity node with 100M edges
     * costs a skewed-but-mergeable aggregation, not a 100M-element array
-    * on one task. Each round's edge frame is `localCheckpoint`ed, not
-    * merely persisted: one star round references its input ~6 times, so
-    * the LOGICAL plan grows exponentially with rounds (measured: an
-    * un-truncated 10-round lineage OOMs merely STRINGIFYING the plan) —
-    * checkpointing replaces the lineage with the materialized blocks,
-    * the same pattern every iterative graph library uses. Blocks live
-    * O(rounds) = O(log n) and edge sets shrink monotonically.
+    * on one task. Rounds run on [[Fixpoint]]: one star round references
+    * its input ~6 times, so each round's edge frame is pinned (measured:
+    * an un-truncated 10-round lineage OOMs merely STRINGIFYING the
+    * plan). Edge sets shrink monotonically.
     *
     * Same contract as [[connectedComponents]]: returns
     * `(idCol, cluster_id)` for every node, singletons labeling
@@ -1624,57 +1578,69 @@ object Dedup {
         .union(m.select(col("u").as("a"), col("m").as("b")))
         .filter(col("a") =!= col("b")).distinct()
     }
-    var e = edges.select(col("id_a").as("a"), col("id_b").as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    var iter = 0
-    var done = e.limit(1).count() == 0L
-    while (!done && iter < maxIter) {
-      // r15: lazy checkpoint — the fixpoint aggregate just below reads
-      // every partition (no limit), so it materializes the round's edge
-      // frame AND answers condition (1) in one job; the old eager
-      // checkpoint spent a separate scheduled job per round on the same
-      // scan. Condition (2)'s semi-join probe still short-circuits away
-      // on every round where (1) already fails.
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
-      // Fixpoint test (r14 optimization): the alternation's fixpoints
-      // are exactly the STAR FORESTS — every child points at one root
-      // and no root is itself a child. smallStar output is distinct
-      // with a > b throughout, so `next` is a star forest iff
+    val e = Fixpoint.untilSettled(
+        Fixpoint.pin(edges.select(col("id_a").as("a"), col("id_b").as("b"))
+          .filter(col("a") =!= col("b")).distinct()),
+        maxIter, Fixpoint.Fail(s"connectedComponentsStar did not converge " +
+          s"in maxIter = $maxIter rounds (rounds are O(log n) — raise " +
+          "maxIter); labels from a non-converged edge set would be " +
+          "silently wrong")) { e => smallStar(largeStar(e)) } { next =>
+      // The alternation's fixpoints are exactly the STAR FORESTS —
+      // every child points at one root and no root is itself a child.
+      // smallStar output is distinct with a > b throughout, so `next`
+      // is a star forest iff
       //  (1) every a carries exactly one b (count == distinct a's), and
       //  (2) no b appears as an a (parent/child sets disjoint).
       // Sufficiency: on a disjoint union of stars both largeStar and
       // smallStar are identities (each leaf's neighbor min is its root,
       // each root's is itself), so the next round reproduces `next`
-      // verbatim — the state the old double-exceptAll probe detected
-      // one (identical) round later. Necessity: a b that is also an a
-      // is a 2-chain, which smallStar rewrites; two b's for one a are
-      // rewired to the smaller — either way not a fixpoint. Two tiny
-      // aggregations on the checkpointed frame replace two
-      // exceptAll JOINS per round (4 distincts + 2 jobs, measured the
-      // dominant per-round cost at index scale).
+      // verbatim. Necessity: a b that is also an a is a 2-chain, which
+      // smallStar rewrites; two b's for one a are rewired to the
+      // smaller — either way not a fixpoint. (1) is the full-frame
+      // aggregate; (2)'s semi-join probe runs only once (1) holds.
       val st = next.agg(count(lit(1)).as("n"),
         count_distinct(col("a")).as("na")).head()
-      done = st.getLong(0) == st.getLong(1) &&
+      st.getLong(0) == st.getLong(1) &&
         next.join(next.select(col("a").as("b")), Seq("b"), "left_semi")
           .limit(1).count() == 0L
-      e = next
-      iter += 1
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIter rounds " +
-          "(rounds are O(log n) — raise maxIter); labels from a " +
-          "non-converged edge set would be silently wrong")
     // converged: every non-root points straight at its component min
     val roots = e.select(greatest(col("a"), col("b")).as("id"),
       least(col("a"), col("b")).as("root"))
-      .groupBy("id").agg(min("root").as("root"))
-    nodes.select(col(idCol).as("id"))
-      .join(roots, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("root"), col("id")).as("cluster_id"))
+      .groupBy("id").agg(min("root").as("__label"))
+    everyNode(ids(nodes, idCol), idCol, roots, "cluster_id", col("id"))
   }
+
+  /** `nodes`' `idCol` as `id`: the node side of the graph operators. */
+  private def ids(nodes: DataFrame, idCol: String): DataFrame =
+    nodes.select(col(idCol).as("id"))
+
+  /** The symmetrized, distinct `(src, dst)` edge set of an `(id_a,
+    * id_b)` pair frame. Every round reads it, so each graph loop pins or
+    * holds it once ([[Fixpoint]]): the pair lineage (for near-dup
+    * graphs, the whole LSH candidate pipeline) runs once, not once per
+    * round. */
+  private def symEdges(pairs: DataFrame): DataFrame = {
+    val e = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+    e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  }
+
+  /** The nodes with at least one edge in `sym`, as `id`. The graph loops
+    * iterate over these only: a node with no edge receives nothing from
+    * any neighbor and gives nothing, so it rejoins in [[everyNode]], and
+    * dedup graphs are overwhelmingly singletons at any scale. An edge
+    * endpoint not in `nodes` never participates. */
+  private def edgeNodes(nodes: DataFrame, idCol: String,
+      sym: DataFrame): DataFrame =
+    ids(nodes, idCol).join(sym.select(col("src").as("id")), Seq("id"), "left_semi")
+
+  /** Every node of `nodeIds` (keyed `id`) as `(idCol, outCol)`: its loop
+    * label `__label` from `labels` (keyed `id`), or `own` for a node the
+    * loop never reached — singletons label themselves. */
+  private def everyNode(nodeIds: DataFrame, idCol: String,
+      labels: DataFrame, outCol: String, own: Column): DataFrame =
+    nodeIds.join(labels, Seq("id"), "left")
+      .select(col("id").as(idCol), coalesce(col("__label"), own).as(outCol))
 
   /** C4-style cross-corpus boilerplate removal: drop every sentence that
     * occurs in at least `minDocs` DISTINCT documents (cookie banners,
@@ -1759,7 +1725,8 @@ object Dedup {
     * as `cluster_id` (singletons label themselves). Unlike [[lshDedup]]'s
     * single-pass keep-min (which approximates transitive chains from the
     * min side), the component label is exact under transitivity — pick
-    * `cluster_id = doc_id` rows to keep one canonical doc per cluster. */
+    * `cluster_id = doc_id` rows to keep one canonical doc per cluster.
+    * Throws when the labels have not settled in `maxIter` rounds. */
   def nearDupClusters(
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 8, bands: Int = 4, shingleN: Int = 3,
@@ -1804,7 +1771,7 @@ object Dedup {
     * set of tier names with an edge touching the doc (singletons carry
     * '').
     *
-    * Scale shape: the tier union is pair-sized and localCheckpointed
+    * Scale shape: the tier union is pair-sized and pinned
     * ONCE (both the CC pass and the touch aggregation read it — the
     * tiers' kernels, e.g. a full LSH pipeline, must not run twice);
     * CC is [[connectedComponents]]' min-label propagation (near-dup
@@ -1815,9 +1782,9 @@ object Dedup {
   def multiTierClusters(nodes: DataFrame, idCol: String,
       tiers: Seq[(String, DataFrame)], maxIter: Int = 50): DataFrame = {
     require(tiers.nonEmpty, "at least one pair tier")
-    val edges = tiers.map { case (name, df) =>
+    val edges = Fixpoint.pin(tiers.map { case (name, df) =>
       df.select(col("id_a"), col("id_b"), lit(name).as("tier"))
-    }.reduce(_ unionByName _).localCheckpoint(true)
+    }.reduce(_ unionByName _))
     val cc = connectedComponents(nodes,
       edges.select("id_a", "id_b"), idCol, maxIter)
     val touched = edges
@@ -1828,6 +1795,54 @@ object Dedup {
         .as("tiers"))
     cc.join(touched, Seq(idCol), "left")
       .withColumn("tiers", coalesce(col("tiers"), lit("")))
+  }
+
+  /** Semi-supervised label propagation over an undirected pair graph:
+    * spread a sparse set of seed labels (e.g. human quality/toxicity
+    * ratings on a few documents) to every connected node through the
+    * near-dup/similarity edges — the standard cheap-labeling move when
+    * a corpus has manual labels for a sliver and graph structure for
+    * the rest. Synchronous iterations: each unlabeled-at-seed node
+    * takes the majority label among its labeled neighbors (ties to the
+    * SMALLEST label — deterministic); seeds are clamped. `iters` fixed
+    * so the result is a pure function of (graph, seeds) and replays
+    * step for step in SQL.
+    *
+    * All-integer state (labels + neighbor counts) — no FP anywhere, so
+    * determinism needs no decimal machinery. Scale shape per round:
+    * one edge-keyed join of the index-sized label frame against the
+    * pinned symmetrized edges, one (node, label) count aggregation, one
+    * argmax via max(struct) (no window), one left join back. Rounds run
+    * on [[Fixpoint.rounds]]; a round reads the previous label frame
+    * twice. Unreached nodes keep null. */
+  def labelPropagation(nodes: DataFrame, pairs: DataFrame, idCol: String,
+      seeds: DataFrame, labelCol: String, iters: Int = 5): DataFrame = {
+    val sym = Fixpoint.pin(symEdges(pairs))
+    val seed = seeds.select(col(idCol).as("id"),
+      col(labelCol).cast("long").as("__seed"))
+    val start = edgeNodes(nodes, idCol, sym)
+      .join(seed, Seq("id"), "left")
+      .select(col("id"), col("__seed"), col("__seed").as("__lab"))
+    val labels = Fixpoint.rounds(start, iters) { (labels, _) =>
+      // majority label among labeled neighbors; (count, -label) argmax
+      // via max(struct) keeps the whole round window-free
+      val nbr = sym
+        .join(labels.select(col("id").as("dst"), col("__lab")), "dst")
+        .filter(col("__lab").isNotNull)
+        .groupBy(col("src"), col("__lab"))
+        .agg(count(lit(1)).as("__c"))
+        .groupBy(col("src"))
+        .agg(max(struct(col("__c"), (-col("__lab")).as("__nl")))
+          .as("__best"))
+        .select(col("src").as("id"), (-col("__best.__nl")).as("__maj"))
+      labels.join(nbr, Seq("id"), "left")
+        .select(col("id"), col("__seed"),
+          coalesce(col("__seed"), col("__maj"), col("__lab")).as("__lab"))
+    }
+    // off-graph nodes keep their clamped seed (or null)
+    everyNode(ids(nodes, idCol).join(seed, Seq("id"), "left"), idCol,
+      labels.select(col("id"), col("__lab").as("__label")), "label",
+      col("__seed"))
   }
 
   /** PageRank over an undirected pair graph (e.g. the near-dup /
@@ -1848,179 +1863,56 @@ object Dedup {
     *
     * Scale shape: per round, one edge-keyed join of the rank frame
     * (index-sized: id + double) against the static symmetrized edge
-    * frame (persisted once), one target-keyed aggregation, one left
+    * frame (pinned once), one target-keyed aggregation, one left
     * join back to nodes — all AQE-managed equi-joins, no windows. The
-    * dangling sum is a driver scalar per round. Rounds chain LAZILY
-    * and the rank frame checkpoints every `ckptEvery` rounds (r15):
-    * each round references the previous frame exactly once, so
-    * lineage between checkpoints is linear with zero recompute —
-    * one scheduled barrier per k rounds instead of one per round.
-    * Checkpoint blocks are index-sized and released by the
-    * ContextCleaner. */
-  /** Semi-supervised label propagation over an undirected pair graph:
-    * spread a sparse set of seed labels (e.g. human quality/toxicity
-    * ratings on a few documents) to every connected node through the
-    * near-dup/similarity edges — the standard cheap-labeling move when
-    * a corpus has manual labels for a sliver and graph structure for
-    * the rest. Synchronous iterations: each unlabeled-at-seed node
-    * takes the majority label among its labeled neighbors (ties to the
-    * SMALLEST label — deterministic); seeds are clamped. `iters` fixed
-    * so the result is a pure function of (graph, seeds) and replays
-    * step for step in SQL.
-    *
-    * All-integer state (labels + neighbor counts) — no FP anywhere, so
-    * determinism needs no decimal machinery. Scale shape per round:
-    * one edge-keyed join of the index-sized label frame against the
-    * once-checkpointed symmetrized edges, one (node, label) count
-    * aggregation, one argmax via max(struct) (no window), one left
-    * join back — checkpointed every `ckptEvery` rounds (r15; default
-    * 2). A round references the previous label frame TWICE, so the
-    * un-checkpointed logical plan doubles per round — `ckptEvery` is
-    * capped to keep 2^k plan copies out of the optimizer (the
-    * iterative-lineage rule); physical exchanges inside the window
-    * dedupe via ReuseExchange. Unreached nodes keep null. */
-  def labelPropagation(nodes: DataFrame, pairs: DataFrame, idCol: String,
-      seeds: DataFrame, labelCol: String, iters: Int = 5,
-      ckptEvery: Int = 2): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    // ≤ 5: the logical plan between checkpoints holds 2^ckptEvery
-    // copies of the round subtree (each round references the previous
-    // frame twice); at ~2⁶ copies the driver stalls in
-    // analysis/optimization before a single task runs
-    require(ckptEvery >= 1 && ckptEvery <= 5,
-      "ckptEvery must be in [1, 5] — plan size doubles per " +
-        "un-checkpointed round")
-    val e = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
-    val seed = seeds.select(col(idCol).as("id"),
-      col(labelCol).cast("long").as("__seed"))
-    // iterate over EDGE-INCIDENT nodes only (r14 optimization): a node
-    // with no edge never receives a neighbor majority, so its label is
-    // its (clamped) seed or null — restored by the final left join.
-    // Per-round frames shrink from corpus-sized to edge-node-sized.
-    var labels = nodes.select(col(idCol).as("id"))
-      .join(sym.select(col("src").as("id")), Seq("id"), "left_semi")
-      .join(seed, Seq("id"), "left")
-      .select(col("id"), col("__seed"), col("__seed").as("__lab"))
-      .localCheckpoint(true)
-    var it = 0
-    while (it < iters) {
-      // majority label among labeled neighbors; (count, -label) argmax
-      // via max(struct) keeps the whole round window-free
-      val nbr = sym
-        .join(labels.select(col("id").as("dst"), col("__lab")), "dst")
-        .filter(col("__lab").isNotNull)
-        .groupBy(col("src"), col("__lab"))
-        .agg(count(lit(1)).as("__c"))
-        .groupBy(col("src"))
-        .agg(max(struct(col("__c"), (-col("__lab")).as("__nl")))
-          .as("__best"))
-        .select(col("src").as("id"), (-col("__best.__nl")).as("__maj"))
-      labels = labels.join(nbr, Seq("id"), "left")
-        .select(col("id"), col("__seed"),
-          coalesce(col("__seed"), col("__maj"), col("__lab")).as("__lab"))
-      it += 1
-      // r15 (guide §5): one round references the previous label frame
-      // TWICE (inside `nbr` and in the outer join), so un-checkpointed
-      // lineage fans out 2×/round — checkpoint every `ckptEvery` (=2)
-      // rounds: the duplicated intermediate subtree's exchanges are
-      // deduplicated by ReuseExchange inside the one plan, and the
-      // in-loop job count drops from `iters` to ⌊iters/k⌋ (the tail
-      // rounds execute inside the caller's final action). All-integer
-      // state — no float-order hazard in the longer chains.
-      if (it % ckptEvery == 0 && it < iters)
-        labels = labels.localCheckpoint(true)
-    }
-    // edge-incident nodes from the loop; off-graph nodes keep their
-    // clamped seed (or null) — exactly the old full-frame fixpoint
-    nodes.select(col(idCol).as("id"))
-      .join(seed, Seq("id"), "left")
-      .join(labels.select(col("id"), col("__lab")), Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("__lab"), col("__seed")).as("label"))
-  }
-
+    * dangling sum is a driver scalar per round. Rounds run on
+    * [[Fixpoint.rounds]]; a round reads the previous rank frame once. */
   def pageRank(nodes: DataFrame, pairs: DataFrame, idCol: String,
-      iters: Int = 10, damping: Double = 0.85,
-      ckptEvery: Int = 5): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(ckptEvery >= 1, "ckptEvery must be >= 1")
+      iters: Int = 10, damping: Double = 0.85): DataFrame = {
     val n = nodes.count().toDouble
     require(n > 0, "empty node set")
-    val e = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-    // ONE eager checkpoint of the symmetrized edge set: the pair
-    // pipeline (for near-dup graphs, the whole LSH verify) runs once;
-    // deg/edges/degIds all derive from the materialized blocks
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
+    val sym = Fixpoint.pin(symEdges(pairs))
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edges = sym.join(deg, "src")
-      .select(col("src"), col("dst"), col("deg")).localCheckpoint(true)
+    val edges = Fixpoint.pin(sym.join(deg, "src")
+      .select(col("src"), col("dst"), col("deg")))
     // Edge-incident nodes all have out-edges (sym is symmetric), so the
     // DANGLING set is exactly the isolated nodes — and every isolated
     // node follows one shared, bit-identical rank trajectory
     //   r_iso' = (1−d)/N + d·(0 + dang/N),   dang = Σ_iso dec₁₅(r_iso)
-    // (same update expression, same inputs). r14 optimization: evolve
-    // that single trajectory as a DRIVER scalar replicating the old
-    // distributed decimal(30,15) sum exactly — the sum of k identical
-    // decimals is k × the HALF_UP-rounded decimal (exact decimal
-    // multiply; Spark's double→decimal cast goes through
-    // Double.toString, mirrored here), cast back to double the same
-    // way — and iterate only over the edge-incident rank frame.
-    // Per-iteration work drops from corpus-sized scans + a corpus-wide
-    // dangling aggregation to edge-node-sized joins with the mass as a
-    // plan literal; isolated nodes rejoin via the final coalesce at
-    // their shared final rank. The semi-join keeps the old contract
-    // that a pair endpoint not in `nodes` never receives a rank (and
-    // so never contributes).
-    val active = nodes.select(col(idCol).as("id"))
-      .join(deg.select(col("src").as("id")), Seq("id"), "left_semi")
-      .localCheckpoint(true)
+    // (same update expression, same inputs). That trajectory evolves as
+    // a DRIVER scalar replicating the distributed decimal(30,15) sum
+    // exactly — the sum of k identical decimals is k × the
+    // HALF_UP-rounded decimal (exact decimal multiply; Spark's
+    // double→decimal cast goes through Double.toString, mirrored here),
+    // cast back to double the same way — and only the edge-incident
+    // rank frame iterates, with the mass as a plan literal; isolated
+    // nodes rejoin at their shared final rank.
+    val active = Fixpoint.pin(edgeNodes(nodes, idCol, sym))
     val k = n.toLong - active.count()
-    def dangOf(rIso: Double): Double =
+    def dangOf(r: Double): Double =
       if (k == 0L) 0.0
-      else new java.math.BigDecimal(java.lang.Double.toString(rIso))
+      else new java.math.BigDecimal(java.lang.Double.toString(r))
         .setScale(15, java.math.RoundingMode.HALF_UP)
         .multiply(java.math.BigDecimal.valueOf(k)).doubleValue()
-    var ranks = active.withColumn("r", lit(1.0 / n)).localCheckpoint(true)
-    var rIso = 1.0 / n
-    var it = 0
-    // r15 (guide §5, VERDICT r14 item 4): each round references the
-    // previous rank frame exactly ONCE (the contrib join), so lineage
-    // between checkpoints grows LINEARLY with zero recompute — unlike
-    // [[connectedComponents]]' 3×/round fanout, rounds here can chain
-    // lazily and checkpoint every `ckptEvery` rounds. The per-round
-    // eager localCheckpoint was one scheduled job per round (10 jobs,
-    // each a serialization barrier at ANY scale); now ⌈iters/k⌉−1 jobs
-    // run in-loop and the tail rounds execute inside the caller's one
-    // final action. The dangling-mass scalar (`rIso`/`dang`) is driver
-    // arithmetic independent of materialization, so per-round values —
-    // and every emitted rank — are bit-identical to the per-round-
-    // checkpoint plan (the 9-decimal q_pagerank oracle pins this).
-    while (it < iters) {
-      val dang = dangOf(rIso)
-      val contrib = edges
-        .join(ranks.select(col("id").as("src"), col("r")), "src")
-        .select(col("dst"),
-          (col("r") / col("deg")).cast("decimal(30,15)").as("c"))
-        .groupBy("dst").agg(sum(col("c")).cast("double").as("cs"))
-      ranks = active
-        .join(contrib.withColumnRenamed("dst", "id"), Seq("id"), "left")
-        .select(col("id"),
-          (lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("cs"), lit(0.0)) + lit(dang) / lit(n)))
-            .as("r"))
-      // the isolated trajectory steps through the IDENTICAL double
-      // arithmetic the old in-plan expression applied to cs-null rows
-      rIso = (1 - damping) / n + damping * (0.0 + dang / n)
-      it += 1
-      if (it % ckptEvery == 0 && it < iters)
-        ranks = ranks.localCheckpoint(true)
+    // rIso(i) is the isolated rank after i rounds
+    val rIso = Iterator.iterate(1.0 / n)(r =>
+      (1 - damping) / n + damping * (0.0 + dangOf(r) / n))
+      .take(iters + 1).toIndexedSeq
+    val ranks = Fixpoint.rounds(active.withColumn("r", lit(1.0 / n)), iters) {
+      (ranks, round) =>
+        val contrib = edges
+          .join(ranks.select(col("id").as("src"), col("r")), "src")
+          .select(col("dst"),
+            (col("r") / col("deg")).cast("decimal(30,15)").as("c"))
+          .groupBy("dst").agg(sum(col("c")).cast("double").as("cs"))
+        active
+          .join(contrib.withColumnRenamed("dst", "id"), Seq("id"), "left")
+          .select(col("id"),
+            (lit((1 - damping) / n) + lit(damping) *
+              (coalesce(col("cs"), lit(0.0)) + lit(dangOf(rIso(round))) / lit(n)))
+              .as("r"))
     }
-    nodes.select(col(idCol).as("id"))
-      .join(ranks, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("r"), lit(rIso)).as("pagerank"))
+    everyNode(ids(nodes, idCol), idCol, ranks.withColumnRenamed("r", "__label"),
+      "pagerank", lit(rIso(iters)))
   }
 }

@@ -715,9 +715,12 @@ object Temporal {
     *
     * Scale: each pass is one keyed agg + one broadcast-back join over a
     * BUCKETIZED series (bucket-bounded rows, like [[theilSen]] —
-    * bucketize first, stated contract); survivors localCheckpoint each
-    * pass so the loop's lineage stays flat (the connected-components /
-    * pageRank protocol). Iterations are data-dependent but ≤ maxIter.
+    * bucketize first, stated contract). Passes run on
+    * [[Fixpoint.untilSettled]] with a budget of at most `maxIter`
+    * passes: a pass marks the points it keeps (`__keep`) and the next
+    * pass drops the rest, so the probe, one count of unkept points,
+    * both materializes the pass and answers "removed nothing": one action
+    * per pass.
     *
     * Determinism: μ and σ from decimal(30,12) sums
     * (σ = √max(0, Σv²/n − μ²), same expression both engines), so the
@@ -731,16 +734,12 @@ object Temporal {
     def dsum(c: Column) = sum(c.cast("decimal(30,12)")).cast("double")
     val kc = keys.map(col)
     val v = col(valueCol)
-    var survivors = series.select(
-      kc :+ col(bucketCol) :+ v.cast("double").as(valueCol): _*)
-      .localCheckpoint(true)
-    // r14: the survivor count carries ACROSS passes (last pass's
-    // `after` is this pass's `before`), so each pass runs one count
-    // job instead of two — the convergence probe is unchanged
-    var before = survivors.count()
-    var it = 0
-    var changed = true
-    while (it < maxIter && changed) {
+    val point = kc :+ col(bucketCol) :+ v
+    val marked = Fixpoint.untilSettled(
+        Fixpoint.pin(series.select(kc :+ col(bucketCol) :+
+          v.cast("double").as(valueCol) :+ lit(true).as("__keep"): _*)),
+        maxIter, Fixpoint.Stop) { marked =>
+      val survivors = marked.filter(col("__keep")).select(point: _*)
       val g = if (keys.isEmpty) survivors.groupBy()
         else survivors.groupBy(kc: _*)
       val stats = g.agg((dsum(v) / count(v)).as("__mu"),
@@ -750,18 +749,16 @@ object Temporal {
             col("__m2") - col("__mu") * col("__mu"))))
       val joined = (if (keys.isEmpty) survivors.crossJoin(broadcast(stats))
         else survivors.join(broadcast(stats), keys))
-      val next = joined
-        .filter(abs(v - col("__mu")) <= lit(k) * col("__sigma"))
-        .select(kc :+ col(bucketCol) :+ v: _*)
-        .localCheckpoint(true)
-      val after = next.count()
-      changed = after != before
-      before = after
-      survivors = next
-      it += 1
+      // a null comparison drops the point, as a filter would
+      joined.select(point :+ coalesce(
+        abs(v - col("__mu")) <= lit(k) * col("__sigma"), lit(false))
+        .as("__keep"): _*)
+    } { marked =>
+      marked.agg(count(when(!col("__keep"), lit(1)))).head().getLong(0) == 0L
     }
     series.join(
-      survivors.select(kc :+ col(bucketCol) :+ lit(false).as("is_outlier"): _*),
+      marked.filter(col("__keep"))
+        .select(kc :+ col(bucketCol) :+ lit(false).as("is_outlier"): _*),
       keys :+ bucketCol, "left")
       .na.fill(true, Seq("is_outlier"))
   }

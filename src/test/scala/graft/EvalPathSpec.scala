@@ -2,7 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -44,34 +43,6 @@ class EvalPathSpec extends SparkSpec {
        |  "features": [{"name": "avg_v", "metric": "avg", "field": "value"}],
        |  "bucket_interval": "1h", "interval": "6h", "offset": "0s",
        |  "default_bucket": "pts"$extra}""".stripMargin
-
-  /** The Spark jobs `body` starts on this thread, counted by job group. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"evalpath-${java.util.UUID.randomUUID}"
-    val sentinel = s"$group-sentinel"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    def inGroup(g: String)(b: => Unit): Unit = {
-      sc.setJobGroup(g, g)
-      try b finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      inGroup(group)(body)
-      // the listener bus delivers in order: once the sentinel's job start
-      // is seen, every earlier job start has been counted
-      inGroup(sentinel)(sc.parallelize(Seq(1)).count())
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      seen.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def meanPredicted(scored: DataFrame): Double = {
     val ps = scored.select("predicted").collect().map(_.getDouble(0))

@@ -123,6 +123,69 @@ class IncrementalOpsSpec extends SparkSpec {
     assert(star == Set(0L)) // one component, rooted at the minimum id
   }
 
+  test("connectedComponents throws on an exhausted round budget") {
+    // a 20-node path needs 19 propagation rounds; 3 leave it unsettled
+    val edges = (0L until 19L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val err = intercept[IllegalStateException](
+      Dedup.connectedComponents(spark.range(20).toDF("id"), edges, "id",
+        maxIter = 3).collect())
+    assert(err.getMessage.contains("maxIter = 3") &&
+      err.getMessage.contains("connectedComponentsStar"), err.getMessage)
+  }
+
+  // ── iteration: job budgets and bounded lineage ─────────────────
+
+  /** 40 nodes: a 6-node path, a 5-clique, a 6-node star, one pair and
+    * 21 isolated nodes. */
+  private def graph = {
+    val edges = (0L until 5L).map(i => (i, i + 1)) ++
+      (for (a <- 10L to 14L; b <- a + 1 to 14L) yield (a, b)) ++
+      (21L to 25L).map(v => (20L, v)) :+ ((30L, 31L))
+    (spark.range(40).toDF("id"), edges.toDF("id_a", "id_b"))
+  }
+
+  test("the iterative operators stay inside their job budgets") {
+    val (nodes, edges) = graph
+    val seeds = Seq((0L, 1), (10L, 2), (25L, 3)).toDF("id", "rating")
+    val series = ((0 until 18).map(i => ("a", i.toLong, 0.0)) ++
+      Seq(("a", 18L, 100.0), ("a", 19L, 60.0)) ++
+      (0 until 20).map(i => ("b", i.toLong, (i % 3).toDouble)))
+      .toDF("g", "t", "v")
+    val jobs = Seq(
+      "connectedComponents" -> jobsOf(
+        Dedup.connectedComponents(nodes, edges, "id").collect()),
+      "connectedComponentsStar" -> jobsOf(
+        Dedup.connectedComponentsStar(nodes, edges, "id").collect()),
+      "labelPropagation" -> jobsOf(Dedup.labelPropagation(
+        nodes, edges, "id", seeds, "rating", iters = 5).collect()),
+      "pageRank" -> jobsOf(
+        Dedup.pageRank(nodes, edges, "id", iters = 10).collect()),
+      "sigmaClip" -> jobsOf(Temporal.sigmaClip(
+        series, Seq("g"), "t", "v", k = 2.5, maxIter = 3).collect()))
+    // measured on this graph and series, the final collect included
+    val budget = Map("connectedComponents" -> 44, "connectedComponentsStar" -> 40,
+      "labelPropagation" -> 27, "pageRank" -> 35, "sigmaClip" -> 14)
+    jobs.foreach { case (op, n) =>
+      info(s"$op: $n jobs")
+      assert(n <= budget(op), s"$op started $n jobs > budget ${budget(op)}")
+    }
+  }
+
+  test("long fixed-round loops keep their lineage bounded") {
+    // a 30-node path seeded at both ends settles within 15 rounds, so
+    // 40 rounds give the labels of 39
+    val path = (0L until 29L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val seeds = Seq((0L, 1), (29L, 2)).toDF("id", "rating")
+    def lp(iters: Int) = Dedup.labelPropagation(spark.range(30).toDF("id"),
+        path, "id", seeds, "rating", iters = iters).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lp(40) == lp(39))
+    val (nodes, edges) = graph
+    val mass = Dedup.pageRank(nodes, edges, "id", iters = 60).collect()
+      .map(_.getDouble(1)).sum
+    assert(math.abs(mass - 1.0) < 1e-9, mass)
+  }
+
   // ── exact Jaccard join (prefix filtering) ──────────────────────
 
   test("jaccardJoin equals the naive all-pairs exact computation") {
