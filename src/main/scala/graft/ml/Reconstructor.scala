@@ -1,8 +1,9 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.io.Json
 
@@ -41,8 +42,10 @@ import graft.io.Json
   * Scale: slot profile = one tiny groupBy; lag features = one window pass
   * (single series ⇒ one ordered partition, same as the reference's 1-D
   * series; per-series keys would partition the window); XᵀX = one agg.
-  * Predict is a broadcast profile join + window lags + a codegen'd dot
-  * product — no UDFs, no collect of data-scale frames.
+  * Fleet predict is a broadcast profile join + window lags + a codegen'd
+  * dot product. Solo predict runs the same basis as one sequential pass
+  * over the series ([[Local.series]]): on the driver when the series is a
+  * collected local frame, so a warm solo eval starts no job of its own.
   */
 object WindowReconstructor extends ModelType {
   import org.json4s._
@@ -343,15 +346,61 @@ object WindowReconstructor extends ModelType {
       * if predicted alone (the series-independence invariant is
       * unit-tested). */
     def predictKeyed(bucketed: DataFrame, valueCol: String,
-        anomalyType: String, seriesKeys: Seq[String]): DataFrame = {
-      val (feat, names) = assemble(bucketed, valueCol, profile, globalMean,
-        globalSigma, params, seriesKeys)
-      val mu = names.zip(weights)
-        .map { case (n, wi) => col(n) * lit(wi) }.reduce(_ + _)
-      Bands.scored(
-          feat.withColumn("predicted", mu).withColumn("sigma", lit(sigma)),
-          valueCol, anomalyType)
-        .drop((Seq("__slot", "__sm", "__sig") ++ names): _*)
+        anomalyType: String, seriesKeys: Seq[String]): DataFrame =
+      if (seriesKeys.isEmpty) predictSolo(bucketed, valueCol, anomalyType)
+      else {
+        val (feat, names) = assemble(bucketed, valueCol, profile, globalMean,
+          globalSigma, params, seriesKeys)
+        val mu = names.zip(weights)
+          .map { case (n, wi) => col(n) * lit(wi) }.reduce(_ + _)
+        Bands.scored(
+            feat.withColumn("predicted", mu).withColumn("sigma", lit(sigma)),
+            valueCol, anomalyType)
+          .drop((Seq("__slot", "__sm", "__sig") ++ names): _*)
+      }
+
+    /** Slot → (μ, σ) of the profile, collected once (model-sized). */
+    private lazy val slotProfile: Map[Long, (Double, Double)] =
+      profile.collect().map(r => r.getLong(0) -> (r.getDouble(1),
+        if (r.isNullAt(2)) globalSigma else r.getDouble(2))).toMap
+
+    /** One series' basis in bucket order, as [[featureCols]] builds it
+      * with window functions and in the same floating-point operation
+      * order, so the rows are identical. */
+    private def predictSolo(bucketed: DataFrame, valueCol: String,
+        anomalyType: String): DataFrame = {
+      val schema = StructType(bucketed.schema.fields ++ Seq("predicted", "sigma")
+        .map(StructField(_, DoubleType, nullable = true)))
+      val (bIdx, vIdx) =
+        (bucketed.schema.fieldIndex("bucket"), bucketed.schema.fieldIndex(valueCol))
+      // locals only: off the driver the kernel ships to a task
+      val (prof, p, w, gMean, gSigma, sd) =
+        (slotProfile, params, weights, globalMean, globalSigma, sigma)
+      val lags = (1 to p.localLags) ++ Seq(p.periodBuckets, 2 * p.periodBuckets)
+      val scored = Local.series(bucketed, "bucket", schema) { it =>
+        val rows = it.toIndexedSeq
+        val (sm, sig) = rows.map(r => prof.getOrElse(
+          Math.floorMod(r.getLong(bIdx), p.period) / p.bucketInterval,
+          (gMean, gSigma))).unzip
+        // a lag outside its slot's 3σ band, or missing, is its slot mean;
+        // before the series start, the global mean. `Double.compare` orders
+        // NaN above every number, as Spark's `>` does.
+        def lagged(j: Int, i: Int): Double =
+          if (j < i) gMean
+          else if (rows(j - i).isNullAt(vIdx)) sm(j - i)
+          else {
+            val v = rows(j - i).getAs[Number](vIdx).doubleValue
+            if (java.lang.Double.compare(math.abs(v - sm(j - i)),
+                3.0 * sig(j - i)) > 0) sm(j - i)
+            else v
+          }
+        rows.indices.iterator.map { j =>
+          val basis = 1.0 +: lags.map(lagged(j, _)) :+ sm(j)
+          val mu = basis.zip(w).map { case (x, wi) => x * wi }.reduce(_ + _)
+          Row.fromSeq(rows(j).toSeq ++ Seq(mu, sd))
+        }
+      }
+      Bands.scored(scored, valueCol, anomalyType)
     }
 
     /** With no observations every lag imputes to its slot mean, so x̂
@@ -359,9 +408,7 @@ object WindowReconstructor extends ModelType {
       * driver from the (model-sized) profile. */
     private lazy val perSlot: IndexedSeq[Double] = {
       val P = params.periodBuckets
-      val sm: Map[Long, Double] = profile.collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      def smOf(slot: Long): Double = sm.getOrElse(slot, globalMean)
+      def smOf(slot: Long): Double = slotProfile.get(slot).fold(globalMean)(_._1)
       (0 until P).map { s0 =>
         val feats = Array(1.0) ++
           (1 to params.localLags).map(i => smOf(Math.floorMod(s0 - i, P).toLong)) ++

@@ -72,16 +72,25 @@ final case class Feature(
   *  - empty buckets materialized with nulls, then filled per feature
   *    (/root/reference/loudml/elastic.py:488-500 `min_doc_count:0`).
   *
-  * Plan shape (the scale-critical decision, SURVEY §4): the reference issues
-  * ONE TSDB query per feature and zip-joins results client-side
+  * Fused scan (SURVEY §4): the reference issues ONE TSDB query per feature
+  * and zip-joins results client-side
   * (/root/reference/loudml/influx.py:566-585). Here all features sharing the
   * scan are fused into a single `groupBy(bucket).agg(...)` using conditional
   * aggregation — `agg(metric(when(tagFilter, field)))` — so N features cost
-  * ONE scan and ONE shuffle regardless of N. Map-side partial aggregation
-  * collapses each partition to ~one row per bucket before the exchange, so
-  * shuffle volume is O(buckets), not O(rows) — this is what survives 100 TB.
-  * The time-spine join is a broadcast (the spine is `(to-from)/interval`
-  * rows, tiny by construction), costing no extra shuffle.
+  * ONE scan regardless of N.
+  *
+  * Plan shape, one rule: a single series (no `seriesKeys`) whose points
+  * plan estimates at most `spark.sql.files.openCostInBytes` — Spark's own
+  * price of opening one file, below which splitting an input cannot pay —
+  * is read as ONE partition: the aggregate, a one-split spine, a
+  * shuffle-hash spine join, the fill/transform windows and the sort then
+  * need no exchange, so the query is one Spark job of one stage (a TSDB
+  * answering a small range in one round trip). Anything else — keyed
+  * series, a larger input, or an input of unknown size such as JDBC —
+  * runs distributed: map-side partial aggregation collapses each
+  * partition to ~one row per bucket before the exchange, so shuffle
+  * volume is O(buckets), not O(rows), and the aggregated side is
+  * broadcast into the spine join (keyed: AQE picks the join).
   */
 object TimesQuery {
 
@@ -136,6 +145,14 @@ object TimesQuery {
   def bucketCol(ts: Column, interval: Long): Column =
     (floor(unix_timestamp(ts.cast("timestamp")) / interval) * interval).cast("long")
 
+  /** True when `points`' optimized plan estimates at most
+    * `spark.sql.files.openCostInBytes` (planning only, no job). A source
+    * that cannot estimate its size (JDBC) reports Spark's default of
+    * `Long.MaxValue` and never qualifies. */
+  private def isSmall(points: DataFrame): Boolean =
+    points.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      points.sparkSession.sessionState.conf.filesOpenCostInBytes
+
   private def tagPredicate(matchAll: Seq[(String, Any)]): Column =
     matchAll.foldLeft(lit(true)) { case (acc, (tag, value)) =>
       acc && col(tag) === lit(value)
@@ -179,7 +196,10 @@ object TimesQuery {
     }
     val (f, t) = if (anchorAtFrom) (from, to) else alignRange(from, to, interval)
     val ts = col(tsCol)
-    val inRange = rangeFilter(points, tsCol, f, t)
+    val onePartition = seriesKeys.isEmpty && isSmall(points)
+    val inRange =
+      if (onePartition) rangeFilter(points, tsCol, f, t).coalesce(1)
+      else rangeFilter(points, tsCol, f, t)
 
     // anchored label: floor((ts-f)/i)*i + f; for epoch-aligned f (f % i == 0)
     // this reduces to floor(ts/i)*i, the epoch-aligned left edge
@@ -214,21 +234,25 @@ object TimesQuery {
       .groupBy((bucket +: seriesKeys.map(col)): _*)
       .agg(aggs.head, aggs.tail: _*)
 
-    // Gap spine: every interval in [f, t[ present. The spine side is tiny
-    // ((t-f)/interval rows) → broadcast, no shuffle. With seriesKeys the
-    // spine is crossed with the distinct series (also small: tag cardinality).
+    // Gap spine: every interval in [f, t[ present, (t-f)/interval rows.
+    // With seriesKeys the spine is crossed with the distinct series (also
+    // small: tag cardinality).
     var spine: DataFrame =
-      spark.range(f, t, interval).select(col("id").as("bucket"))
+      (if (onePartition) spark.range(f, t, interval, 1)
+       else spark.range(f, t, interval)).select(col("id").as("bucket"))
     if (seriesKeys.nonEmpty) {
       val series = points.select(seriesKeys.map(col): _*).distinct()
       spine = spine.crossJoin(series)
     }
-    // Left join spine→agg must build (broadcast) the RIGHT side; the
-    // aggregated frame is ≤ one row per bucket, tiny by construction, so
-    // broadcast it. With seriesKeys both sides are buckets×series — let
-    // AQE pick the strategy there rather than forcing a broadcast of
-    // something potentially large.
-    val aggSide = if (seriesKeys.isEmpty) broadcast(agged) else agged
+    // Left join spine→agg builds the RIGHT side, ≤ one row per bucket. In
+    // one partition a hash join builds it in place (a broadcast would be a
+    // job of its own); distributed, broadcast it. With seriesKeys both
+    // sides are buckets×series — let AQE pick the strategy there rather
+    // than forcing a broadcast of something potentially large.
+    val aggSide =
+      if (onePartition) agged.hint("shuffle_hash")
+      else if (seriesKeys.isEmpty) broadcast(agged)
+      else agged
     var out = spine.join(aggSide, keyCols.map(_.toString), "left")
 
     // Per-feature fill + transforms. Ordered windows partition by series so

@@ -77,6 +77,32 @@ class EvalPathSpec extends SparkSpec {
     }
   }
 
+  test("job budget: on a small parquet bucket a warm _eval of every " +
+      "ModelRegistry type, an evalOnce and a _read each start exactly 1 " +
+      "Spark job") {
+    val (engine, _, _) = engineWith(points(0 until 744, _ => 10.0, Set(730L)))
+    val fast = """, "epochs": 2, "patience": 2"""
+    ModelRegistry.names.foreach { tpe =>
+      engine.createModel(settings(tpe, tpe, fast))
+      engine.trainModel(tpe, "0", (720L * HOUR).toString)
+    }
+    val eval = Map("from" -> (720L * HOUR).toString, "to" -> (744L * HOUR).toString)
+    ModelRegistry.names.foreach { tpe =>
+      def run(): String = ModelEndpoints.run(engine, tpe, "_eval", eval, 0L)
+      val cold = run() // loads the model and resolves the schema
+      var warm = ""
+      val jobs = jobsOf { warm = run() }
+      assert(jobs == 1, s"$tpe warm _eval: $jobs jobs")
+      assert(warm == cold)
+    }
+    val sched = engine.startScheduled("seasonal")
+    sched.evalOnce(738L * HOUR)
+    assert(jobsOf(sched.evalOnce(744L * HOUR)) == 1)
+    val read = jobsOf(engine.readFromBucket("pts", (720L * HOUR).toString,
+      (744L * HOUR).toString, HOUR, "avg(value);count(value)").collect())
+    assert(read == 1, s"_read: $read jobs")
+  }
+
   test("the model cache follows ACTIVE: a _train, a restore flip, and " +
       "delete → re-create → retrain under the same name each make the next " +
       "_eval score with the new checkpoint") {

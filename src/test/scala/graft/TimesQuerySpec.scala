@@ -145,6 +145,58 @@ class TimesQuerySpec extends SparkSpec {
       seriesKeys = Seq("host"), maxSeries = Some(3)).count() == 3)
   }
 
+  test("a small single series runs in one partition with no exchange, and " +
+      "gives the distributed plan's rows for every behaviour of run") {
+    val HOUR = 3600L
+    val t0 = 1704067200L
+    // two days of 10-minute points on two hosts in three files, with a
+    // 5-hour hole; values are quarter multiples, so every sum is exact in
+    // any order
+    val dir = java.nio.file.Files.createTempDirectory("tq-paths").toString + "/p"
+    (0 until 288).filterNot(i => i >= 100 && i < 130).grouped(100)
+      .foreach { part =>
+        part.map(i => (t0 + i * 600L, if (i % 2 == 0) "a" else "b",
+            (i % 13) * 0.25))
+          .toDF("epoch", "host", "value")
+          .select(timestamp_seconds(col("epoch")).as("ts"), col("host"),
+            col("value"))
+          .coalesce(1).write.mode("append").parquet(dir)
+      }
+    val pts = spark.read.parquet(dir)
+    val (from, to) = (t0 + 1234L, t0 + 2 * 86400L - 77L)
+    def f(name: String, metric: String, fill: Fill = NoFill,
+        transform: Option[String] = None, script: Option[String] = None) =
+      Feature(name, metric, "value", fill = fill, transform = transform,
+        script = script)
+    val cases = Seq(
+      "fills" -> Seq(f("none", "avg"), f("const", "avg", ConstFill(-1.0)),
+        f("prev", "max", PreviousFill)),
+      "count" -> Seq(f("n", "count")),
+      "post-agg" -> Seq(f("d", "derivative"), f("i", "integral"),
+        f("diff", "avg", PreviousFill, transform = Some("diff"))),
+      "topk" -> Seq(f("top", "topk_3")),
+      "script" -> Seq(f("s", "sum", script = Some("value * 2 + 1")),
+        Feature("a_only", "avg", "value", matchAll = Seq("host" -> "a"))))
+    def plan(df: DataFrame): String = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    val key = "spark.sql.files.openCostInBytes"
+    for ((label, feats) <- cases; anchor <- Seq(false, true)) {
+      def query() = TimesQuery.run(spark, pts, "ts", HOUR, from, to, feats,
+        anchorAtFrom = anchor)
+      val one = query()
+      val rows = one.collect().toSeq
+      assert(!plan(one).contains("Exchange"), s"$label:\n${plan(one)}")
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "1") // every input is larger than this
+      val (distRows, distPlan) =
+        try { val d = query(); (d.collect().toSeq, plan(d)) }
+        finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(distPlan.contains("Exchange"), s"$label: distributed plan")
+      assert(rows.length == 48, label)
+      assert(rows == distRows, s"$label anchorAtFrom=$anchor")
+    }
+  }
+
   test("unsupported metric raises UnsupportedMetric (loudml/errors.py:106-115)") {
     assertThrows[graft.functions.Metrics.UnsupportedMetric](
       Feature("x", "nope", "foo"))
