@@ -3052,7 +3052,7 @@ object DataPipelineQueries {
         .withColumn("qcos", round(col("qcos") + lit(1e-9), 4))
         .orderedSmall("query_id", "rank")
     },
-      // the persisted-index probe must equal the in-query IVF-SQ8 path:
+      // the persisted-index probe must equal IVF-SQ8 computed in-query:
       // q_ann_ivf's cell routing composed with q_ann_quant's quantized
       // cosine, both replayed from the raw embeddings
       """WITH e AS (
@@ -3131,9 +3131,8 @@ object DataPipelineQueries {
     //    training pass): upper-triangle XᵀX + per-class XᵀY of the
     //    bias-augmented embeddings, exact decimal sums — ONE corpus
     //    pass each, shuffle carries only the (d+1)(d+2)/2 + (d+1)·C
-    //    partials. The downstream solve/score are spec-pinned
-    //    (fitProbe/scoreProbe); the distributed half is oracle-gated
-    //    here.
+    //    partials. Only this distributed half is served: the driver-side
+    //    ridge solve and the scoring are left to the caller.
     Query("q_probe_stats", (s, dir) => {
       val e = embs(s, dir)
       val gram = Similarity.probeGram(e, "embedding")
@@ -3170,7 +3169,7 @@ object DataPipelineQueries {
         |UNION ALL SELECT 'xty' AS part, a, b, v FROM xty
         |ORDER BY part, a, b""".stripMargin),
 
-    // ── PCA first stage: exact population covariance of the embedding
+    // ── exact population covariance of the embedding
     //    corpus from one decimal-summed gram pass (upper triangle);
     //    the bias row of the augmented gram supplies sums and n
     Query("q_embed_cov", (s, dir) => {

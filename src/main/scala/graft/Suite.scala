@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The runner behind the suite tools (`Bench`, `Verify`, `ml.DonutPin` and
-  * the test-side audit mains): one session builder and one subset
-  * selector. Each tool keeps its own per-query action and error policy. */
+/** The runner behind the suite tools (`Bench`, `Verify`, `ml.DonutPin`,
+  * the test-side audit mains and the specs): one session builder and one
+  * subset selector. Each tool keeps its own per-query action and error policy. */
 object Suite {
   /** `SPARK_GRAFT_CPUS` as a positive core count (`default` when unset);
     * anything else fails fast, before a session starts. */
@@ -15,10 +15,11 @@ object Suite {
     }
 
   /** `local[cpus]` with `cpus` shuffle partitions, UTC session time, no
-    * UI and WARN-level logging. */
+    * UI, WARN-level logging and the `graft_*` SQL functions. */
   def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -81,8 +81,6 @@ final class GraftConfig(private val data: JValue) {
       case Some(other) => bad(k, "a boolean", other)
     }
 
-  lazy val clusterName: String = str(section("cluster"), "name", "graft")
-  lazy val nodeName: String = str(section("node"), "name", "graft")
   lazy val nodeMaster: Boolean = bool(section("node"), "master", true)
   lazy val nodeCompute: Boolean = bool(section("node"), "compute", true)
   lazy val metricsEnable: Boolean = bool(section("metrics"), "enable", true)

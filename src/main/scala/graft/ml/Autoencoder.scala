@@ -200,7 +200,7 @@ object AutoencoderReconstructor extends ModelType {
     val sd = if (sd0 == 0.0) 1.0 else sd0 // σ=0→1 guard (donut.py:644-650)
     val P = p.periodBuckets
     def slotOf(bucket: Long): Int =
-      (math.floorMod(bucket, p.period) / p.bucketInterval).toInt
+      Slot.of(bucket, p.period, p.bucketInterval)
 
     // per-slot standardized (mean, σ): imputation source + the abnormal-
     // context band (Donut's abnormal mask zero-weights flagged entries;
@@ -326,7 +326,7 @@ object AutoencoderReconstructor extends ModelType {
     val span = p.span
     val interval = p.bucketInterval
     def slotOf(bucket: Long): Int =
-      (math.floorMod(bucket, p.period) / interval).toInt
+      Slot.of(bucket, p.period, interval)
     val x = new Array[Double](span)
     val imp = new Array[Boolean](span)
     var j = 0
@@ -408,7 +408,7 @@ object AutoencoderReconstructor extends ModelType {
       val p = params
       val span = p.span
       def slotOf(bucket: Long): Int =
-        (math.floorMod(bucket, p.period) / p.bucketInterval).toInt
+        Slot.of(bucket, p.period, p.bucketInterval)
       // seed context with slot means (no observations available)
       val buf = scala.collection.mutable.ArrayBuffer.tabulate(span - 1)(
         j => slotMean(slotOf(from - (span - 1 - j) * p.bucketInterval)))

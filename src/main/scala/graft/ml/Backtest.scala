@@ -52,39 +52,4 @@ object Backtest {
           col("__actual") <= col("upper"), 1.0).otherwise(0.0))
           .as("coverage"))
   }
-
-  /** Rolling-origin backtest for ANY registered [[ModelType]] (solo
-    * series): at each origin the model trains on strictly-prior
-    * buckets through the registry seam and forecasts the next
-    * `horizon`; metrics as in [[rollingOrigin]]. This is the
-    * model-agnostic payoff of the trait — seasonal, Holt-Winters, the
-    * tied-weights AE, and the Donut VAE all backtest through one
-    * harness, so model selection can be an evidence-driven query
-    * instead of a default. */
-  def rollingOriginModel(series: DataFrame, valueCol: String,
-      typeName: String, settingsJson: String, origins: Seq[Long],
-      horizon: Long): DataFrame = {
-    require(origins.nonEmpty, "need at least one origin")
-    val spark = series.sparkSession
-    val tpe = ModelRegistry(typeName)
-    val forecasts = origins.map { o =>
-      val trained = tpe.train(
-        series.filter(col("bucket") < o), valueCol, settingsJson)
-      trained.forecast(spark, o, o + horizon)
-        .withColumn("origin", lit(o))
-    }.reduce(_ unionByName _)
-    val actuals = series.select(col("bucket"),
-      col(valueCol).cast("double").as("__actual"))
-    val err = abs(col("__actual") - col("predicted"))
-    forecasts.join(actuals, Seq("bucket"))
-      .groupBy(col("origin"))
-      .agg(
-        count(lit(1)).as("n_buckets"),
-        avg(err).as("mae"),
-        avg(when(abs(col("__actual")) > 1e-12,
-          err / abs(col("__actual")))).as("mape"),
-        avg(when(col("__actual") >= col("lower") &&
-          col("__actual") <= col("upper"), 1.0).otherwise(0.0))
-          .as("coverage"))
-  }
 }

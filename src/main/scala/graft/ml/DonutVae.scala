@@ -459,7 +459,7 @@ object DonutVae extends ModelType {
     val sd = if (sd0 == 0.0) 1.0 else sd0 // σ=0→1 guard (donut.py:644-650)
     val P = p.periodBuckets
     def slotOf(bucket: Long): Int =
-      (math.floorMod(bucket, p.period) / p.bucketInterval).toInt
+      Slot.of(bucket, p.period, p.bucketInterval)
 
     // slot stats ride along for forecast seeding (apply_defaults analog)
     val bySlot = series.collect { case (b, Some(v)) => (slotOf(b), (v - mu) / sd) }
@@ -743,7 +743,7 @@ object DonutVae extends ModelType {
       val p = params
       val span = p.span
       def slotOf(bucket: Long): Int =
-        (math.floorMod(bucket, p.period) / p.bucketInterval).toInt
+        Slot.of(bucket, p.period, p.bucketInterval)
       val buf = scala.collection.mutable.ArrayBuffer.tabulate(span - 1)(
         j => slotMean(slotOf(from - (span - 1 - j) * p.bucketInterval)))
       val rows = Iterator.iterate(from)(_ + p.bucketInterval)

@@ -77,7 +77,8 @@ object HoltWinters {
     val trend0 =
       if (s2.nonEmpty) (s2.map(_._2).sum / s2.size - mean1) / m else 0.0
     val season = Array.fill(m)(0.0)
-    s1.foreach { case (b, v) => season(slotOf(b, p)) = v - mean1 }
+    s1.foreach { case (b, v) =>
+      season(Slot.of(b, p.period, p.bucketInterval)) = v - mean1 }
 
     var level = mean1
     var trend = trend0
@@ -88,7 +89,7 @@ object HoltWinters {
       // roll state over any gap (h-1 silent steps project level forward)
       val h = ((b - prevBucket) / p.bucketInterval).toInt
       if (h > 1) level += (h - 1) * trend
-      val j = slotOf(b, p)
+      val j = Slot.of(b, p.period, p.bucketInterval)
       val pred = level + trend + season(j)
       sse += (v - pred) * (v - pred); n += 1
       val prevLevel = level
@@ -100,9 +101,6 @@ object HoltWinters {
     val sigma = math.max(math.sqrt(sse / n), p.sigmaFloor)
     HoltWintersState(level, trend, season, sigma, prevBucket)
   }
-
-  private def slotOf(bucket: Long, p: HoltWintersParams): Int =
-    (math.floorMod(bucket, p.period) / p.bucketInterval).toInt
 
   /** Grid-search (α,β,γ) by in-sample one-step-ahead RMS (each candidate
     * is one O(buckets) driver fold — the whole grid costs less than one
@@ -214,8 +212,7 @@ object HoltWinters {
   /** `predicted` = ℓ + h·b + s_slot, with h = steps since the forecast
     * origin, from the state columns, which go except `sigma`. */
   private def expected(withState: DataFrame, p: HoltWintersParams): DataFrame = {
-    val slot = (pmod(col("bucket"), lit(p.period)) / lit(p.bucketInterval))
-      .cast("long")
+    val slot = Slot.column(col("bucket"), p.period, p.bucketInterval)
     val h = ((col("bucket") - col("last_bucket")) / lit(p.bucketInterval))
       .cast("long")
     withState.withColumn("predicted", col("level") + h * col("trend") +

@@ -103,6 +103,17 @@ private[ml] object Bands {
       .drop("sigma")
 }
 
+/** The one slot rule: a bucket's seasonal slot is
+  * `(bucket mod period) / interval`, the index of every model type's
+  * per-slot profile. `of` is the scalar form, `column` the Spark one. */
+private[ml] object Slot {
+  def of(bucket: Long, period: Long, interval: Long): Int =
+    (Math.floorMod(bucket, period) / interval).toInt
+
+  def column(bucket: Column, period: Long, interval: Long): Column =
+    (pmod(bucket, lit(period)) / lit(interval)).cast("long")
+}
+
 trait ModelType {
   def name: String
   /** Train on a spine-complete bucketed series (`bucket: Long` epoch-sec

@@ -380,7 +380,7 @@ object WindowReconstructor extends ModelType {
       val scored = Local.series(bucketed, "bucket", schema) { it =>
         val rows = it.toIndexedSeq
         val (sm, sig) = rows.map(r => prof.getOrElse(
-          Math.floorMod(r.getLong(bIdx), p.period) / p.bucketInterval,
+          Slot.of(r.getLong(bIdx), p.period, p.bucketInterval).toLong,
           (gMean, gSigma))).unzip
         // a lag outside its slot's 3σ band, or missing, is its slot mean;
         // before the series start, the global mean. `Double.compare` orders
@@ -422,8 +422,7 @@ object WindowReconstructor extends ModelType {
         to: Long): DataFrame = {
       import spark.implicits._
       (from until to by params.bucketInterval).map { b =>
-        (b, perSlot((Math.floorMod(b, params.period) / params.bucketInterval)
-          .toInt), sigma)
+        (b, perSlot(Slot.of(b, params.period, params.bucketInterval)), sigma)
       }.toDF("bucket", "predicted", "sigma")
     }
   }

@@ -40,7 +40,7 @@ final case class SeasonalModelParams(
 object SeasonalModel {
 
   def slotCol(bucket: Column, p: SeasonalModelParams): Column =
-    (pmod(bucket, lit(p.period)) / lit(p.bucketInterval)).cast("long").as("slot")
+    Slot.column(bucket, p.period, p.bucketInterval).as("slot")
 
   /** Train: per-(key, slot) mean/σ_pop profile of `valueCol` over a
     * bucketed frame (σ=0→1 guard as in loudml/donut.py:644-650).

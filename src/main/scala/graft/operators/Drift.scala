@@ -241,50 +241,6 @@ object Drift {
       (counts.getOrElse(b, 0L) + 1).toDouble / (n + bins).toDouble)
   }
 
-  /** A frozen drift baseline: `(lo, hi, bins, fracs)`. */
-  case class Baseline(lo: Double, hi: Double, bins: Int,
-      fracs: Seq[Double])
-
-  /** Freeze a drift baseline to `dir` — the build-once half of the
-    * monitor lifecycle (the [[graft.operators.Retrieval.buildIndex]] /
-    * buildAnnIndex pattern for distributions): lo/hi from the corpus,
-    * [[binFractions]] over it, persisted as one parquet row +
-    * `_BASELINE_OK` marker written last. A production monitor freezes
-    * this at training time and probes it forever; recomputing the
-    * reference per evaluation silently moves the goalposts whenever
-    * the corpus does. Doubles round-trip parquet bit-exactly, so a
-    * loaded baseline reproduces the in-memory comparison. */
-  def saveBaseline(df: DataFrame, vCol: String, bins: Int,
-      dir: String): Baseline = {
-    val spark = df.sparkSession
-    val mm = df.agg(min(col(vCol).cast("double")),
-      max(col(vCol).cast("double"))).head()
-    val b = Baseline(mm.getDouble(0), mm.getDouble(1), bins,
-      binFractions(df, vCol, mm.getDouble(0), mm.getDouble(1), bins))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_BASELINE_OK"), false)
-    import spark.implicits._
-    Seq((b.lo, b.hi, b.bins, b.fracs))
-      .toDF("lo", "hi", "bins", "fracs")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/baseline")
-    fs.create(new org.apache.hadoop.fs.Path(s"$dir/_BASELINE_OK"), true)
-      .close()
-    b
-  }
-
-  /** Load a [[saveBaseline]] artifact; refuses an incomplete one. */
-  def loadBaseline(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Baseline = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_BASELINE_OK")),
-      s"no completed baseline at $dir (missing _BASELINE_OK)")
-    val r = spark.read.parquet(s"$dir/baseline").head()
-    Baseline(r.getDouble(0), r.getDouble(1), r.getInt(2),
-      r.getSeq[Double](3))
-  }
-
   /** Mutual information (nats) and Pearson χ² between two categorical
     * columns, one row out: `(n, cells, mi, chi2)` — "is lang independent
     * of source" style association audits over contingency tables.

@@ -1130,20 +1130,6 @@ object Multimodal {
       salt: String = "decode-budget"): DataFrame =
     Sampling.hashSample(df, idCol, rowFraction, salt)
 
-  /** Absolute-count form of [[decodeBudget]]: decode at most ~`maxRows`
-    * blobs. One metadata-only count (parquet row counts, no blob reads)
-    * converts the cap to a hash fraction; the kept count is binomial
-    * around `maxRows` (exact quota would need a global top-k by hash —
-    * a sort the budget exists to avoid). `df` is returned unchanged when
-    * it already fits the budget. */
-  def decodeBudgetRows(df: DataFrame, idCol: String, maxRows: Long,
-      salt: String = "decode-budget"): DataFrame = {
-    require(maxRows >= 0, "maxRows must be >= 0")
-    val total = df.count()
-    if (total <= maxRows) df
-    else decodeBudget(df, idCol, maxRows.toDouble / total, salt)
-  }
-
   /** Frame sampling: cut `n` evenly-spaced fixed-width byte windows from
     * the blob (video-frame-sampling shape; windows of real codecs would
     * be keyframes). Pure Column ops — `substring` on binary is codegen'd. */

@@ -142,24 +142,6 @@ object Sampling {
       .drop("__s", "__rate")
   }
 
-  /** Assign each row a named split by consecutive hash intervals, e.g.
-    * `Seq("train" -> 0.98, "val" -> 0.01, "test" -> 0.01)`. Weights must
-    * sum to 1; the last split absorbs the hash's top edge. Appending new
-    * docs never moves an existing doc between splits. */
-  def hashSplit(df: DataFrame, idCol: String, splits: Seq[(String, Double)],
-      salt: String = ""): DataFrame = {
-    require(splits.nonEmpty, "at least one split")
-    require(math.abs(splits.map(_._2).sum - 1.0) < 1e-9,
-      "split weights must sum to 1")
-    val u = hashUniform(col(idCol), salt)
-    val cuts = splits.scanLeft(0.0)(_ + _._2).tail
-    val expr = splits.init.zip(cuts.init).foldRight(
-      lit(splits.last._1): Column) { case (((name, _), hi), rest) =>
-      when(u < hi, lit(name)).otherwise(rest)
-    }
-    df.withColumn("split", expr)
-  }
-
   /** Deterministic weighted sample WITHOUT replacement of size `k`
     * (Efraimidis–Spirakis A-ES): each row gets the key `u^(1/w)` with
     * `u = hashUniform(id)` and `w = weight`, and the `k` largest keys win

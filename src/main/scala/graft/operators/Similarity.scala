@@ -97,6 +97,10 @@ object Similarity {
         transform(v, x => round(x / s).cast("int")).as("q"))), 1)
   }
 
+  /** Integer dot product of two int-code arrays, summed as a long. */
+  private def intDotCol(a: Column, b: Column): Column = aggregate(
+    zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
+
   /** Exact top-k over QUANTIZED vectors — what an int8 index serves.
     * The ranking kernel is the quantized COSINE, where the per-vector
     * scales cancel (`cos(ŝa·qa, ŝb·qb) = Σqa·qb / (|qa|·|qb|)`), so the
@@ -107,18 +111,16 @@ object Similarity {
   def quantizedTopK(
       queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
-    def intDot(a: Column, b: Column): Column = aggregate(
-      zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
     def side(df: DataFrame, as: String, v: String, n: String) =
       df.select(col(idCol).as(as), col(vecCol).as("__v"))
         .select(col(as), quantize(col("__v")).getField("q").as(v))
-        .withColumn(n, sqrt(intDot(col(v), col(v)).cast("double")))
+        .withColumn(n, sqrt(intDotCol(col(v), col(v)).cast("double")))
     val q = side(queries, "query_id", "qv", "__qn")
     val c = side(corpus, "match_id", "cv", "__cn")
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("match_id"))
       .withColumn("qcos",
-        intDot(col("qv"), col("cv")).cast("double")
+        intDotCol(col("qv"), col("cv")).cast("double")
           / (col("__qn") * col("__cn")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("qcos").desc, col("match_id").asc)
@@ -153,6 +155,26 @@ object Similarity {
     Array.fill(planes, dim)(rnd.nextDouble() * 2 - 1)
   }
 
+  /** Centroid array as a plan literal with precomputed norms (cell id =
+    * array position). Driver-side O(nlist·dim) — the IVF index itself,
+    * not data. Norms use the same sequential left-fold the Spark
+    * expression tree uses (bit-identical to norm()). */
+  private def centroidLit(cents: Array[Array[Double]]): Column =
+    array(cents.zipWithIndex.map { case (v, cell) =>
+      struct(lit(cell.toLong).as("cell"), typedlit(v.toSeq).as("centv"),
+        lit(math.sqrt(v.foldLeft(0.0)((s, x) => s + x * x))).as("cnorm"))
+    }: _*)
+
+  /** Argmax-cosine cell for one row: one `transform` scoring every
+    * centroid exactly once, `array_max` over (sim, −cell) structs —
+    * ties to the lowest cell; see [[ivfTopK]] for why not a fold. */
+  private def bestCell(cl: Column, v: Column, vNorm: Column): Column =
+    -array_max(transform(cl, c =>
+      struct(
+        (dot(v, c.getField("centv")) /
+          (vNorm * c.getField("cnorm"))).as("sim"),
+        (-c.getField("cell")).as("negcell")))).getField("negcell")
+
   /** IVF (inverted-file) ANN: partition the corpus into `nlist` cells by
     * nearest centroid, probe the `nprobe` cells nearest each query, exact
     * cosine + top-k within probed cells — the classic IVF-Flat shape
@@ -179,58 +201,6 @@ object Similarity {
     * still uses (queries are tiny and need keep=nprobe, where the
     * window is the natural top-k). The probe join is keyed on the cell
     * id, never an all-pairs product. */
-  /** Centroid array as a plan literal with precomputed norms (cell id =
-    * array position). Driver-side O(nlist·dim) — the IVF index itself,
-    * not data. Norms use the same sequential left-fold the Spark
-    * expression tree uses (bit-identical to norm()). */
-  private def centroidLit(cents: Array[Array[Double]]): Column =
-    array(cents.zipWithIndex.map { case (v, cell) =>
-      struct(lit(cell.toLong).as("cell"), typedlit(v.toSeq).as("centv"),
-        lit(math.sqrt(v.foldLeft(0.0)((s, x) => s + x * x))).as("cnorm"))
-    }: _*)
-
-  /** Argmax-cosine cell for one row: one `transform` scoring every
-    * centroid exactly once, `array_max` over (sim, −cell) structs —
-    * ties to the lowest cell; see [[ivfTopK]] for why not a fold. */
-  private def bestCell(cl: Column, v: Column, vNorm: Column): Column =
-    -array_max(transform(cl, c =>
-      struct(
-        (dot(v, c.getField("centv")) /
-          (vNorm * c.getField("cnorm"))).as("sim"),
-        (-c.getField("cell")).as("negcell")))).getField("negcell")
-
-  /** Spherical k-means centroids for [[ivfTopK]]: Lloyd iterations with
-    * the shuffle-free [[bestCell]] assignment and a per-cell mean of
-    * UNIT member vectors (the spherical update — cosine objective is
-    * monotone non-increasing, spec-checked). Deterministic init: the
-    * `nlist` lowest-id corpus vectors. Each iteration is one
-    * assignment-plus-aggregate job; the update aggregate is one row per
-    * cell (map-side partials), centroids collect O(nlist·dim) to the
-    * driver like any trained index. Empty cells keep their previous
-    * centroid. */
-  def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, iters: Int = 5): Array[Array[Double]] = {
-    var cents = corpus.filter(col(idCol) < nlist).orderBy(col(idCol))
-      .select(asDouble(col(vecCol))).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(cents.nonEmpty, s"corpus has no rows with $idCol < $nlist")
-    val dim = cents(0).length
-    val unit = corpus.select(asDouble(col(vecCol)).as("cv"))
-      .withColumn("__n", norm(col("cv")))
-      .filter(col("__n") > 0)
-      .select(transform(col("cv"), x => x / col("__n")).as("uv"))
-    for (_ <- 0 until iters) {
-      val aggs = (0 until dim).map(i => avg(col("uv").getItem(i)).as(s"c$i"))
-      val updated = unit
-        .withColumn("cell", bestCell(centroidLit(cents), col("uv"), lit(1.0)))
-        .groupBy("cell").agg(aggs.head, aggs.tail: _*)
-        .collect().map(r => r.getLong(0).toInt ->
-          Array.tabulate(dim)(i => r.getDouble(i + 1))).toMap
-      cents = Array.tabulate(cents.length)(c => updated.getOrElse(c, cents(c)))
-    }
-    cents
-  }
-
   def ivfTopK(
       queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, nlist: Int, nprobe: Int,
@@ -273,69 +243,12 @@ object Similarity {
       .select("query_id", "rank", "match_id", "cosine")
   }
 
-  /** IVF-SQ8: IVF cell routing with int8-quantized vectors inside the
-    * candidate join — the composition a 100 TB ANN store actually runs
-    * (FAISS's large-scale default). Cell assignment reads the full
-    * float vector (it is being scanned anyway); everything that flows
-    * INTO the join — the per-row payload that gets shuffled on the cell
-    * key and broadcast on the query side — carries the int8 codes plus
-    * one int norm instead of the double array: 8× less join traffic at
-    * identical routing. The pair kernel is the scale-free quantized
-    * cosine of [[quantizedTopK]] (integer-exact, reproducible); recall
-    * vs the float IVF is spec-bounded. */
-  def ivfTopKQuantized(
-      queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, nlist: Int, nprobe: Int,
-      centroids: Option[Array[Array[Double]]] = None): DataFrame = {
-    val centRows = centroids.getOrElse {
-      corpus.filter(col(idCol) < nlist).orderBy(col(idCol))
-        .select(asDouble(col(vecCol))).collect()
-        .map(_.getSeq[Double](0).toArray)
-    }
-    val centLit = centroidLit(centRows)
-    def intDot(a: Column, b: Column): Column = aggregate(
-      zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
-    val corpusCells = corpus
-      .select(col(idCol).as("match_id"), asDouble(col(vecCol)).as("__cv"))
-      .withColumn("__n", norm(col("__cv")))
-      .withColumn("cell", bestCell(centLit, col("__cv"), col("__n")))
-      .select(col("match_id"), col("cell"),
-        quantize(col("__cv")).getField("q").as("cq"))
-      .withColumn("__cn", sqrt(intDot(col("cq"), col("cq")).cast("double")))
-    val queryProbes = {
-      val scored = queries.select(col(idCol), asDouble(col(vecCol)).as("__v"))
-        .withColumn("__n", norm(col("__v")))
-        .select(col(idCol), col("__v"), col("__n"), explode(centLit).as("__c"))
-        .withColumn("__sim",
-          dot(col("__v"), col("__c.centv")) / (col("__n") * col("__c.cnorm")))
-      val w = Window.partitionBy(idCol)
-        .orderBy(col("__sim").desc, col("__c.cell").asc)
-      scored.withColumn("__r", row_number().over(w))
-        .filter(col("__r") <= nprobe)
-        .select(col(idCol).as("query_id"), col("__c.cell").as("cell"),
-          quantize(col("__v")).getField("q").as("qq"))
-        .withColumn("__qn", sqrt(intDot(col("qq"), col("qq")).cast("double")))
-    }
-    val scored = corpusCells.join(broadcast(queryProbes), "cell")
-      .filter(col("query_id") =!= col("match_id"))
-      .withColumn("qcos",
-        intDot(col("qq"), col("cq")).cast("double")
-          / (col("__qn") * col("__cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("match_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "match_id", "qcos")
-  }
-
-  private def intDotCol(a: Column, b: Column): Column = aggregate(
-    zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
-
   /** Persist the IVF-SQ8 ANN index — the build-once-probe-many shape a
-    * 100 TB embedding store actually serves (every [[ivfTopKQuantized]]
-    * call today re-assigns and re-quantizes the whole corpus in-query;
-    * a real store pays that exactly once per corpus version, like
-    * [[graft.operators.Retrieval.buildIndex]] pays tokenization once).
+    * 100 TB embedding store actually serves: IVF cell routing
+    * ([[ivfTopK]]) with the int8 codes of [[quantize]] inside the
+    * candidate join. Cell assignment and quantization are paid once per
+    * corpus version, like [[graft.operators.Retrieval.buildIndex]] pays
+    * tokenization once.
     *
     * Layout under `dir`:
     *  - `centroids` — (cell, centv) rows, the routing table (tiny:
@@ -359,8 +272,7 @@ object Similarity {
     * (the [[ivfTopK]] convention, oracle-replayable), so a corpus
     * missing some of those ids gets fewer than nlist cells, numbered
     * densely by ascending id, and a corpus whose ids don't start near
-    * 0 must pass explicit centroids. Pass [[kmeansCentroids]] output
-    * for trained routing. */
+    * 0 must pass explicit centroids. */
   def buildAnnIndex(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, nlist: Int,
       centroids: Option[Array[Array[Double]]] = None): Unit = {
@@ -653,11 +565,11 @@ object Similarity {
       }
   }
 
-  /** IVF-SQ8 top-k against a [[buildAnnIndex]] directory: results are
-    * BIT-IDENTICAL to [[ivfTopKQuantized]] on the same corpus and
-    * centroids (codes and norms round-trip parquet exactly), so the
-    * index is a pure cost move — the correctness gate runs the same
-    * oracle against both paths.
+  /** IVF-SQ8 top-k against a [[buildAnnIndex]] directory: [[ivfTopK]]'s
+    * cell routing composed with [[quantizedTopK]]'s quantized cosine
+    * (codes and norms round-trip parquet exactly), so the index is a
+    * pure cost move — `q_ann_indexed`'s oracle replays both from the raw
+    * embeddings.
     *
     * Probe routing: a batch of up to `maxDriverRoutedQueries` routes on
     * the DRIVER against the cached stored centroids — |Q|·nlist·dim
@@ -788,140 +700,6 @@ object Similarity {
       .select("query_id", "rank", "match_id", "qcos")
   }
 
-  /** Product-quantization codebooks: split the vector into `m`
-    * subspaces and k-means (L2) each to `k` codewords, so a vector
-    * encodes as `m` small ints (`m` bytes at k ≤ 256) — the
-    * memory-bound big-store layout beyond SQ8 (32× compression at
-    * dim=64, m=8 vs float32). Returns `m × k × dim/m` codewords.
-    *
-    * Training is Lloyd in ALL subspaces at once: each iteration is ONE
-    * job — explode rows to (subspace, subvector), assign by argmin L2
-    * against the codebook literal, update with a (subspace, cell)
-    * aggregate whose output is `m·k` rows. Deterministic init: the
-    * subvectors of the `k` lowest-id corpus rows. Empty cells keep
-    * their codeword. */
-  def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, k: Int = 256, iters: Int = 3): Array[Array[Array[Double]]] = {
-    val first = corpus.orderBy(col(idCol)).limit(k)
-      .select(asDouble(col(vecCol))).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(first.length == k, s"corpus must have >= $k rows")
-    val dim = first(0).length
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val sub = dim / m
-    var books: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(s => first.map(_.slice(s * sub, (s + 1) * sub)))
-    val subRows = corpus.select(asDouble(col(vecCol)).as("__v"))
-      .select(explode(array((0 until m).map(s =>
-        struct(lit(s).as("s"),
-          slice(col("__v"), s * sub + 1, sub).as("sv"))): _*)).as("__e"))
-      .select(col("__e.s").as("__s"), col("__e.sv").as("__sv"))
-    for (_ <- 0 until iters) {
-      val assigned = subRows.withColumn("__cell",
-        pqNearest(pqBookLit(books), col("__s"), col("__sv")))
-      val aggs = (0 until sub).map(i =>
-        avg(col("__sv").getItem(i)).as(s"c$i"))
-      val updated = assigned.groupBy(col("__s"), col("__cell"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map(r => (r.getInt(0), r.getLong(1).toInt) ->
-          Array.tabulate(sub)(i => r.getDouble(i + 2))).toMap
-      books = Array.tabulate(m)(s => Array.tabulate(k)(c =>
-        updated.getOrElse((s, c), books(s)(c))))
-    }
-    books
-  }
-
-  /** Codebooks as one plan literal: array (per subspace) of arrays (per
-    * codeword) of `struct(cell, cw)`. */
-  private def pqBookLit(books: Array[Array[Array[Double]]]): Column =
-    array(books.map(b => array(b.zipWithIndex.map { case (cw, c) =>
-      struct(lit(c.toLong).as("cell"), typedlit(cw.toSeq).as("cw"))
-    }: _*)): _*)
-
-  /** Argmin-L2 codeword for one subvector (ties to the lowest cell);
-    * scores each codeword once (`transform` + `array_max` over
-    * (−dist, −cell) — see [[bestCell]]). */
-  private def pqNearest(bookLit: Column, s: Column, sv: Column): Column = {
-    val l2 = (c: Column) => aggregate(
-      zip_with(sv, c.getField("cw"), (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    -array_max(transform(element_at(bookLit, s + 1), c =>
-      struct((-l2(c)).as("negd"),
-        (-c.getField("cell")).as("negcell")))).getField("negcell")
-  }
-
-  /** PQ-encode: `m` codeword ids per vector. */
-  def pqEncode(vec: Column, books: Array[Array[Array[Double]]]): Column = {
-    val sub = books(0)(0).length
-    val v = asDouble(vec)
-    array(books.indices.map(s =>
-      pqNearest(pqBookLit(books), lit(s), slice(v, s * sub + 1, sub))
-        .cast("int")): _*)
-  }
-
-  /** PQ top-k with ASYMMETRIC distance (ADC): corpus rows carry only
-    * their `m`-byte codes; each query precomputes its distance table
-    * (`m × k` L2 distances to every codeword) ONCE as a column, and the
-    * pair kernel is `m` table lookups — no vector math per pair. This
-    * is the IVF-PQ scoring model: the join moves codes, not vectors.
-    *
-    * `rerank > k` adds the standard exact re-rank stage: shortlist
-    * `rerank` candidates per query by ADC, then join ONLY the
-    * survivors (|Q|·rerank rows, corpus-independent) back to their
-    * float vectors and order by exact L2. The full corpus still pays
-    * only code lookups; recall vs exact is spec-bounded. */
-  def pqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int, books: Array[Array[Array[Double]]],
-      rerank: Int = 0): DataFrame = {
-    val c = corpus.select(col(idCol).as("match_id"),
-      pqEncode(col(vecCol), books).as("codes"))
-    // per-query ADC table: for each subspace, distances to all codewords
-    val sub = books(0)(0).length
-    val v = asDouble(col(vecCol))
-    val table = array(books.indices.map { s =>
-      val qs = slice(v, s * sub + 1, sub)
-      transform(element_at(pqBookLit(books), s + 1), cw =>
-        aggregate(zip_with(qs, cw.getField("cw"), (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x))
-    }: _*)
-    val q = queries.select(col(idCol).as("query_id"),
-      // materialize the table through the broadcast, not the raw vector
-      table.as("qt"))
-    val adc = aggregate(
-      zip_with(col("qt"), col("codes"),
-        (t, code) => element_at(t, code + 1)),
-      lit(0.0), (acc, x) => acc + x)
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("match_id"))
-      .withColumn("adc_dist", adc)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("match_id").asc)
-    if (rerank <= k)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "rank", "match_id", "adc_dist")
-    else {
-      val short = scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= rerank)
-        .select("query_id", "match_id")
-      val l2 = (a: Column, b: Column) => aggregate(
-        zip_with(a, b, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x)
-      val qv = queries.select(col(idCol).as("query_id"),
-        asDouble(col(vecCol)).as("__qv"))
-      val cv = corpus.select(col(idCol).as("match_id"),
-        asDouble(col(vecCol)).as("__cv"))
-      val exact = short.join(broadcast(qv), "query_id")
-        .join(cv, "match_id")
-        .withColumn("adc_dist", l2(col("__qv"), col("__cv")))
-      val w2 = Window.partitionBy("query_id")
-        .orderBy(col("adc_dist").asc, col("match_id").asc)
-      exact.withColumn("rank", row_number().over(w2))
-        .filter(col("rank") <= k)
-        .select("query_id", "rank", "match_id", "adc_dist")
-    }
-  }
-
   /** Embedding-cosine near-dup dedup — the vector analog of
     * [[Dedup.lshDedup]], BANDED: `bands` independent SRP plane sets of
     * `planesPerBand` bits each (seeded hyperplanes → deterministic plan
@@ -1004,7 +782,7 @@ object Similarity {
   }
 
   /** SemDeDup-shaped semantic dedup: cluster the corpus (argmax-cosine
-    * assignment to `centroids` — typically [[kmeansCentroids]] output),
+    * assignment to `centroids`, e.g. trained k-means centroids),
     * compare pairs only WITHIN a cell, drop the higher-id member of every
     * pair with cosine ≥ `tau`. Complements [[cosineDedup]]: SRP banding
     * is data-independent (stable under corpus growth, oracle-checkable
@@ -1334,18 +1112,16 @@ object Similarity {
       .select("query_id", "rank", "match_id", "cosine")
   }
 
-  // ──────────────── supervised linear probe (quality classifier) ────────────────
+  // ──────────────── linear-probe sufficient statistics ────────────────
   //
-  // The standard curation move a labeled slice enables: fit a linear
-  // probe on embeddings (one-vs-rest ridge), then score the WHOLE
-  // corpus with it to filter/stratify — the fastText-style quality
-  // classifier of the big-crawl pipelines, with the embedding model as
-  // the featurizer. Training reduces to sufficient statistics
-  // (XᵀX, XᵀY over bias-augmented vectors): ONE distributed pass with
-  // map-side combine, then a (d+1)×(d+1) solve on the driver.
+  // A one-vs-rest ridge probe on embeddings (the fastText-style
+  // quality classifier of the big-crawl pipelines, with the embedding
+  // model as the featurizer) trains from sufficient statistics only:
+  // XᵀX and XᵀY over bias-augmented vectors, ONE distributed pass with
+  // map-side combine; the (d+1)×(d+1) solve is model-sized driver work.
   // Statistics accumulate as DECIMAL(30,12) — partition-order-
-  // independent, so the fit is bit-deterministic and the stats frame
-  // is DuckDB-oracle-matchable (the per-row float→double products are
+  // independent, so the stats frame is bit-deterministic and
+  // DuckDB-oracle-matchable (the per-row float→double products are
   // IEEE-exact in both engines; only the SUM needs the exact type).
   // Swap the decimal sums for per-partition BLAS + treeAggregate if
   // raw throughput ever matters more than exactness — same plan shape.
@@ -1425,61 +1201,6 @@ object Similarity {
         count(lit(1)).as("n"))
   }
 
-  /** Trained probe: class list (sorted) and per-class weight rows
-    * (bias last). Model-sized — (d+1)·C doubles. */
-  final case class ProbeModel(classes: Seq[Long],
-      weights: Map[Long, Array[Double]]) {
-    def dim: Int = weights.head._2.length - 1
-  }
-
-  /** Fit the one-vs-rest ridge probe: W_c = (XᵀX + λR)⁻¹ XᵀY_c with R
-    * the identity minus the bias slot (the intercept is never
-    * regularized). XᵀY_c for the 0/1 one-vs-rest target is the sum of
-    * augmented vectors over class-c rows — exactly [[probeMoments]]'s
-    * per-class sums. Gaussian elimination with partial pivoting on the
-    * driver: (d+1)³ flops on a model-sized matrix. */
-  def fitProbe(df: DataFrame, vecCol: String, labelCol: String,
-      lambda: Double = 1e-3): ProbeModel = {
-    val d1 = dimOf(df, vecCol) + 1
-    val gram = Array.ofDim[Double](d1, d1)
-    probeGram(df, vecCol).collect().foreach { r =>
-      val (i, j, v) = (r.getInt(0), r.getInt(1), r.getDouble(2))
-      gram(i)(j) = v; gram(j)(i) = v
-    }
-    var i = 0
-    while (i < d1 - 1) { gram(i)(i) += lambda; i += 1 } // bias unregularized
-    val moments = probeMoments(df, vecCol, labelCol).collect()
-      .groupBy(_.getLong(0))
-    val classes = moments.keys.toSeq.sorted
-    val weights = classes.map { c =>
-      val b = new Array[Double](d1)
-      moments(c).foreach(r => b(r.getInt(1)) = r.getDouble(2))
-      c -> solve(gram.map(_.clone()), b.clone())
-    }.toMap
-    ProbeModel(classes, weights)
-  }
-
-  /** Score every row with the probe: adds `probe_scores`
-    * (per-class w·x, class order = model.classes) and `probe_label`
-    * (argmax, ties to the lower class id). Weights ride as plan
-    * literals — a narrow codegen'd map, zero shuffles. */
-  def scoreProbe(df: DataFrame, vecCol: String,
-      model: ProbeModel): DataFrame = {
-    val aug = concat(asDouble(col(vecCol)), array(lit(1.0)))
-    val scores = array(model.classes.map { c =>
-      val w = typedlit(model.weights(c).toSeq)
-      graft.functions.VectorExprs.dot(aug, w)
-    }: _*)
-    val best = aggregate(
-      zip_with(scores, typedlit(model.classes), (s, c) =>
-        struct(s.as("s"), c.as("c"))),
-      struct(lit(Double.NegativeInfinity).as("s"),
-        lit(Long.MinValue).as("c")),
-      (acc, x) => when(x.getField("s") > acc.getField("s"), x).otherwise(acc))
-    df.withColumn("probe_scores", scores)
-      .withColumn("probe_label", best.getField("c"))
-  }
-
   // ── hard-negative mining ──────────────────────────────────────────
 
   /** Triplet mining for contrastive/metric training (the FaceNet
@@ -1532,137 +1253,6 @@ object Similarity {
           col("neg_cos") > col("pos_cos") - lit(margin), lit(false)))
       .select("query_id", "pos_id", "pos_cos", "rank", "neg_id",
         "neg_cos", "semi_hard")
-  }
-
-  // ── PCA / whitening ───────────────────────────────────────────────
-  // The standard embedding pre-transform before quantization (FAISS's
-  // PCAR/OPQ practice): rotate onto the top-k principal directions and
-  // optionally divide by √eigenvalue so each retained component has
-  // unit variance. One distributed pass builds the d×d covariance; the
-  // eigensolve is a driver-side model-sized computation; projection is
-  // a narrow codegen'd map with the components as plan literals.
-
-  /** Population covariance entries `(i, j, cov)` for the upper triangle
-    * (i ≤ j), exactly: Cov = (XᵀX − s sᵀ/n) / n, all moments read from
-    * ONE [[probeGram]] pass — the augmented gram's bias row IS the
-    * per-dimension sum vector and its corner IS n. The gram's
-    * decimal(30,12) summation makes every entry a pure function of the
-    * data (no float reorder drift), so the result is oracle-matchable.
-    * The gram is model-sized (d²/2 rows), so the driver round-trip is
-    * legitimate; the corpus itself is never collected or shuffled. */
-  def covarianceMatrix(df: DataFrame, vecCol: String)
-      : (Array[Array[Double]], Long) = {
-    val (g, d) = gramMoments(df, vecCol)
-    val n = g(d)(d)
-    val cov = Array.tabulate(d, d) { (i, j) =>
-      (g(i)(j) - g(i)(d) * g(j)(d) / n) / n
-    }
-    (cov, n.toLong)
-  }
-
-  /** Augmented-gram collect shared by the PCA entry points: returns the
-    * symmetric (d+1)×(d+1) matrix and d. */
-  private def gramMoments(df: DataFrame, vecCol: String)
-      : (Array[Array[Double]], Int) = {
-    val d1 = dimOf(df, vecCol) + 1
-    val g = Array.ofDim[Double](d1, d1)
-    probeGram(df, vecCol).collect().foreach { r =>
-      val (i, j, v) = (r.getInt(0), r.getInt(1), r.getDouble(2))
-      g(i)(j) = v; g(j)(i) = v
-    }
-    (g, d1 - 1)
-  }
-
-  /** Trained PCA: per-dimension mean, row-major components (k×d, unit
-    * L2) and their eigenvalues (descending). Model-sized. */
-  final case class PcaModel(mean: Array[Double],
-      components: Array[Array[Double]], eigenvalues: Array[Double]) {
-    def k: Int = components.length
-    def dim: Int = mean.length
-  }
-
-  /** Fit the top-k principal components: covariance via
-    * [[covarianceMatrix]], then power iteration with deflation on the
-    * driver (d×d, model-sized; fixed iteration budget, deterministic
-    * start vector, sign fixed so each component's largest-|coordinate|
-    * entry is positive — runs are bit-reproducible). */
-  def pcaFit(df: DataFrame, vecCol: String, k: Int,
-      iters: Int = 200): PcaModel = {
-    require(k >= 1, "k must be >= 1")
-    val (g, d) = gramMoments(df, vecCol)
-    require(k <= d, s"k=$k exceeds dim=$d")
-    val n = g(d)(d)
-    val mean = Array.tabulate(d)(i => g(i)(d) / n)
-    val cov = Array.tabulate(d, d) { (i, j) =>
-      (g(i)(j) - g(i)(d) * g(j)(d) / n) / n
-    }
-    val comps = new Array[Array[Double]](k)
-    val evals = new Array[Double](k)
-    var c = 0
-    while (c < k) {
-      // deterministic start: e_c + a small ramp (never orthogonal to
-      // the dominant eigenvector of a deflated PSD matrix in practice;
-      // the fixed budget keeps the fit reproducible regardless)
-      val v = Array.tabulate(d)(i => if (i == c % d) 1.0 else 1e-3 * (i + 1))
-      var it = 0
-      while (it < iters) {
-        val w = new Array[Double](d)
-        var i = 0
-        while (i < d) {
-          var s = 0.0; var j = 0
-          while (j < d) { s += cov(i)(j) * v(j); j += 1 }
-          w(i) = s; i += 1
-        }
-        var nrm = 0.0; i = 0
-        while (i < d) { nrm += w(i) * w(i); i += 1 }
-        nrm = math.sqrt(nrm)
-        require(nrm > 1e-300, "power iteration collapsed (rank < k?)")
-        i = 0
-        while (i < d) { v(i) = w(i) / nrm; i += 1 }
-        it += 1
-      }
-      // sign convention: largest-|coordinate| entry positive
-      var am = 0; var i = 0
-      while (i < d) { if (math.abs(v(i)) > math.abs(v(am))) am = i; i += 1 }
-      if (v(am) < 0) { i = 0; while (i < d) { v(i) = -v(i); i += 1 } }
-      // Rayleigh quotient = eigenvalue for a unit eigenvector
-      var lam = 0.0
-      i = 0
-      while (i < d) {
-        var s = 0.0; var j = 0
-        while (j < d) { s += cov(i)(j) * v(j); j += 1 }
-        lam += v(i) * s; i += 1
-      }
-      comps(c) = v; evals(c) = lam
-      // deflate: cov ← cov − λ v vᵀ
-      i = 0
-      while (i < d) {
-        var j = 0
-        while (j < d) { cov(i)(j) -= lam * v(i) * v(j); j += 1 }
-        i += 1
-      }
-      c += 1
-    }
-    PcaModel(mean, comps, evals)
-  }
-
-  /** Project every row onto the model's components (centered), appended
-    * as `outCol: Array[Double]` of length k; `whiten = true` divides
-    * each coordinate by √eigenvalue (unit component variance). The
-    * mean and components ride as plan literals through the native
-    * [[graft.functions.VectorExprs.dot]] kernel — a zero-shuffle narrow
-    * map, exactly the shape a 100 TB corpus rotation needs. */
-  def pcaProject(df: DataFrame, vecCol: String, model: PcaModel,
-      whiten: Boolean = false, outCol: String = "pca"): DataFrame = {
-    val centered = zip_with(asDouble(col(vecCol)),
-      typedlit(model.mean.toSeq), (x, m) => x - m)
-    val proj = array(model.components.zip(model.eigenvalues).map {
-      case (comp, lam) =>
-        val p = graft.functions.VectorExprs.dot(centered,
-          typedlit(comp.toSeq))
-        if (whiten) p / lit(math.sqrt(math.max(lam, 1e-12))) else p
-    }: _*)
-    df.withColumn(outCol, proj)
   }
 
   private def dimOf(df: DataFrame, vecCol: String): Int =
@@ -1734,41 +1324,5 @@ object Similarity {
       .groupBy(col(labelCol))
       .agg(count(lit(1)).as("n"), dmean(col("__a")).as("scatter"),
         dmean(col("__s")).as("silhouette"))
-  }
-
-  /** In-place Gaussian elimination with partial pivoting (A x = b). */
-  private def solve(a: Array[Array[Double]], b: Array[Double])
-      : Array[Double] = {
-    val n = b.length
-    var col0 = 0
-    while (col0 < n) {
-      var p = col0; var r = col0 + 1
-      while (r < n) { if (math.abs(a(r)(col0)) > math.abs(a(p)(col0))) p = r; r += 1 }
-      require(math.abs(a(p)(col0)) > 1e-12, "singular gram matrix")
-      if (p != col0) {
-        val t = a(p); a(p) = a(col0); a(col0) = t
-        val tb = b(p); b(p) = b(col0); b(col0) = tb
-      }
-      r = col0 + 1
-      while (r < n) {
-        val f = a(r)(col0) / a(col0)(col0)
-        if (f != 0.0) {
-          var c = col0
-          while (c < n) { a(r)(c) -= f * a(col0)(c); c += 1 }
-          b(r) -= f * b(col0)
-        }
-        r += 1
-      }
-      col0 += 1
-    }
-    val x = new Array[Double](n)
-    var r = n - 1
-    while (r >= 0) {
-      var s = b(r); var c = r + 1
-      while (c < n) { s -= a(r)(c) * x(c); c += 1 }
-      x(r) = s / a(r)(r)
-      r -= 1
-    }
-    x
   }
 }

@@ -163,27 +163,6 @@ class DonutVaeSpec extends SparkSpec {
     }
   }
 
-  test("model-agnostic rolling-origin backtest: seasonal and the VAE " +
-      "both ride the registry seam; bands calibrated on in-regime data") {
-    val series = sinSeries(20 * 24, HOUR, seed = 13).toDF("bucket", "value")
-    val origins = Seq(14, 16, 18).map(_ * 24L * HOUR)
-    def bt(tpe: String, settings: String) =
-      graft.ml.Backtest.rollingOriginModel(series, "value", tpe, settings,
-        origins, horizon = 86400L)
-        .orderBy("origin")
-        .select("n_buckets", "mae", "coverage")
-        .as[(Long, Double, Double)].collect().toSeq
-    val seas = bt("seasonal",
-      s"""{"type":"seasonal","bucket_interval":$HOUR}""")
-    val vae = bt("donut_vae",
-      s"""{"type":"donut_vae","bucket_interval":$HOUR,"epochs":15}""")
-    for (out <- Seq(seas, vae)) {
-      assert(out.length == 3)
-      assert(out.forall { case (n, mae, cov) =>
-        n == 24 && !mae.isNaN && cov >= 0.9 }) // ±3σ on in-regime data
-    }
-  }
-
   test("M-ELBO beta: windows with more missing entries pull less " +
       "toward the prior (training still converges with 20% nulls)") {
     val rnd = new scala.util.Random(9)

@@ -346,25 +346,4 @@ class DriftSpec extends SparkSpec {
     assert(Temporal.seasonalNaiveEval(gappy, Seq("g"), "t", "v", 10L, 20L)
       .collect().head.getLong(1) === 1L)
   }
-
-  test("drift baseline: freeze -> load round-trips bit-exactly; incomplete refused") {
-    val dir = java.nio.file.Files.createTempDirectory("drift-base").toString
-    val df = (1 to 500).map(i => (i.toLong, (i % 97).toDouble))
-      .toDF("id", "v")
-    val saved = Drift.saveBaseline(df, "v", bins = 10, dir)
-    val loaded = Drift.loadBaseline(spark, dir)
-    assert(loaded === saved) // doubles round-trip parquet bit-exactly
-    assert(loaded.fracs.length === 10 && loaded.fracs.forall(_ > 0.0))
-    // the frozen reference reproduces the in-memory comparison: PSI of
-    // the corpus against its own baseline via the LOADED fractions
-    // equals the same computation via the fresh ones
-    val fresh = Drift.binFractions(df, "v", saved.lo, saved.hi, 10)
-    assert(loaded.fracs === fresh)
-    // incomplete artifact (marker missing) refused
-    val bad = java.nio.file.Files.createTempDirectory("drift-bad").toString
-    val e = intercept[IllegalArgumentException] {
-      Drift.loadBaseline(spark, bad)
-    }
-    assert(e.getMessage.contains("_BASELINE_OK"))
-  }
 }

@@ -306,108 +306,6 @@ class IncrementalOpsSpec extends SparkSpec {
     assert(got.tail.map(_._1) == got.tail.map(_._1).sorted)
   }
 
-  // ── sketch-tier corpus stats ───────────────────────────────────
-
-  test("approxDistinct lands within the HLL error bound of exact") {
-    import graft.operators.CorpusStats
-    val df = spark.range(0, 20000).select((col("id") % 5000).as("k"))
-    val approx = CorpusStats.approxDistinct(df, col("k"), rsd = 0.02)
-    assert(math.abs(approx - 5000L) <= 5000L * 0.06,
-      s"approx=$approx") // 3x rsd
-  }
-
-  test("strataProfile: one-pass per-stratum doc/vocab estimates") {
-    import graft.operators.CorpusStats
-    val docsDf = (0 until 300).map { i =>
-      val lang = if (i % 3 == 0) "de" else "en"
-      (i.toLong, lang, s"token$i word${i % 50} alpha beta gamma delta")
-    }.toDF("doc_id", "lang", "text")
-    val prof = CorpusStats.strataProfile(docsDf, "lang", "doc_id", "text")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(math.abs(prof("de") - 100L) <= 20)
-    assert(math.abs(prof("en") - 200L) <= 30)
-  }
-
-  test("distinctSketch: incremental day-batch merge tracks the full-corpus sketch within the rsd bound; outer keys survive") {
-    import graft.operators.CorpusStats
-    // two "days" with overlapping user populations per key, plus a key
-    // seen only on day 2
-    val day1 = (0 until 4000).map(i => (s"t${i % 2}", (i % 900).toLong))
-      .toDF("k", "u")
-    val day2 = ((0 until 4000).map(i => (s"t${i % 2}", (i % 1100 + 500).toLong))
-      ++ Seq(("t9", 1L), ("t9", 2L))).toDF("k", "u")
-    val merged = CorpusStats.mergeSketches(
-      CorpusStats.distinctSketch(day1, Seq("k"), col("u")),
-      CorpusStats.distinctSketch(day2, Seq("k"), col("u")), Seq("k"))
-    val full = CorpusStats.distinctSketch(day1.unionAll(day2), Seq("k"),
-      col("u"))
-    def ests(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("k"), CorpusStats.estimateDistinct(col("sketch")))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val (em, ef) = (ests(merged), ests(full))
-    // merged-vs-direct is EXACT only in the coupon regime; at HLL-array
-    // scale the direct path uses the HIP estimator while the unioned
-    // path reads the composite estimator, so the estimates may
-    // legitimately differ — pin agreement to 3× the lgK=12 rsd
-    // (1.04/√4096 ≈ 1.63%) instead of bit-identity
-    val rsd = 1.04 / math.sqrt(1 << 12)
-    ef.foreach { case (k, fv) =>
-      val mv = em(k)
-      val tol = math.max(3 * rsd * math.max(fv, mv), 1.0)
-      assert(math.abs(mv - fv) <= tol,
-        s"key $k merged=$mv full=$fv beyond 3·rsd=$tol")
-    }
-    // tiny cardinalities stay in the coupon regime, where merge IS exact
-    assert(em.contains("t9") && em("t9") == 2L) // day-2-only key survives
-    // and the estimates are near truth: k = i%2 makes u share i's
-    // parity (900 and 1100 are even), so t0 sees the evens of
-    // [0,900) ∪ [500,1599] → 800 true distinct
-    assert(math.abs(em("t0") - 800L) <= 800 * 0.06, em.toString)
-  }
-
-  test("quantileSketch: merged day-batches read quantiles within the KLL rank bound; exact on small sketches") {
-    import graft.operators.CorpusStats
-    val day1 = (0 until 20000).map(i => ("k", (i % 10000).toDouble))
-      .toDF("k", "v")
-    val day2 = (0 until 20000).map(i => ("k", (i % 10000 + 5000).toDouble))
-      .toDF("k", "v")
-    val merged = CorpusStats.mergeQuantileSketches(
-      CorpusStats.quantileSketch(day1, Seq("k"), col("v"))
-        .unionAll(CorpusStats.quantileSketch(day2, Seq("k"), col("v"))),
-      Seq("k"))
-    val p = merged.select(
-      CorpusStats.sketchQuantile(col("qsketch"), 0.5),
-      CorpusStats.sketchQuantile(col("qsketch"), 0.99)).head()
-    // union of [0,10000)×2 and [5000,15000)×2: true p50 = 7500,
-    // p99 = 14800; default-k KLL rank error ~1.7% → generous bounds
-    assert(math.abs(p.getDouble(0) - 7500.0) < 600.0, p.toString)
-    assert(math.abs(p.getDouble(1) - 14800.0) < 600.0, p.toString)
-
-    // tiny input: the sketch holds everything — quantiles are EXACT
-    val tiny = (1 to 100).map(i => ("t", i.toDouble)).toDF("k", "v")
-    val q = CorpusStats.quantileSketch(tiny, Seq("k"), col("v"))
-      .select(CorpusStats.sketchQuantile(col("qsketch"), 0.5)).head()
-    assert(q.getDouble(0) === 50.0)
-  }
-
-  test("thetaSketch set algebra: exact intersection/difference under the entry budget") {
-    import graft.operators.CorpusStats
-    val a = (0 until 3000).map(i => ("s", i.toLong)).toDF("k", "u")
-    val b = (2000 until 3500).map(i => ("s", i.toLong)).toDF("k", "u")
-    val sa = CorpusStats.thetaSketch(a, Seq("k"), col("u"))
-      .withColumnRenamed("tsketch", "ta")
-    val sb = CorpusStats.thetaSketch(b, Seq("k"), col("u"))
-      .withColumnRenamed("tsketch", "tb")
-    val r = sa.join(sb, "k").select(
-      CorpusStats.thetaIntersectEstimate(col("ta"), col("tb")),
-      CorpusStats.thetaDifferenceEstimate(col("ta"), col("tb"))).head()
-    // |A∩B| = [2000,3000) = 1000; |A∖B| = [0,2000) = 2000 — both sets
-    // under 2^12 distinct, so the sketches are in exact mode (estimate
-    // returns a LONG count)
-    assert(r.getLong(0) === 1000L, r.toString)
-    assert(r.getLong(1) === 2000L, r.toString)
-  }
-
   // ── z-order layout ─────────────────────────────────────────────
 
   test("zValue interleaves bits (golden + inverse-locality property)") {

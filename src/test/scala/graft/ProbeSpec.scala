@@ -1,12 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Similarity
 
-/** Supervised linear probe (the embedding quality classifier): solve
-  * correctness, accuracy floor on a separable synthetic, determinism,
-  * and the scoring plan shape. */
+/** The distributed half of the linear probe: the bias-augmented gram and
+  * the per-class moments `q_probe_stats` is built on. */
 class ProbeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,47 +20,6 @@ class ProbeSpec extends SparkSpec {
     }
   }
 
-  test("fitProbe recovers a separable labeling (accuracy >= 0.95) and " +
-      "is bit-deterministic across fits") {
-    val df = synth(400, seed = 4).toDF("vec_id", "embedding", "label")
-    val m1 = Similarity.fitProbe(df, "embedding", "label")
-    val m2 = Similarity.fitProbe(df, "embedding", "label")
-    assert(m1.classes == Seq(0L, 1L, 2L, 3L))
-    // decimal-sum stats + driver solve → bit-identical weights
-    assert(m1.classes.forall(c =>
-      m1.weights(c).toSeq == m2.weights(c).toSeq))
-    val scored = Similarity.scoreProbe(df, "embedding", m1)
-    val acc = scored
-      .agg(avg(when(col("probe_label") === col("label"), 1.0).otherwise(0.0)))
-      .as[Double].head()
-    info(s"probe accuracy = $acc")
-    assert(acc >= 0.95)
-  }
-
-  test("ridge solve is exact on a hand-built system (bias " +
-      "unregularized): w*x reproduces a known linear function") {
-    // y = 2*x0 - 3*x1 + 0.5, one-hot-ish inputs, zero noise, lambda→0:
-    // the probe for a {0,1} target built from a threshold must rank
-    // positives above negatives perfectly
-    val rnd = new scala.util.Random(11)
-    val rows = (0 until 300).map { k =>
-      val x0 = rnd.nextDouble() * 2 - 1
-      val x1 = rnd.nextDouble() * 2 - 1
-      val y = 2 * x0 - 3 * x1 + 0.5
-      (k.toLong, Seq(x0.toFloat, x1.toFloat), if (y > 0) 1 else 0)
-    }
-    val df = rows.toDF("vec_id", "embedding", "label")
-    val m = Similarity.fitProbe(df, "embedding", "label", lambda = 1e-9)
-    val scored = Similarity.scoreProbe(df, "embedding", m)
-      .select("vec_id", "probe_label").as[(Long, Long)].collect().toMap
-    val acc = rows.count { case (id, _, l) => scored(id) == l.toLong }
-      .toDouble / rows.size
-    info(s"threshold-function accuracy = $acc")
-    // least squares (not logistic) misranks a thin margin band around
-    // the threshold — ~3% of uniform draws here
-    assert(acc >= 0.95)
-  }
-
   test("probeGram/probeMoments shapes: upper triangle only, bias row " +
       "present, per-class counts correct") {
     val df = synth(40, seed = 9).toDF("vec_id", "embedding", "label")
@@ -77,135 +33,5 @@ class ProbeSpec extends SparkSpec {
     assert(m.length == 4 * 9)
     assert(m.filter(_.getInt(1) == 8) // bias slot sums = class counts
       .forall(r => r.getDouble(2) == r.getLong(3).toDouble))
-  }
-
-  test("scoreProbe plans as a narrow map: zero shuffles, weights as " +
-      "plan literals") {
-    val df = synth(40, seed = 9).toDF("vec_id", "embedding", "label")
-    val m = Similarity.fitProbe(df, "embedding", "label")
-    val p = Similarity.scoreProbe(df, "embedding", m)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange"), p)
-  }
-
-  // ── PCA / whitening ────────────────────────────────────────────────
-
-  /** Anisotropic cloud in R^6: σ = (5, 2, 0.5, 0.1, 0.1, 0.1) along the
-    * axes, plus a constant offset — the principal directions are the
-    * first two axes by construction. */
-  private def aniso(n: Int, seed: Long): Seq[(Long, Seq[Float])] = {
-    val rnd = new scala.util.Random(seed)
-    val sig = Array(5.0, 2.0, 0.5, 0.1, 0.1, 0.1)
-    (0 until n).map { k =>
-      val v = sig.zipWithIndex.map { case (s, i) =>
-        (i + 1.0 + rnd.nextGaussian() * s).toFloat
-      }
-      (k.toLong, v.toSeq)
-    }
-  }
-
-  test("covarianceMatrix equals the locally computed population " +
-      "covariance and is partition-order invariant") {
-    val rows = aniso(200, seed = 21)
-    val df = rows.toDF("vec_id", "embedding")
-    val (cov, n) = Similarity.covarianceMatrix(df, "embedding")
-    assert(n == 200L)
-    val x = rows.map(_._2.map(_.toDouble).toArray).toArray
-    val mean = Array.tabulate(6)(i => x.map(_(i)).sum / 200)
-    for (i <- 0 until 6; j <- 0 until 6) {
-      val local = x.map(r => (r(i) - mean(i)) * (r(j) - mean(j))).sum / 200
-      assert(math.abs(cov(i)(j) - local) < 1e-9,
-        s"cov($i,$j)=${cov(i)(j)} vs local=$local")
-    }
-    // decimal gram sums → bit-identical under any partitioning
-    val (cov2, _) = Similarity.covarianceMatrix(df.repartition(13),
-      "embedding")
-    for (i <- 0 until 6; j <- 0 until 6) assert(cov(i)(j) == cov2(i)(j))
-  }
-
-  test("pcaFit recovers the dominant axes, eigenvalues descend, " +
-      "components are orthonormal; fit is deterministic") {
-    val df = aniso(500, seed = 22).toDF("vec_id", "embedding")
-    val m = Similarity.pcaFit(df, "embedding", k = 3)
-    assert(m.k == 3 && m.dim == 6)
-    // dominant component ≈ e_0 (σ=5 axis), second ≈ e_1 (σ=2 axis)
-    assert(math.abs(m.components(0)(0)) > 0.99, m.components(0).toSeq)
-    assert(math.abs(m.components(1)(1)) > 0.99, m.components(1).toSeq)
-    // sign convention: largest-|coordinate| entry positive
-    assert(m.components(0).maxBy(math.abs) > 0)
-    assert(m.eigenvalues(0) > m.eigenvalues(1))
-    assert(m.eigenvalues(1) > m.eigenvalues(2))
-    // λ1 ≈ σ1² = 25 within sampling noise
-    assert(m.eigenvalues(0) > 18 && m.eigenvalues(0) < 33, m.eigenvalues(0))
-    // orthonormal
-    for (a <- 0 until 3; b <- a until 3) {
-      val dot = (0 until 6).map(i => m.components(a)(i) * m.components(b)(i)).sum
-      assert(math.abs(dot - (if (a == b) 1.0 else 0.0)) < 1e-9)
-    }
-    val m2 = Similarity.pcaFit(df, "embedding", k = 3)
-    assert(m.components.map(_.toSeq).toSeq == m2.components.map(_.toSeq).toSeq)
-    assert(m.eigenvalues.toSeq == m2.eigenvalues.toSeq)
-  }
-
-  test("pcaProject at k=dim is an isometry; truncated projection " +
-      "(half the dims) keeps L2 top-10 recall >= 0.9 on a " +
-      "signal+noise corpus — the ANN compression tier") {
-    // 16-dim: 4 signal axes (sigma 4..1), 12 noise axes (sigma 0.05)
-    val rnd = new scala.util.Random(41)
-    val rows = (0 until 300).map { i =>
-      val v = Array.tabulate(16)(d =>
-        (if (d < 4) rnd.nextGaussian() * (4.0 - d) else
-          rnd.nextGaussian() * 0.05).toFloat)
-      (i.toLong, v.toSeq)
-    }
-    val df = rows.toDF("vec_id", "embedding")
-    val full = Similarity.pcaFit(df, "embedding", k = 16)
-    val proj = Similarity.pcaProject(df, "embedding", full)
-      .select("vec_id", "pca").as[(Long, Seq[Double])].collect().toMap
-    def l2(a: Seq[Double], b: Seq[Double]): Double =
-      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
-    val centered = {
-      val m = full.mean
-      rows.map { case (id, v) =>
-        id -> v.zipWithIndex.map { case (x, i) => x - m(i) } }.toMap
-    }
-    // isometry: rotation preserves pairwise distance (1e-6 — the
-    // deflated power iteration leaves ~1e-8 residual non-orthogonality
-    // in the near-degenerate noise subspace)
-    for (a <- 0L until 20L; b <- (a + 1) until 20L)
-      assert(math.abs(l2(proj(a), proj(b)) -
-        l2(centered(a), centered(b))) < 1e-6)
-    // truncation: 8 of 16 dims, neighbor recall against exact
-    val half = Similarity.PcaModel(full.mean, full.components.take(8),
-      full.eigenvalues.take(8))
-    val hproj = Similarity.pcaProject(df, "embedding", half)
-      .select("vec_id", "pca").as[(Long, Seq[Double])].collect().toMap
-    val ids = rows.map(_._1)
-    val recalls = (0L until 30L).map { q =>
-      def top10(space: Map[Long, Seq[Double]]) =
-        ids.filter(_ != q).sortBy(o => (l2(space(q), space(o)), o))
-          .take(10).toSet
-      top10(centered).intersect(top10(hproj)).size / 10.0
-    }
-    val meanRecall = recalls.sum / recalls.length
-    info(s"half-dim recall@10 = $meanRecall")
-    assert(meanRecall >= 0.9, s"recall $meanRecall")
-  }
-
-  test("pcaProject: centered coordinates (zero mean), whitened " +
-      "coordinates have unit variance; zero-shuffle plan") {
-    val df = aniso(500, seed = 23).toDF("vec_id", "embedding")
-    val m = Similarity.pcaFit(df, "embedding", k = 2)
-    val proj = Similarity.pcaProject(df, "embedding", m, whiten = true)
-    val p = proj.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange"), p)
-    val coords = proj.select(col("pca")).as[Seq[Double]].collect()
-    for (c <- 0 until 2) {
-      val xs = coords.map(_(c))
-      val mu = xs.sum / xs.length
-      val va = xs.map(x => (x - mu) * (x - mu)).sum / xs.length
-      assert(math.abs(mu) < 1e-6, s"component $c mean=$mu")
-      assert(math.abs(va - 1.0) < 1e-6, s"component $c variance=$va")
-    }
   }
 }

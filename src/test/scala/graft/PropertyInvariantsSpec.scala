@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.operators.{CorpusStats, Packing, Sampling}
+import graft.operators.{CorpusStats, Packing}
 
 /** Property-based checks (ScalaCheck generators, fixed seeds — the
   * suite stays deterministic) for the ALGEBRAIC contracts the engine's
@@ -21,8 +21,6 @@ import graft.operators.{CorpusStats, Packing, Sampling}
   *  - orderedCorpus ≡ orderedSmall: materialize-then-range-sort emits
   *    the identical row sequence as the SinglePartition local sort for
   *    a unique key — the r12 sweep's refactor contract.
-  *  - hashSplit partitions: disjoint, exhaustive, and stable under
-  *    physical reshuffling for arbitrary weight vectors.
   *  - packSequences reconstruction: concatenating seq_text in seq_id
   *    order reproduces the corpus token stream in id order; every
   *    sequence but the last is exactly seqLen tokens; totals conserve.
@@ -87,30 +85,6 @@ class PropertyInvariantsSpec extends SparkSpec {
       val corpus = df.localCheckpoint(true).orderBy("doc_id")
         .collect().toSeq
       assert(small === corpus, s"case $k")
-    }
-  }
-
-  test("property: hashSplit is a disjoint, exhaustive, physically " +
-      "stable partition for arbitrary weight vectors") {
-    (1 to 4).foreach { k =>
-      val ids = sample(Gen.listOfN(120, Gen.chooseNum(0L, 100000L)),
-        seed = 4000 + k).distinct
-      val raw = sample(Gen.listOfN(2 + k % 3,
-        Gen.chooseNum(0.05, 1.0)), seed = 5000 + k)
-      val weights = raw.zipWithIndex.map { case (w, i) =>
-        s"s$i" -> w / raw.sum }
-      // renormalize the tail so the weights sum to exactly 1.0
-      val splits = weights.init :+
-        (weights.last._1 -> (1.0 - weights.init.map(_._2).sum))
-      val df = ids.toDF("doc_id")
-      def assignment(d: org.apache.spark.sql.DataFrame) =
-        Sampling.hashSplit(d, "doc_id", splits, salt = s"p$k")
-          .select("doc_id", "split").collect()
-          .map(r => r.getLong(0) -> r.getString(1)).toMap
-      val m = assignment(df)
-      assert(m.keySet === ids.toSet)        // exhaustive, disjoint
-      assert(m.values.toSet.subsetOf(splits.map(_._1).toSet))
-      assert(assignment(df.repartition(7)) === m)  // physically stable
     }
   }
 
@@ -348,59 +322,6 @@ class PropertyInvariantsSpec extends SparkSpec {
         ts.count(t => t >= b && t < b + interval &&
           t >= from && t < to).toLong).toMap
       assert(out === expected, s"case $k counts")
-    }
-  }
-
-  test("property: HLL sketch merge is lossless in the coupon regime — " +
-      "estimate(merge(A,B)) == estimate(sketch(A ∪ B)) exactly") {
-    import graft.operators.CorpusStats
-    (1 to 3).foreach { k =>
-      val ids = sample(Gen.listOfN(150, Gen.chooseNum(0L, 200L)),
-        seed = 17000 + k)
-      val mask = sample(Gen.listOfN(ids.size, Gen.oneOf(true, false)),
-        seed = 17500 + k)
-      val rows = ids.zip(mask).map { case (v, m) =>
-        (if (m) "a" else "b", v) }
-      def sk(d: Seq[(String, Long)]) =
-        CorpusStats.distinctSketch(
-          d.toDF("part", "v").withColumn("g", lit("all")),
-          Seq("g"), col("v"))
-      val merged = CorpusStats.mergeSketches(
-          sk(rows.filter(_._1 == "a")), sk(rows.filter(_._1 == "b")),
-          Seq("g"))
-        .select(CorpusStats.estimateDistinct(col("sketch")))
-        .head().getLong(0)
-      val direct = sk(rows)
-        .select(CorpusStats.estimateDistinct(col("sketch")))
-        .head().getLong(0)
-      assert(merged === direct, s"case $k")
-      assert(direct === ids.distinct.size.toLong, s"case $k exactness")
-    }
-  }
-
-  test("property: theta-sketch set algebra is exact under the entry " +
-      "budget — |A ∩ B| and |A \\ B| equal the true set sizes") {
-    import graft.operators.CorpusStats
-    (1 to 3).foreach { k =>
-      val a = sample(Gen.listOfN(120, Gen.chooseNum(0L, 400L)),
-        seed = 18000 + k).distinct
-      val b = sample(Gen.listOfN(120, Gen.chooseNum(200L, 600L)),
-        seed = 18500 + k).distinct
-      def sk(v: Seq[Long], tag: String) =
-        CorpusStats.thetaSketch(
-          v.map((tag, _)).toDF("g", "v"), Seq("g"), col("v"))
-          .select(col("tsketch").as(s"sk_$tag"))
-      val row = sk(a, "a").crossJoin(sk(b, "b"))
-        .select(
-          CorpusStats.thetaIntersectEstimate(col("sk_a"), col("sk_b"))
-            .cast("long"),
-          CorpusStats.thetaDifferenceEstimate(col("sk_a"), col("sk_b"))
-            .cast("long"))
-        .head()
-      assert(row.getLong(0) === a.toSet.intersect(b.toSet).size.toLong,
-        s"case $k intersect")
-      assert(row.getLong(1) === a.toSet.diff(b.toSet).size.toLong,
-        s"case $k difference")
     }
   }
 
